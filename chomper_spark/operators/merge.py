@@ -56,8 +56,10 @@ import re
 import tempfile
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from chomper_spark import schema as S
 from chomper_spark.operators.dedup import dedup_latest_agg
@@ -866,9 +868,12 @@ class SnapshotMergeSink:
         whole table (``read()`` always scans every bucket because
         bucket = hash(full key) admits no predicate pruning).  ``keys``
         are tuples in ``key_cols`` order; the list is driver-sized by
-        nature (point lookups), the bucket scan stays distributed.  The
-        bucket ids come from the SAME widen-stable hash expression the
-        writer uses, evaluated over the key list itself, so pruning and
+        nature (point lookups), so it becomes a driver-local relation
+        (an Arrow table, not an RDD): the bucket ids are computed
+        without a Spark job and the semi-join broadcasts a local table.
+        The bucket scan stays distributed.  The bucket ids come from
+        the SAME widen-stable hash expression the writer uses,
+        evaluated by Spark over the key relation itself, so pruning and
         data can never disagree.  None if the table was never created.
         """
         m = (
@@ -886,10 +891,17 @@ class SnapshotMergeSink:
             return self.spark.createDataFrame([], schema=user_schema)
         by_name = {f_.name: f_ for f_ in schema.fields}
         key_schema = T.StructType([by_name[c] for c in self.key_cols])
-        keys_df = self.spark.createDataFrame(list(keys), schema=key_schema)
+        keys_df = self.spark.createDataFrame(
+            pa.Table.from_pylist(
+                [dict(zip(self.key_cols, k, strict=True)) for k in keys],
+                schema=to_arrow_schema(key_schema),
+            )
+        )
+        # a projection of a local relation is folded on the driver (0
+        # jobs); deduplicate here, since a Spark distinct would plan an
+        # aggregate and run jobs again
         buckets = sorted(
-            r[0]
-            for r in keys_df.select(self._bucket_expr().alias("b")).distinct().collect()
+            {r[0] for r in keys_df.select(self._bucket_expr()).collect()}
         )
         st = self._read_buckets(m, buckets)
         if st is None:
@@ -1393,24 +1405,23 @@ class SnapshotMergeSink:
             if not insert_missing:
                 take_src = take_src & t_present
 
+            live_t = t_present & ~F.col(f"t.{S.META_DELETED}")
+
             def pick(c: str) -> F.Column:
                 t_c, s_c = F.col(f"t.{c}"), F.col(f"s.{c}")
                 if c in protected:
-                    return F.when(t_present, t_c).otherwise(s_c).alias(c)
+                    # only a LIVE target protects its value: a re-insert
+                    # over a tombstone writes the source value
+                    return F.when(take_src & ~live_t, s_c).otherwise(t_c).alias(c)
                 if update_only_nulls:
                     # matched & live target: only fill NULLs (E9 overwrite=False)
                     return (
-                        F.when(
-                            take_src & t_present & ~F.col(f"t.{S.META_DELETED}"),
-                            F.coalesce(t_c, s_c),
-                        )
+                        F.when(take_src & live_t, F.coalesce(t_c, s_c))
                         .when(take_src, s_c)
                         .otherwise(t_c)
                         .alias(c)
                     )
                 return F.when(take_src, s_c).otherwise(t_c).alias(c)
-
-            live_t = t_present & ~F.col(f"t.{S.META_DELETED}")
 
             def applied_val(c: str) -> F.Column:
                 """The value an applied UPDATE actually writes for c —

@@ -30,7 +30,8 @@ def get_spark(
         # guide §9/§3.1: allow shuffled-hash joins when a side fits per
         # partition (sort-merge stays the planner's fallback), and let
         # AQE rewrite SMJ→SHJ at runtime when post-shuffle partitions
-        # are small — both are cluster defaults, not local-only tuning
+        # are small — neither setting is specific to local mode, but
+        # both were tuned on a single host; re-check them on a cluster
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         # scalar @udf (if ever added) crosses the boundary as Arrow

@@ -64,13 +64,14 @@ def ensure_scan_parallelism(
     projection the added exchange costs more than the serial scan.
 
     ``path`` probes split count from file sizes on the filesystem
-    (bytes / maxPartitionBytes) — no Spark planning; without it the
-    probe plans the scan RDD (slower, but exact)."""
+    (bytes / maxPartitionBytes) — no Spark planning; without it, or
+    when ``path`` is not a local filesystem path (a ``file://`` or
+    ``s3a://`` URI), the probe plans the scan RDD (slower, but exact)."""
     import math
     import os
 
     target = min_partitions or spark.sparkContext.defaultParallelism
-    if path is not None:
+    if path is not None and os.path.exists(path):
         if os.path.isdir(path):
             nbytes = sum(
                 os.path.getsize(os.path.join(r, f))

@@ -47,7 +47,12 @@ class StreamingApply:
 
     ``feed_dir`` builds the default ``FileFeedSource``; pass ``source``
     (any FeedSource, e.g. KafkaFeedSource) to tail a real queue —
-    constructor injection, nothing else changes."""
+    constructor injection, nothing else changes.
+
+    ``stage_partitions`` range-partitions each micro-batch on
+    (conv_id, turn_idx) into that many partitions before the apply; ``None``
+    (the default) means no staging: the batch goes to the sink as
+    the source delivered it."""
 
     def __init__(
         self,

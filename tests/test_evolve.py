@@ -91,6 +91,9 @@ def test_sink_widens_turn_idx_int_to_long(spark, tmp_table):
     assert out.filter(F.col("turn_idx") > 2_000_000_000).count() == 1
     # old rows survived the widen
     assert out.filter(F.col("conv_id") == "c1").count() == 1
+    # a point lookup of a pre-widen row hashes its (now bigint) key to
+    # the bucket the int-typed write used
+    assert [r["conv_id"] for r in sink.read_keys([("c1", 0)]).collect()] == ["c1"]
 
 
 def test_sink_tolerates_missing_payload_columns(spark, tmp_table):

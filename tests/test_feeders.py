@@ -211,3 +211,17 @@ def test_http_feeder_methods_lines_and_body_guard(spark, tmp_path):
             fd.http_feeder(spark, base, max_bytes=5).collect()
     finally:
         srv.shutdown()
+
+
+def test_ensure_scan_parallelism_accepts_uri_path(spark, tmp_path):
+    # a URI path has no local file size to probe: fall back to planning
+    # the scan instead of raising from os.path.getsize
+    from chomper_spark.sources.feed import ensure_scan_parallelism
+
+    path = str(tmp_path / "one.parquet")
+    spark.range(16).coalesce(1).write.parquet(path)
+    target = spark.sparkContext.defaultParallelism
+    for p in (path, "file://" + path):
+        out = ensure_scan_parallelism(spark.read.parquet(p), spark, path=p)
+        assert out.rdd.getNumPartitions() == target, p
+        assert out.count() == 16

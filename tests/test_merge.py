@@ -9,6 +9,7 @@ north rule's deletes, out-of-order events, and idempotent replay.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from chomper_spark.operators.merge import IcebergMergeSink, SnapshotMergeSink
 from tests.helpers import assert_state_equals_oracle, ev, feed_df
@@ -120,6 +121,21 @@ def test_protected_columns_never_updated(spark, tmp_table):
     row = sink.read().collect()[0]
     assert row["role"] == "user" and row["text"] == "upd"
     assert_state_equals_oracle(sink.read(), b0 + b1, protected=("role",))
+
+
+def test_protected_column_does_not_survive_delete(spark, tmp_table):
+    # a tombstone protects nothing: I, D, I as three batches must end
+    # with the re-inserted value, as the oracle does
+    batches = [
+        [ev("I", "c1", 0, 1, text="orig")],
+        [ev("D", "c1", 0, 2)],
+        [ev("I", "c1", 0, 3, text="reinserted")],
+    ]
+    sink = SnapshotMergeSink(spark, tmp_table, n_buckets=2)
+    for i, b in enumerate(batches):
+        sink.apply_batch(feed_df(spark, b), i, protected=("text",))
+    assert [r["text"] for r in sink.read().collect()] == ["reinserted"]
+    assert_state_equals_oracle(sink.read(), sum(batches, []), protected=("text",))
 
 
 def test_change_listener_counts(spark, tmp_table):
@@ -269,8 +285,12 @@ def test_read_keys_semantics(spark, tmp_table):
     old = {(r["conv_id"], r["text"])
            for r in sink.read_keys([("c1", 0), ("c2", 0)], as_of_snapshot=0).collect()}
     assert old == {("c1", "v1"), ("c2", "text c2/0 v2")}
+    # a duplicated key reads its row once (semi-join, not inner join)
+    assert sink.read_keys([("c1", 0), ("c1", 0)]).count() == 1
     assert sink.read_keys([("zz", 9)]).count() == 0  # absent key
     assert sink.read_keys([]).count() == 0  # empty key list
+    with pytest.raises(ValueError):
+        sink.read_keys([("c1",)])  # a key tuple missing a key column
     fresh = SnapshotMergeSink(spark, tmp_table + "_none")
     assert fresh.read_keys([("c1", 0)]) is None  # table never created
 
@@ -352,19 +372,20 @@ def test_change_rows_emitted_per_field(spark, tmp_table):
     assert sink.read_changes().count() == 2
 
 
+def _jobs_and_result(spark, fn):
+    """(Spark jobs ``fn`` launched, its result): job ids are global and
+    monotonically increasing."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    start = dag.nextJobId()
+    out = fn()
+    return dag.nextJobId() - start, out
+
+
 def test_collect_metrics_adds_no_extra_jobs(spark, tmp_table):
     # the observe() rework: metrics ride the existing merge jobs —
     # MOR and COW batch applies launch the SAME number of Spark jobs
     # with metrics on and off.
     from chomper_spark.operators.merge import SnapshotMergeSink
-
-    def n_jobs(fn) -> int:
-        # job ids are global and monotonically increasing
-        sc = spark.sparkContext
-        start = sc._jsc.sc().dagScheduler().nextJobId()
-        fn()
-        end = sc._jsc.sc().dagScheduler().nextJobId()
-        return end - start
 
     events = [ev("I", f"c{i}", i % 4, i) for i in range(64)]
     for mode in ("mor", "cow"):
@@ -378,13 +399,30 @@ def test_collect_metrics_adds_no_extra_jobs(spark, tmp_table):
             kw = {"protected": ("role",)} if mode == "cow" else {}
             sink.apply_batch(feed_df(spark, events), batch_id=0,
                              collect_metrics=metrics_on, **kw)
-            counts[metrics_on] = n_jobs(
+            counts[metrics_on], _ = _jobs_and_result(
+                spark,
                 lambda: sink.apply_batch(
                     feed_df(spark, [ev("U", "c1", 1, 100 + i) for i in range(8)]),
                     batch_id=1, collect_metrics=metrics_on, **kw,
-                )
+                ),
             )
         assert counts[True] == counts[False], (mode, counts)
+
+
+def test_point_lookup_job_count(spark, tmp_table):
+    # the key list is a driver-local relation: building the lookup
+    # runs no Spark job (bucket ids fold on the driver), and reading one
+    # key costs the scan's jobs only
+    events = [ev("I", f"c{i}", 0, i) for i in range(32)]
+    for mode, max_jobs in (("cow", 2), ("mor", 3)):
+        sink = SnapshotMergeSink(spark, f"{tmp_table}_{mode}", n_buckets=4, write_mode=mode)
+        sink.apply_batch(feed_df(spark, events), batch_id=0)
+        sink.apply_batch(feed_df(spark, [ev("U", "c1", 0, 100)]), batch_id=1)
+        n, lookup = _jobs_and_result(spark, lambda: sink.read_keys([("c1", 0)]))
+        assert n == 0, mode
+        n, rows = _jobs_and_result(spark, lookup.collect)
+        assert n <= max_jobs, (mode, n)
+        assert [(r["conv_id"], r["text"]) for r in rows] == [("c1", "text c1/0 v100")]
 
 
 def test_fast_cow_path_matches_join_path_state(spark, tmp_table):
