@@ -108,47 +108,6 @@ FROM documents
 # ------------------------------------------------------- n-gram Jaccard dedup
 
 
-def _pair_jaccard(sh: DataFrame, pairs_from: DataFrame | None = None) -> DataFrame:
-    """Exact Jaccard for doc pairs; candidates restricted to
-    ``pairs_from`` (doc_a, doc_b) when given, else all co-shingled pairs."""
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if pairs_from is None:
-        common = (
-            sh.alias("a")
-            .join(sh.alias("b"), "shingle")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-    else:
-        common = (
-            pairs_from.join(sh.alias("a"), pairs_from["doc_a"] == F.col("a.doc_id"))
-            .join(
-                sh.alias("b"),
-                (pairs_from["doc_b"] == F.col("b.doc_id"))
-                & (F.col("a.shingle") == F.col("b.shingle")),
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            stable6(
-                F.col("common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("common")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
-
-
 MAX_SHINGLE_DF = 500  # candidate-generation document-frequency cap
 
 
@@ -290,19 +249,6 @@ WHERE floor((common::DOUBLE / (x.n_sh + y.n_sh - common)::DOUBLE) * 1000000.0) /
 # ------------------------------------------------------------- MinHash + LSH
 
 
-def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """K min-hash values per doc.  min() over md5 hex strings — string
-    ordering is identical across engines, so no numeric conversion is
-    needed.  One groupBy on doc_id (map-side combinable mins)."""
-    sh = shingles(docs)
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"h{i}")
-            for i in range(k)
-        ]
-    )
-
-
 def _band_cols(k: int, bands: int, rows: int):
     return [
         F.md5(F.concat_ws("|", *[F.col(f"h{b * rows + r}") for r in range(rows)])).alias(
@@ -389,7 +335,8 @@ def _pair_jaccard_sets(cand: DataFrame, sets: DataFrame) -> DataFrame:
 def _signature_cols(k: int):
     """MinHash signature columns from a ``shingles`` set array — a pure
     projection (array_min over per-salt md5 transforms), no shuffle;
-    value-identical to ``minhash_signatures``'s groupBy-min.
+    value-identical to an exploded per-salt groupBy-min (pinned by
+    ``test_minhash_signature_projection_equals_groupby_min``).
 
     The per-salt lambda comes from a factory, NOT ``lambda s, i=i``:
     a defaulted second parameter makes the lambda arity 2, which

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from chomper_spark.schema import can_widen
 
@@ -78,19 +78,46 @@ def evolve_schema(
     return T.StructType(out_fields), report
 
 
-def align_to_schema(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Project/cast ``df`` to exactly ``target`` (vectorized backfill).
+def quote(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """``value`` as a SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_type(dt: T.DataType) -> str:
+    """``dt`` as SQL type text, nested field names quoted."""
+    if isinstance(dt, T.StructType):
+        return "STRUCT<" + ", ".join(
+            f"{quote(f_.name)}: {sql_type(f_.dataType)}" for f_ in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{sql_type(dt.keyType)}, {sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def align_to_schema(df: DataFrame, target: T.StructType, *extra: str) -> DataFrame:
+    """Project/cast ``df`` to exactly ``target`` (vectorized backfill),
+    then the ``extra`` SQL expressions, in one ``selectExpr``: the SQL
+    text crosses to the JVM in one py4j call, where building a Column
+    per field costs a dozen round trips.
 
     Missing columns NULL-fill; extra columns drop (the reference's
     column-intersection write); type mismatches cast.
     """
-    have = {f.name: f.dataType for f in df.schema.fields}
+    have = {f_.name: f_.dataType for f_ in df.schema.fields}
     cols = []
     for f_ in target.fields:
+        name = quote(f_.name)
         if f_.name not in have:
-            cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
+            cols.append(f"CAST(NULL AS {sql_type(f_.dataType)}) AS {name}")
         elif have[f_.name] != f_.dataType:
-            cols.append(F.col(f_.name).cast(f_.dataType).alias(f_.name))
+            cols.append(f"CAST({name} AS {sql_type(f_.dataType)}) AS {name}")
         else:
-            cols.append(F.col(f_.name))
-    return df.select(*cols)
+            cols.append(name)
+    return df.selectExpr(*cols, *extra)

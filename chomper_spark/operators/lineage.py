@@ -4,66 +4,54 @@ The analogue of the reference's items_processed / items_dropped
 counters (chomper/importers.py:44-45,81,102-105) and change listeners
 (chomper/contrib/postgres.py:395-426), emitted set-oriented: one row
 per (batch_id, key-partition) appended to a lineage table every
-micro-batch.  Aggregation is map-side-combinable (groupBy on the
-bucket id — same hash partitioning the MERGE already uses, so at
-scale the metrics pass rides the existing shuffle).
+micro-batch.  The partition is the sink's bucket: a COW apply
+computes the per-bucket counters in the aggregate that picks the
+buckets it rewrites, and the rows are written from the driver, so
+lineage costs no Spark job of its own.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from chomper_spark import schema as S
 
 
-def batch_lineage(
-    batch: DataFrame,
-    batch_id: int,
-    n_buckets: int = 32,
-    key_cols: list[str] | None = None,
-    as_of_ts=None,
-) -> DataFrame:
-    """Per-key-partition metrics for one micro-batch.
+def lineage_rows(
+    bucket_stats: list[tuple], batch_id: int, as_of_ms: int | None = None
+) -> list[dict]:
+    """Per-key-partition lineage rows (``schema.LINEAGE``) for one
+    micro-batch, built on the driver from a sink's per-bucket stats
+    (bucket, events, distinct keys, newest op_ts as epoch ms; see
+    ``SnapshotMergeSink.bucket_stats``) — no pass of their own.
 
     events_applied: events landing in the partition
     dedup_drops:    events superseded by a newer event for the same key
     merge_rows:     distinct keys (rows hitting the MERGE)
-    watermark_lag_ms: processing-time lag vs the partition's newest
-                      event (NULL in pure batch replays, where there is
-                      no wall clock in the correctness path).
+    watermark_lag_ms: processing-time lag of ``as_of_ms`` (epoch ms)
+                      behind the partition's newest event; NULL when no
+                      wall clock is given (batch replays).
     """
-    key_cols = key_cols or S.KEY_COLS
-    # canonical string form — same widen-stable bucketing as the sink
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(c).cast("string") for c in key_cols]), F.lit(n_buckets)
-    ).cast("int")
-    lag = (
-        (F.unix_millis(F.lit(as_of_ts)) - F.unix_millis(F.max("op_ts"))).cast("long")
-        if as_of_ts is not None
-        else F.lit(None).cast("long")
-    )
-    return (
-        batch.withColumn("_pid", bucket)
-        .groupBy("_pid")
-        .agg(
-            F.count(F.lit(1)).alias("events_applied"),
-            (F.count(F.lit(1)) - F.count_distinct(*[F.col(c) for c in key_cols])).alias(
-                "dedup_drops"
+    return [
+        {
+            "batch_id": batch_id,
+            "partition_id": bucket,
+            "events_applied": events,
+            "dedup_drops": events - keys,
+            "merge_rows": keys,
+            "watermark_lag_ms": (
+                None if as_of_ms is None or ts_ms is None else as_of_ms - ts_ms
             ),
-            F.count_distinct(*[F.col(c) for c in key_cols]).alias("merge_rows"),
-            lag.alias("watermark_lag_ms"),
-        )
-        .select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            F.col("_pid").alias("partition_id"),
-            "events_applied",
-            "dedup_drops",
-            "merge_rows",
-            "watermark_lag_ms",
-        )
-    )
+        }
+        for bucket, events, keys, ts_ms in bucket_stats
+    ]
 
 
 class LineageTable:
@@ -75,10 +63,27 @@ class LineageTable:
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    def append(self, lineage_df: DataFrame, batch_id: int) -> None:
-        lineage_df.write.mode("overwrite").parquet(
-            os.path.join(self.root, f"batch_id={batch_id}")
-        )
+    def append(self, rows: DataFrame | list[dict], batch_id: int) -> None:
+        """Write one batch's rows (replacing any earlier write of that
+        batch).  A DataFrame is written by Spark; ``lineage_rows`` (at
+        most n_buckets dicts) are written from the driver with no Spark
+        job, under a hidden temporary name first and then renamed into
+        place, so ``read`` and ``expire`` never see a half-written dir."""
+        dest = os.path.join(self.root, f"batch_id={batch_id}")
+        if isinstance(rows, DataFrame):
+            rows.write.mode("overwrite").parquet(dest)
+            return
+        tmp = tempfile.mkdtemp(prefix="_tmp-", dir=self.root)
+        try:
+            pq.write_table(
+                pa.Table.from_pylist(rows, schema=to_arrow_schema(S.LINEAGE)),
+                os.path.join(tmp, "part-00000.parquet"),
+            )
+            shutil.rmtree(dest, ignore_errors=True)
+            os.rename(tmp, dest)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
 
     def read(self) -> DataFrame | None:
         """All appended batches as one frame; None when nothing has
@@ -86,7 +91,9 @@ class LineageTable:
         PATH_NOT_FOUND on a healthy idle table)."""
         if not any(d.startswith("batch_id=") for d in os.listdir(self.root)):
             return None
-        return self.spark.read.option("basePath", self.root).parquet(self.root + "/*")
+        return self.spark.read.option("basePath", self.root).parquet(
+            self.root + "/batch_id=*"
+        )
 
     def expire(self, keep_batches: int) -> dict:
         """Retention for continuous streams: a lineage row set lands
@@ -94,8 +101,6 @@ class LineageTable:
         — drop all but the newest ``keep_batches`` batch directories
         (ship older history to cold storage first if it must be kept).
         Returns {batches_removed, batches_kept}."""
-        import shutil as _shutil
-
         if keep_batches < 1:
             raise ValueError("keep_batches must be >= 1")
         ids = sorted(
@@ -105,7 +110,7 @@ class LineageTable:
         )
         drop = ids[:-keep_batches] if len(ids) > keep_batches else []
         for b in drop:
-            _shutil.rmtree(os.path.join(self.root, f"batch_id={b}"), ignore_errors=True)
+            shutil.rmtree(os.path.join(self.root, f"batch_id={b}"), ignore_errors=True)
         return {"batches_removed": len(drop), "batches_kept": min(len(ids), keep_batches)}
 
 

@@ -58,12 +58,12 @@ from dataclasses import dataclass, field
 
 import pyarrow as pa
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from chomper_spark import schema as S
 from chomper_spark.operators.dedup import dedup_latest_agg
-from chomper_spark.operators.evolve import align_to_schema, evolve_schema
+from chomper_spark.operators.evolve import align_to_schema, evolve_schema, quote, sql_str
 
 _BUCKET = "_bucket"
 _MANIFEST_RE = re.compile(r"^m\d{8}\.json$")
@@ -249,6 +249,9 @@ class MergeMetrics:
     deleted: int = 0
     buckets_touched: int = 0
     field_changes: dict = field(default_factory=dict)
+    # COW only: (bucket, events, distinct keys, newest op_ts as epoch ms)
+    # per touched bucket — the rows of the per-batch lineage table
+    bucket_stats: list = field(default_factory=list)
     schema_added: list = field(default_factory=list)
     schema_widened: list = field(default_factory=list)
 
@@ -338,9 +341,10 @@ class SnapshotMergeSink:
         # the touched buckets.  Off only for write-once append patterns.
         self.compact_on_write = compact_on_write
         # write_mode:
-        #   "cow" (copy-on-write): each batch full-outer-joins the touched
-        #     buckets and rewrites them — reads are a plain scan, but every
-        #     batch writes O(touched table).  Matches Iceberg COW MERGE.
+        #   "cow" (copy-on-write): each batch reduces the touched buckets'
+        #     rows together with its events, latest-wins per key, and
+        #     rewrites them — reads are a plain scan, but every batch
+        #     writes O(touched table).  Matches Iceberg COW MERGE.
         #   "mor" (merge-on-read): each batch APPENDS a per-bucket delta
         #     file (O(batch) write — the only shape that holds at 10^10
         #     events) and reads reduce base+deltas latest-wins; delta
@@ -714,15 +718,45 @@ class SnapshotMergeSink:
 
     # ------------------------------------------------------------- reading
 
-    def _bucket_expr(self) -> F.Column:
+    def _bucket_sql(self) -> str:
         # hash the CANONICAL STRING form of each key column: xxhash64 is
         # type-sensitive (hash(0::int) != hash(0::long)), so hashing raw
         # values would relocate every key when a key column is widened —
         # orphaning/duplicating state.  String form is widen-stable.
-        return F.pmod(
-            F.xxhash64(*[F.col(c).cast("string") for c in self.bucket_cols]),
-            F.lit(self.n_buckets),
-        ).cast("int")
+        keys = ", ".join(f"CAST({quote(c)} AS STRING)" for c in self.bucket_cols)
+        return f"CAST(pmod(xxhash64({keys}), {self.n_buckets}) AS INT)"
+
+    def _bucket_expr(self) -> F.Column:
+        return F.expr(self._bucket_sql())
+
+    def _bucket_stats(self, df: DataFrame) -> list[tuple]:
+        """(bucket, events, distinct keys, newest op_ts as epoch ms) for
+        every bucket ``df`` touches, sorted by bucket — at most
+        ``n_buckets`` rows.  ``df`` carries ``_bucket``, the key columns
+        and ``_op_ts``.  ONE exchange: HashPartitioning on the bucket
+        clusters both the per-key and the per-bucket aggregate
+        (``count_distinct`` would plan a second)."""
+        rows = (
+            df.repartition(_BUCKET)
+            .groupBy(_BUCKET, *self.key_cols)
+            .agg(F.expr("count(1) AS n"), F.expr(f"max({S.META_OP_TS}) AS ts"))
+            .groupBy(_BUCKET)
+            .agg(*map(F.expr, ("sum(n)", "count(1)", "unix_millis(CAST(max(ts) AS TIMESTAMP))")))
+            .collect()
+        )
+        return sorted(tuple(r) for r in rows)
+
+    def bucket_stats(self, batch: DataFrame) -> list[tuple]:
+        """``_bucket_stats`` of a raw change batch: what a COW apply
+        reports in ``MergeMetrics.bucket_stats``, for applies that
+        compute none (MOR)."""
+        return self._bucket_stats(
+            batch.selectExpr(
+                *map(quote, self.key_cols),
+                f"{quote(self.version_cols[0])} AS {S.META_OP_TS}",
+                f"{self._bucket_sql()} AS {_BUCKET}",
+            )
+        )
 
     def _read_buckets(self, manifest: dict, buckets: list[int]) -> DataFrame | None:
         """Read state rows for the given buckets in ONE parquet scan
@@ -1057,7 +1091,8 @@ class SnapshotMergeSink:
 
         ``update_only_nulls`` — E9 .overwrite(False): matched rows only
         fill target-NULL columns.  ``insert_missing=False`` — E3 Updater
-        (matched-only).  ``protected`` — E11 columns never updated.
+        (matched-only: a deleted key is not a match, its tombstone
+        stays).  ``protected`` — E11 columns never updated.
         ``listen_fields`` — E6: count per-field changes on updates.
         ``batch_time`` — the event/commit time stamped into the E9
         audit columns (required when ``audit_timestamps``; a datetime,
@@ -1076,10 +1111,12 @@ class SnapshotMergeSink:
         by every touched bucket's chain and bucket-filtered at read;
         inline compaction folds it into bucketed bases as chains grow.
 
-        Metrics ride the merge jobs via ``df.observe`` — with
-        ``collect_metrics=True`` no extra Spark jobs run (MOR adds
-        zero; COW's only extra pass is the bucket-pruning collect that
-        runs regardless).
+        Metrics cost no extra Spark job.  COW takes events in, merge
+        rows and dedup drops from its touched-bucket aggregate (which
+        runs regardless, and also fills ``MergeMetrics.bucket_stats``),
+        and the ins/upd/del and field-change counts from one
+        ``df.observe`` on the write; MOR observes both counts on its
+        single write job.
         """
         if batch_id < 0:
             # the watermark ledger treats every id ≤ watermark as
@@ -1131,63 +1168,20 @@ class SnapshotMergeSink:
         payload_cols = [f_.name for f_ in new_payload.fields]
         data_cols = [c for c in payload_cols if c not in self.key_cols]
 
-        obs_in = obs_merge = obs_write = None
-        if collect_metrics:
-            from pyspark.sql import Observation
-
-            obs_in, obs_merge, obs_write = Observation(), Observation(), Observation()
-
         # -- project the raw batch to the (evolved) payload + version/meta
         # columns, with the widen-stable bucket id (pure codegen, no action)
-        have = set(batch.columns)
-        proj = [
-            F.col(f_.name).cast(f_.dataType).alias(f_.name)
-            if f_.name in have
-            else F.lit(None).cast(f_.dataType).alias(f_.name)
-            for f_ in new_payload.fields
-        ]
-        projected = batch.select(
-            *proj,
-            F.col(S.OP_COL),
-            F.col(self.version_cols[0]).alias(S.META_OP_TS),
-            F.col(self.version_cols[1]).cast("long").alias(S.META_BATCH_SEQ),
+        projected = align_to_schema(
+            batch,
+            new_payload,
+            quote(S.OP_COL),
+            f"{quote(self.version_cols[0])} AS {S.META_OP_TS}",
+            f"CAST({quote(self.version_cols[1])} AS BIGINT) AS {S.META_BATCH_SEQ}",
         ).withColumn(_BUCKET, self._bucket_expr())
 
         evolved = bool(metrics.schema_added or metrics.schema_widened)
-        special = bool(
-            update_only_nulls or not insert_missing or protected or listen_fields
-            or self.audit_timestamps
-        )
-        # fast COW path (round 6, guide §2.4/§3): a plain apply (no
-        # pre-image-dependent mode, no per-arm metrics) does not need
-        # the full-outer join at all — ``take_src`` is "source wins iff
-        # strictly newer by (op_ts, batch_seq)", which over a total
-        # version order is exactly the latest-wins reduce the MOR read
-        # side already runs (ties resolved to the TARGET by an explicit
-        # target-wins ordering bit, matching take_src bit-for-bit).
-        # union(target-state, batch-state) → repartition(_bucket) →
-        # partition-aligned max_by aggregate replaces [Exchange(src
-        # keys) + Exchange(tgt keys) + 2 Sorts + SortMergeJoin
-        # FullOuter + Exchange(_bucket)] with ONE exchange, and
-        # subsumes the separate batch dedup aggregate (map-side partial
-        # agg collapses intra-batch dupes pre-shuffle).  Audit
-        # timestamps ride the same reduce: created_at = the target
-        # row's created_at when the key existed (an aggregate over the
-        # target-side flag — at most one target row per key) else
-        # batch_time; updated_at = batch_time iff the source side wins.
-        # emit_change_rows rides the fast path too: the state merge does
-        # not need the pre-image join — only the change ROWS do, and
-        # those come from a plain INNER join of the (deduped) batch
-        # against the touched target rows, which the planner/AQE can
-        # broadcast; the old shape persisted the full-outer merge join
-        # to drive both the state write and the change write from it.
-        fast = (
-            not (update_only_nulls or not insert_missing or protected)
-            and not collect_metrics
-            and not (listen_fields and not emit_change_rows)
-        )
         if self.write_mode == "mor":
-            if special:
+            if (update_only_nulls or not insert_missing or protected or listen_fields
+                    or self.audit_timestamps):
                 raise ValueError(
                     "update_only_nulls / insert_missing=False / protected / "
                     "listen_fields / audit_timestamps need the pre-image at "
@@ -1198,331 +1192,157 @@ class SnapshotMergeSink:
             # files align at read via schema_history
             return self._apply_mor(
                 projected, manifest, batch_id, state_schema, payload_cols,
-                metrics, collect_metrics, obs_in, obs_merge,
+                metrics, collect_metrics,
                 delta_layout=delta_layout, evolved=evolved,
             )
 
-        if collect_metrics:
-            # events_in piggybacks on whatever action consumes the plan
-            # (attached here, AFTER the MOR branch — the MOR path
-            # attaches its own observations so both ride its single
-            # write job)
-            projected = projected.observe(obs_in, F.count(F.lit(1)).alias("n"))
-
-        if fast:
-            # the union reduce below dedups the batch in the same job —
-            # persist the raw projection, skip the separate aggregate
-            src = projected.persist()
-        else:
-            # -- dedup latest-wins inside the batch: max_by aggregate
-            # (map-side combine collapses dupes pre-shuffle; the
-            # window/row_number form in operators/dedup.py is
-            # semantically identical)
-            src = dedup_latest_agg(
-                projected, self.key_cols, [S.META_OP_TS, S.META_BATCH_SEQ]
-            )
-            if collect_metrics:
-                src = src.observe(obs_merge, F.count(F.lit(1)).alias("n"))
-            src = src.persist()
         # -- bucket pruning: only read/rewrite the buckets this batch
-        # touches.  This collect also materializes the (cached) dedup and
-        # populates the events_in / merge_rows observations for free.
-        touched = sorted(r[0] for r in src.select(_BUCKET).distinct().collect())
+        # touches.  The same one-exchange pass yields the batch counters
+        # and the per-bucket lineage rows, so none of them costs a job.
+        # The batch is evaluated here and again by the write, not cached
+        # (AQE builds a cache in a job of its own); the commit checks
+        # that both evaluations touched the same buckets.
+        stats = self._bucket_stats(projected)
+        touched = [b for b, *_ in stats]
+        metrics.bucket_stats = stats
+        metrics.buckets_touched = len(touched)
+        metrics.events_in = sum(n for _, n, _, _ in stats)
+        metrics.merge_rows = sum(k for _, _, k, _ in stats)
+        metrics.dedup_drops = metrics.events_in - metrics.merge_rows
         # schema evolution is metadata-only: the commit records the new
         # schema in schema_history and touches ONLY this batch's buckets;
         # files under older schemas are NULL-backfilled/cast at read
         # (see _read_buckets) and rewritten lazily by compaction.
-        metrics.buckets_touched = len(touched)
-        if collect_metrics:
-            # observations were populated by the collect above
-            metrics.events_in = int(_obs_row(obs_in).get("n") or 0)
-            metrics.merge_rows = int(_obs_row(obs_merge).get("n") or 0)
-            metrics.dedup_drops = metrics.events_in - metrics.merge_rows
-
         tgt = self._read_buckets(manifest, touched) if manifest else None
-        changes_written = False
-        audit_cols = (
+
+        # -- the one COW plan: union(target rows, batch events) →
+        # repartition(_bucket) → one latest-wins reduce per key.  The
+        # reduce's winner ``_r`` is the newest batch event when it is
+        # STRICTLY newer than the target row (target-wins ordering bit on
+        # an exact version tie), else the target row itself — so it also
+        # dedups the batch.  HashPartitioning on _bucket satisfies the
+        # aggregate's clustering on (_bucket, *keys): one exchange, no
+        # join, and the write consumes it partition-aligned.  At most one
+        # target row exists per key, so the pre-image ``_t`` rides the
+        # same reduce as a plain aggregate, for the modes that read it.
+        # The plan is built from SQL text: a selectExpr crosses to the
+        # JVM in one py4j call, where each Column op costs several round
+        # trips — at ~1k events per batch those dominated plan building.
+        q = quote
+        _TGT = "_is_tgt"
+        audit = list(S.AUDIT_COLS) if self.audit_timestamps else []
+        meta = [S.META_OP_TS, S.META_BATCH_SEQ, S.META_DELETED]
+        unioned = projected.selectExpr(
+            *map(q, payload_cols),
+            f"CAST({S.META_OP_TS} AS TIMESTAMP) AS {S.META_OP_TS}",
+            S.META_BATCH_SEQ,
+            f"{q(S.OP_COL)} = 'D' AS {S.META_DELETED}",
+            _BUCKET,
+            f"false AS {_TGT}",
+        )
+        if audit:
+            # a source row carries the batch time in both audit columns
+            bt = F.lit(batch_time).cast("timestamp")
+            unioned = unioned.withColumns({c: bt for c in audit})
+        if tgt is not None:
+            unioned = align_to_schema(
+                tgt, state_schema, f"{self._bucket_sql()} AS {_BUCKET}", f"true AS {_TGT}"
+            ).unionByName(unioned)
+        if self.compact_on_write:
+            unioned = unioned.repartition(
+                min(self.n_buckets, max(1, len(touched))), _BUCKET
+            )
+        need_pre = bool(
+            protected or update_only_nulls or not insert_missing or listen_fields
+            or audit
+        )
+        row = ", ".join(map(q, [*data_cols, *audit, *meta]))
+        aggs = [
+            # target-wins tie-break: the source must be STRICTLY newer
+            f"max_by(struct({row}, {_TGT}), "
+            f"struct({S.META_OP_TS}, {S.META_BATCH_SEQ}, {_TGT})) AS _r"
+        ]
+        if need_pre:
+            aggs.append(f"first(CASE WHEN {_TGT} THEN struct({row}) END, true) AS _t")
+        elif collect_metrics:
+            aggs.append(f"max(CASE WHEN {_TGT} THEN NOT {S.META_DELETED} END) AS _live")
+        reduced = unioned.groupBy(_BUCKET, *self.key_cols).agg(*map(F.expr, aggs))
+
+        take_src = f"NOT _r.{_TGT}"
+        t_present = "_t IS NOT NULL"
+        live_t = (
+            f"({t_present} AND NOT _t.{S.META_DELETED})"
+            if need_pre
+            else "coalesce(_live, false)"
+        )
+        if not insert_missing:
+            # E3 Updater: only a LIVE row is a match — a tombstone is not
+            reduced = reduced.filter(t_present)
+            take_src = f"({take_src} AND {live_t})"
+
+        def applied_val(c: str) -> str:
+            """The value an applied UPDATE of a live row writes for c —
+            change counts/rows reflect what lands in the table, not the
+            raw source image (update_only_nulls only fills target NULLs;
+            protected columns are never written)."""
+            if c in protected:
+                return f"_t.{q(c)}"
+            if update_only_nulls:
+                return f"coalesce(_t.{q(c)}, _r.{q(c)})"
+            return f"_r.{q(c)}"
+
+        def pick(c: str, data: bool = True) -> str:
+            if not need_pre:
+                return f"_r.{q(c)} AS {q(c)}"
+            # an insert, or a re-insert over a tombstone, writes the
+            # whole source row: only a LIVE target protects or keeps
+            # its values
+            upd = f"WHEN {take_src} AND {live_t} THEN {applied_val(c)} " if data else ""
+            return f"CASE {upd}WHEN {take_src} THEN _r.{q(c)} ELSE _t.{q(c)} END AS {q(c)}"
+
+        audit_out = (
             [
-                F.lit(batch_time).cast("timestamp").alias(S.AUDIT_CREATED),
-                F.lit(batch_time).cast("timestamp").alias(S.AUDIT_UPDATED),
+                # created_at fixed at first materialization (it survives
+                # a tombstone); updated_at advances on every applied change
+                f"CASE WHEN {t_present} THEN _t.{S.AUDIT_CREATED} "
+                f"ELSE _r.{S.AUDIT_CREATED} END AS {S.AUDIT_CREATED}",
+                pick(S.AUDIT_UPDATED, data=False),
             ]
-            if self.audit_timestamps
+            if audit
             else []
         )
+        upsert = f"{take_src} AND NOT _r.{S.META_DELETED}"
 
-        if fast:
-            _TGT = "_is_tgt"
-            src_state = src.select(
-                *payload_cols,
-                *audit_cols,  # batch_time-stamped create/update (audit only)
-                F.col(S.META_OP_TS),
-                F.col(S.META_BATCH_SEQ),
-                (F.col(S.OP_COL) == "D").alias(S.META_DELETED),
-                F.col(_BUCKET),
-                F.lit(False).alias(_TGT),
-            )
-            if tgt is None:
-                unioned = src_state
-            else:
-                tgt_state = (
-                    align_to_schema(tgt, state_schema)
-                    .withColumn(_BUCKET, self._bucket_expr())
-                    .withColumn(_TGT, F.lit(True))
-                )
-                unioned = tgt_state.unionByName(src_state)
-            rest = [c for c in unioned.columns if c not in (*self.key_cols, _BUCKET)]
-            if self.compact_on_write:
-                # the same exchange the write needs; HashPartitioning on
-                # _bucket satisfies the aggregate's clustering on
-                # (_bucket, *keys), so the reduce adds NO second exchange
-                # and the write consumes it partition-aligned
-                unioned = unioned.repartition(
-                    min(self.n_buckets, max(1, len(touched))), _BUCKET
-                )
-            aggs = [
-                F.max_by(
-                    F.struct(*[F.col(c) for c in rest]),
-                    # target-wins tie-break: take_src requires the source
-                    # to be STRICTLY newer, so on an exact version tie
-                    # the target row must win the reduce too
-                    F.struct(
-                        F.col(S.META_OP_TS), F.col(S.META_BATCH_SEQ), F.col(_TGT)
-                    ),
-                ).alias("_r")
-            ]
-            if self.audit_timestamps:
-                aggs += [
-                    F.max(F.when(F.col(_TGT), F.col(S.AUDIT_CREATED))).alias("_tc"),
-                    F.max(F.when(F.col(_TGT), F.col(S.AUDIT_UPDATED))).alias("_tu"),
-                ]
-            picked = unioned.groupBy(_BUCKET, *self.key_cols).agg(*aggs)
-            out_cols = [
-                F.col(f"_r.{c}").alias(c)
-                for c in rest
-                if c != _TGT and not (
-                    self.audit_timestamps and c in (S.AUDIT_CREATED, S.AUDIT_UPDATED)
-                )
-            ]
-            if self.audit_timestamps:
-                bt = F.lit(batch_time).cast("timestamp")
-                out_cols += [
-                    # key existed before → its created_at survives (live
-                    # or tombstoned); first materialization → batch_time
-                    F.coalesce(F.col("_tc"), bt).alias(S.AUDIT_CREATED),
-                    # applied change (source side won) → batch_time;
-                    # else the target's updated_at stands
-                    F.when(~F.col(f"_r.{_TGT}"), bt)
-                    .otherwise(F.col("_tu"))
-                    .alias(S.AUDIT_UPDATED),
-                ]
-            merged = picked.select(*self.key_cols, *out_cols, F.col(_BUCKET))
-            if emit_change_rows and tgt is not None:
-                # change rows = applied UPDATEs that changed a listened
-                # field on a live row: inner join of the deduped batch
-                # against the touched target rows (first-ever batch has
-                # no pre-image → no change dir, as on the join path)
-                sdd = dedup_latest_agg(
-                    src, self.key_cols, [S.META_OP_TS, S.META_BATCH_SEQ]
-                ).alias("s")
-                t2 = tgt_state.alias("t")
-                s_newer2 = (
-                    F.col(f"s.{S.META_OP_TS}") > F.col(f"t.{S.META_OP_TS}")
-                ) | (
-                    (F.col(f"s.{S.META_OP_TS}") == F.col(f"t.{S.META_OP_TS}"))
-                    & (F.col(f"s.{S.META_BATCH_SEQ}") > F.col(f"t.{S.META_BATCH_SEQ}"))
-                )
-                changed_rows = (
-                    t2.join(sdd, on=self.key_cols, how="inner")
-                    .filter(
-                        s_newer2
-                        & ~F.col(f"t.{S.META_DELETED}")
-                        & (F.col(f"s.{S.OP_COL}") != "D")
-                    )
-                    .select(
-                        *self.key_cols,
-                        F.explode(
-                            F.filter(
-                                F.array(
-                                    *[
-                                        F.struct(
-                                            F.lit(c).alias("field"),
-                                            F.col(f"t.{c}").cast("string").alias("old_value"),
-                                            F.col(f"s.{c}").cast("string").alias("new_value"),
-                                            (
-                                                ~F.col(f"s.{c}").eqNullSafe(F.col(f"t.{c}"))
-                                            ).alias("_chg"),
-                                        )
-                                        for c in listen_fields
-                                    ]
-                                ),
-                                lambda x: x["_chg"],
-                            )
-                        ).alias("_c"),
-                    )
-                    .select(
-                        *self.key_cols,
-                        F.col("_c.field").alias("field"),
-                        F.col("_c.old_value").alias("old_value"),
-                        F.col("_c.new_value").alias("new_value"),
-                        F.lit(batch_id).cast("long").alias("batch_id"),
-                    )
-                )
-                changed_rows.write.mode("overwrite").parquet(
-                    os.path.join(self.root, "changes", f"batch_id={batch_id}")
-                )
-                changes_written = True
-        elif tgt is None:
-            merged = src.select(
-                *payload_cols,
-                *audit_cols,
-                F.col(S.META_OP_TS),
-                F.col(S.META_BATCH_SEQ),
-                (F.col(S.OP_COL) == "D").alias(S.META_DELETED),
-                F.col(_BUCKET),
-            )
-            if collect_metrics:
-                merged = merged.observe(
-                    obs_write,
-                    F.sum(F.when(~F.col(S.META_DELETED), 1).otherwise(0)).alias("ins"),
-                )
-        else:
-            # align old snapshot files to the EVOLVED schema (new columns
-            # NULL-backfill, widened types cast — vectorized, JVM-side)
-            tgt = align_to_schema(tgt, state_schema).withColumn(
-                _BUCKET, self._bucket_expr()
-            )
-            t, s = tgt.alias("t"), src.alias("s")
-            joined = t.join(s, on=self.key_cols, how="full_outer")
+        def field_changed(c: str) -> str:
+            return f"NOT ({applied_val(c)} <=> _t.{q(c)})"
 
-            s_present = F.col(f"s.{S.META_OP_TS}").isNotNull()
-            t_present = F.col(f"t.{S.META_OP_TS}").isNotNull()
-            s_newer = F.col(f"s.{S.META_OP_TS}") > F.col(f"t.{S.META_OP_TS}")
-            s_newer = s_newer | (
-                (F.col(f"s.{S.META_OP_TS}") == F.col(f"t.{S.META_OP_TS}"))
-                & (F.col(f"s.{S.META_BATCH_SEQ}") > F.col(f"t.{S.META_BATCH_SEQ}"))
-            )
-            take_src = s_present & (~t_present | s_newer)
-            if not insert_missing:
-                take_src = take_src & t_present
-
-            live_t = t_present & ~F.col(f"t.{S.META_DELETED}")
-
-            def pick(c: str) -> F.Column:
-                t_c, s_c = F.col(f"t.{c}"), F.col(f"s.{c}")
-                if c in protected:
-                    # only a LIVE target protects its value: a re-insert
-                    # over a tombstone writes the source value
-                    return F.when(take_src & ~live_t, s_c).otherwise(t_c).alias(c)
-                if update_only_nulls:
-                    # matched & live target: only fill NULLs (E9 overwrite=False)
-                    return (
-                        F.when(take_src & live_t, F.coalesce(t_c, s_c))
-                        .when(take_src, s_c)
-                        .otherwise(t_c)
-                        .alias(c)
-                    )
-                return F.when(take_src, s_c).otherwise(t_c).alias(c)
-
-            def applied_val(c: str) -> F.Column:
-                """The value an applied UPDATE actually writes for c —
-                change counts/rows must reflect what lands in the table,
-                not the raw source image (update_only_nulls only fills
-                target NULLs; protected columns are never written)."""
-                t_c, s_c = F.col(f"t.{c}"), F.col(f"s.{c}")
-                if c in protected:
-                    return t_c
-                if update_only_nulls:
-                    return F.coalesce(t_c, s_c)
-                return s_c
-
-            def field_changed(c: str) -> F.Column:
-                return (
-                    take_src
-                    & live_t
-                    & (F.col(f"s.{S.OP_COL}") != "D")
-                    & ~applied_val(c).eqNullSafe(F.col(f"t.{c}"))
-                )
-
-            if collect_metrics:
-                # per-op counts + field-change counts ride the write job
-                aggs = [
-                    F.sum(F.when(take_src & ~live_t & (F.col(f"s.{S.OP_COL}") != "D"), 1).otherwise(0)).alias("ins"),
-                    F.sum(F.when(take_src & live_t & (F.col(f"s.{S.OP_COL}") != "D"), 1).otherwise(0)).alias("upd"),
-                    F.sum(F.when(take_src & live_t & (F.col(f"s.{S.OP_COL}") == "D"), 1).otherwise(0)).alias("del"),
-                ] + [
-                    F.sum(F.when(field_changed(c), 1).otherwise(0)).alias(f"chg_{c}")
+        changes_written = emit_change_rows and tgt is not None
+        if changes_written:
+            # the change-rows write below is a second action over it
+            reduced = reduced.persist()
+        observed = reduced
+        if collect_metrics:
+            obs = Observation()
+            # per-op and field-change counts ride the write job
+            counts = {
+                "ins": f"{upsert} AND NOT {live_t}",
+                "upd": f"{upsert} AND {live_t}",
+                "del": f"{take_src} AND {live_t} AND _r.{S.META_DELETED}",
+                **{
+                    f"chg_{c}": f"{upsert} AND {live_t} AND {field_changed(c)}"
                     for c in listen_fields
-                ]
-                joined = joined.observe(obs_write, *aggs)
-            if emit_change_rows:
-                # the changes write below is a second action over the join
-                joined = joined.persist()
-
-            if self.audit_timestamps:
-                audit_cols = [
-                    # created_at fixed at first materialization, survives
-                    # updates; updated_at advances on every applied change
-                    F.when(take_src & ~t_present, F.lit(batch_time).cast("timestamp"))
-                    .otherwise(F.col(f"t.{S.AUDIT_CREATED}"))
-                    .alias(S.AUDIT_CREATED),
-                    F.when(take_src, F.lit(batch_time).cast("timestamp"))
-                    .otherwise(F.col(f"t.{S.AUDIT_UPDATED}"))
-                    .alias(S.AUDIT_UPDATED),
-                ]
-            merged = joined.select(
-                *self.key_cols,
-                *[pick(c) for c in data_cols],
-                *audit_cols,
-                F.when(take_src, F.col(f"s.{S.META_OP_TS}"))
-                .otherwise(F.col(f"t.{S.META_OP_TS}"))
-                .alias(S.META_OP_TS),
-                F.when(take_src, F.col(f"s.{S.META_BATCH_SEQ}"))
-                .otherwise(F.col(f"t.{S.META_BATCH_SEQ}"))
-                .alias(S.META_BATCH_SEQ),
-                F.when(take_src, F.col(f"s.{S.OP_COL}") == "D")
-                .otherwise(F.col(f"t.{S.META_DELETED}"))
-                .alias(S.META_DELETED),
-                F.coalesce(F.col(f"s.{_BUCKET}"), F.col(f"t.{_BUCKET}")).alias(_BUCKET),
+                },
+            }
+            observed = reduced.observe(
+                obs, *[F.expr(f"count_if({cond}) AS {q(n)}") for n, cond in counts.items()]
             )
-            if not insert_missing:
-                merged = merged.filter(F.col(S.META_OP_TS).isNotNull())
-
-            if emit_change_rows:
-                # full E6 (chomper/contrib/sql/exporters.py:304-333): one
-                # change row per (key, listened field) whose value an
-                # applied UPDATE changed — the audit feed downstream CDC
-                # consumers tail.  Overwrite-per-batch = replay-idempotent.
-                changed_rows = joined.filter(
-                    take_src & live_t & (F.col(f"s.{S.OP_COL}") != "D")
-                ).select(
-                    *self.key_cols,
-                    F.explode(
-                        F.filter(
-                            F.array(
-                                *[
-                                    F.struct(
-                                        F.lit(c).alias("field"),
-                                        F.col(f"t.{c}").cast("string").alias("old_value"),
-                                        applied_val(c).cast("string").alias("new_value"),
-                                        (~applied_val(c).eqNullSafe(F.col(f"t.{c}"))).alias("_chg"),
-                                    )
-                                    for c in listen_fields
-                                ]
-                            ),
-                            lambda x: x["_chg"],
-                        )
-                    ).alias("_c"),
-                ).select(
-                    *self.key_cols,
-                    F.col("_c.field").alias("field"),
-                    F.col("_c.old_value").alias("old_value"),
-                    F.col("_c.new_value").alias("new_value"),
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                )
-                changed_rows.write.mode("overwrite").parquet(
-                    os.path.join(self.root, "changes", f"batch_id={batch_id}")
-                )
-                changes_written = True
+        merged = observed.selectExpr(
+            *map(q, self.key_cols),
+            *[pick(c) for c in data_cols],
+            *audit_out,
+            *[pick(c, data=False) for c in meta],
+            _BUCKET,
+        )
 
         # -- write the new snapshot (only touched buckets) under a
         # claimed dir; commit id (manifest position) is decoupled —
@@ -1531,37 +1351,62 @@ class SnapshotMergeSink:
         dir_id, _ = self._claim_snapshot_dir()
         rel_data = f"snapshots/s{dir_id:08d}/data"
         out_path = os.path.join(self.root, rel_data)
-        merged = align_to_schema(merged, T.StructType(state_schema.fields + [T.StructField(_BUCKET, T.IntegerType(), False)]))
-        if self.compact_on_write and not fast:
-            # the fast path repartitioned BEFORE its reduce (same
-            # exchange, partition-aligned through the aggregate)
-            merged = merged.repartition(min(self.n_buckets, max(1, len(touched))), _BUCKET)
+        merged = align_to_schema(
+            merged,
+            T.StructType(state_schema.fields + [T.StructField(_BUCKET, T.IntegerType(), False)]),
+        )
         merged.write.mode("overwrite").partitionBy(_BUCKET).parquet(out_path)
-        src.unpersist()
-        if tgt is not None and emit_change_rows and not fast:
-            joined.unpersist()
+        if changes_written:
+            # full E6 (chomper/contrib/sql/exporters.py:304-333): one
+            # change row per (key, listened field) whose value an applied
+            # UPDATE of a live row changed — the audit feed downstream CDC
+            # consumers tail.  Overwrite-per-batch = replay-idempotent.
+            # The first-ever batch has no pre-image → no change dir.
+            changes = ", ".join(
+                f"named_struct('field', {sql_str(c)}, "
+                f"'old_value', CAST(_t.{q(c)} AS STRING), "
+                f"'new_value', CAST({applied_val(c)} AS STRING), "
+                f"'_chg', {field_changed(c)})"
+                for c in listen_fields
+            )
+            reduced.filter(f"{upsert} AND {live_t}").selectExpr(
+                *map(q, self.key_cols),
+                f"inline(filter(array({changes}), x -> x._chg))",
+            ).selectExpr(
+                *map(q, self.key_cols), "field", "old_value", "new_value",
+                f"CAST({batch_id} AS BIGINT) AS batch_id",
+            ).write.mode("overwrite").parquet(
+                os.path.join(self.root, "changes", f"batch_id={batch_id}")
+            )
+            reduced.unpersist()
         if collect_metrics:
-            row = _obs_row(obs_write)  # populated by the write job above
+            row = _obs_row(obs)  # populated by the write job above
             metrics.inserted = int(row.get("ins") or 0)
-            if tgt is not None:
-                metrics.updated = int(row.get("upd") or 0)
-                metrics.deleted = int(row.get("del") or 0)
-                metrics.field_changes = {
-                    c: int(row.get(f"chg_{c}") or 0) for c in listen_fields
-                }
+            metrics.updated = int(row.get("upd") or 0)
+            metrics.deleted = int(row.get("del") or 0)
+            metrics.field_changes = {
+                c: int(row.get(f"chg_{c}") or 0) for c in listen_fields
+            }
 
         buckets = dict(manifest["buckets"]) if manifest else {}
         deltas = dict(manifest.get("deltas", {})) if manifest else {}
-        # record every bucket dir the write actually produced (defensive:
-        # never leave a written bucket unreferenced or a moved key stale)
+        # the stats pass and the write each evaluate the batch; a bucket
+        # only the write produced had no target rows read, so committing
+        # it would drop that bucket's state
         written = {
             int(d.split("=", 1)[1])
             for d in os.listdir(out_path)
             if d.startswith(f"{_BUCKET}=")
         }
+        if not written <= set(touched):
+            raise RuntimeError(
+                f"batch {batch_id} changed between its stats pass and its "
+                f"write (new buckets {sorted(written - set(touched))}); "
+                "apply a deterministic or persisted batch"
+            )
         bucket_updates: dict[str, str] = {}
         delta_removals: list[str] = []
-        for k in sorted(written | set(touched)):
+        for k in touched:
             bucket_dir = os.path.join(out_path, f"{_BUCKET}={k}")
             if os.path.isdir(bucket_dir):
                 buckets[str(k)] = f"{rel_data}/{_BUCKET}={k}"
@@ -1622,8 +1467,6 @@ class SnapshotMergeSink:
         payload_cols: list[str],
         metrics: MergeMetrics,
         collect_metrics: bool,
-        obs_in=None,
-        obs_merge=None,
         delta_layout: str = "bucketed",
         evolved: bool = False,
     ) -> MergeMetrics:
@@ -1662,6 +1505,7 @@ class SnapshotMergeSink:
         # exchange for AQE to re-plan.
         proj = projected
         if collect_metrics:
+            obs_in, obs_merge = Observation(), Observation()
             proj = proj.observe(obs_in, F.count(F.lit(1)).alias("n"))
         rest = [c for c in proj.columns if c not in (*self.key_cols, _BUCKET)]
         dd = (
@@ -1697,8 +1541,6 @@ class SnapshotMergeSink:
             # one delta file for the whole batch, bucket id as a data
             # column; the touched-bucket set rides the same write job
             # via collect_set (bounded by n_buckets values)
-            from pyspark.sql import Observation
-
             obs_buckets = Observation()
             delta_df = delta_df.observe(
                 obs_buckets, F.collect_set(F.col(_BUCKET)).alias("bks")

@@ -32,11 +32,13 @@ drain-what-exists:
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import SparkSession, functions as F  # noqa: F401
 from pyspark.sql import types as T
 
 from chomper_spark import schema as S
-from chomper_spark.operators.lineage import LineageTable, batch_lineage
+from chomper_spark.operators.lineage import LineageTable, lineage_rows
 from chomper_spark.operators.merge import SnapshotMergeSink
 from chomper_spark.operators.skew import stage_by_conv
 from chomper_spark.streaming.sources import FeedSource, FileFeedSource
@@ -52,7 +54,10 @@ class StreamingApply:
     ``stage_partitions`` range-partitions each micro-batch on
     (conv_id, turn_idx) into that many partitions before the apply; ``None``
     (the default) means no staging: the batch goes to the sink as
-    the source delivered it."""
+    the source delivered it.
+
+    ``collect_metrics`` (on by default) fills each ``MergeMetrics`` in
+    ``batch_metrics``; the counters ride jobs the apply runs anyway."""
 
     def __init__(
         self,
@@ -66,7 +71,7 @@ class StreamingApply:
         max_files_per_trigger: int = 1,
         n_buckets: int = 32,
         stage_partitions: int | None = None,
-        collect_metrics: bool = False,
+        collect_metrics: bool = True,
         write_mode: str = "cow",
         source: "FeedSource | None" = None,
         lineage_keep_batches: int | None = None,
@@ -128,10 +133,17 @@ class StreamingApply:
         )
         self.batch_metrics.append(m)
         if self.lineage is not None and not m.skipped:
-            self.lineage.append(
-                batch_lineage(batch_df, batch_id, n_buckets=self.sink.n_buckets),
-                batch_id,
+            # a COW apply reports its per-bucket counters; a MOR apply
+            # computes none, so count the batch with the same aggregate
+            stats = (
+                m.bucket_stats
+                if self.sink.write_mode == "cow"
+                else self.sink.bucket_stats(batch_df)
             )
+            # the lag is measured against the wall clock once the
+            # batch is committed (visible to readers)
+            now_ms = time.time_ns() // 1_000_000
+            self.lineage.append(lineage_rows(stats, batch_id, as_of_ms=now_ms), batch_id)
             if self.lineage_keep_batches is not None:
                 self.lineage.expire(self.lineage_keep_batches)
 

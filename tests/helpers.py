@@ -55,3 +55,12 @@ def assert_state_equals_oracle(engine_df, events, **oracle_kwargs):
         _norm(exp.astype(got.dtypes.to_dict(), errors="ignore")),
         check_dtype=False,
     )
+
+
+def jobs_and_result(spark, fn):
+    """(Spark jobs ``fn`` launched, its result): job ids are global and
+    monotonically increasing."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    start = dag.nextJobId()
+    out = fn()
+    return dag.nextJobId() - start, out

@@ -407,6 +407,29 @@ def test_ngram_jaccard_df_cap_bounds_candidates(spark):
     assert cand.count() == 1  # only the planted near-dup pair
 
 
+def _pair_jaccard(sh):
+    """Exact Jaccard of every co-shingled doc pair, by a self-join on
+    the exploded shingles — the unrestricted ground truth."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    common = (
+        sh.alias("a")
+        .join(sh.alias("b"), "shingle")
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return common.join(sa, "doc_a").join(sb, "doc_b").select(
+        "doc_a",
+        "doc_b",
+        txt.stable6(
+            F.col("common").cast("double")
+            / (F.col("n_a") + F.col("n_b") - F.col("common")).cast("double")
+        ).alias("jaccard"),
+    )
+
+
 def test_ngram_jaccard_hot_shingle_common_is_exact(spark):
     # round-6 verify restructure: exact common = common_rare +
     # common_hot.  Plant a qualifying pair whose overlap INCLUDES
@@ -426,7 +449,7 @@ def test_ngram_jaccard_hot_shingle_common_is_exact(spark):
     sh = dd.shingles(docs)
     exact = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dd._pair_jaccard(sh).filter(F.col("jaccard") >= 0.8).collect()
+        for r in _pair_jaccard(sh).filter(F.col("jaccard") >= 0.8).collect()
         if (r["doc_a"], r["doc_b"]) == (100, 101)
     }
     assert out == exact and out[(100, 101)] == 1.0
@@ -444,7 +467,13 @@ def test_minhash_signature_projection_equals_groupby_min(spark):
         [(i, f"tok{i} tok{i+1} tok{i%3} alpha beta gamma delta") for i in range(30)],
         "doc_id long, text string",
     )
-    old = dd.minhash_signatures(docs)
+    # K min-hashes per doc as an exploded groupBy-min over md5 strings
+    old = dd.shingles(docs).groupBy("doc_id").agg(
+        *[
+            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"h{i}")
+            for i in range(dd.MINHASH_K)
+        ]
+    )
     new = dd.shingle_sets(docs).select("doc_id", *dd._signature_cols(dd.MINHASH_K))
     cond = " or ".join(f"o.h{i} <> n.h{i}" for i in range(dd.MINHASH_K))
     assert old.alias("o").join(new.alias("n"), "doc_id").filter(cond).count() == 0

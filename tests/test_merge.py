@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 
 from chomper_spark.operators.merge import IcebergMergeSink, SnapshotMergeSink
-from tests.helpers import assert_state_equals_oracle, ev, feed_df
+from tests.helpers import assert_state_equals_oracle, ev, feed_df, jobs_and_result
 
 
 def test_single_batch_upsert_matches_oracle(spark, tmp_table):
@@ -372,15 +372,6 @@ def test_change_rows_emitted_per_field(spark, tmp_table):
     assert sink.read_changes().count() == 2
 
 
-def _jobs_and_result(spark, fn):
-    """(Spark jobs ``fn`` launched, its result): job ids are global and
-    monotonically increasing."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    start = dag.nextJobId()
-    out = fn()
-    return dag.nextJobId() - start, out
-
-
 def test_collect_metrics_adds_no_extra_jobs(spark, tmp_table):
     # the observe() rework: metrics ride the existing merge jobs —
     # MOR and COW batch applies launch the SAME number of Spark jobs
@@ -393,17 +384,13 @@ def test_collect_metrics_adds_no_extra_jobs(spark, tmp_table):
         for metrics_on in (False, True):
             root = f"{tmp_table}_{mode}_{metrics_on}"
             sink = SnapshotMergeSink(spark, root, n_buckets=4, write_mode=mode)
-            # COW: pin the pre-image join path on both sides (protected
-            # forces it) — a plain metrics-off apply takes the round-6
-            # union-reduce fast path, which has fewer jobs by design
-            kw = {"protected": ("role",)} if mode == "cow" else {}
             sink.apply_batch(feed_df(spark, events), batch_id=0,
-                             collect_metrics=metrics_on, **kw)
-            counts[metrics_on], _ = _jobs_and_result(
+                             collect_metrics=metrics_on)
+            counts[metrics_on], _ = jobs_and_result(
                 spark,
                 lambda: sink.apply_batch(
                     feed_df(spark, [ev("U", "c1", 1, 100 + i) for i in range(8)]),
-                    batch_id=1, collect_metrics=metrics_on, **kw,
+                    batch_id=1, collect_metrics=metrics_on,
                 ),
             )
         assert counts[True] == counts[False], (mode, counts)
@@ -418,19 +405,18 @@ def test_point_lookup_job_count(spark, tmp_table):
         sink = SnapshotMergeSink(spark, f"{tmp_table}_{mode}", n_buckets=4, write_mode=mode)
         sink.apply_batch(feed_df(spark, events), batch_id=0)
         sink.apply_batch(feed_df(spark, [ev("U", "c1", 0, 100)]), batch_id=1)
-        n, lookup = _jobs_and_result(spark, lambda: sink.read_keys([("c1", 0)]))
+        n, lookup = jobs_and_result(spark, lambda: sink.read_keys([("c1", 0)]))
         assert n == 0, mode
-        n, rows = _jobs_and_result(spark, lookup.collect)
+        n, rows = jobs_and_result(spark, lookup.collect)
         assert n <= max_jobs, (mode, n)
         assert [(r["conv_id"], r["text"]) for r in rows] == [("c1", "text c1/0 v100")]
 
 
-def test_fast_cow_path_matches_join_path_state(spark, tmp_table):
-    # round-6 fast COW path (plain apply → union + latest-wins reduce)
-    # must produce the exact same table as the pre-image join path
-    # (pinned via collect_metrics=True) across batches exercising
-    # inserts, updates, deletes, intra-batch dupes, out-of-order
-    # events, and upsert-on-missing.
+def test_cow_apply_matches_oracle_with_metrics_on_and_off(spark, tmp_table):
+    # the one COW plan (union + latest-wins reduce) must land the oracle
+    # state with metrics on and off, across batches exercising inserts,
+    # updates, deletes, intra-batch dupes, out-of-order events, and
+    # upsert-on-missing.
     batches = [
         [ev("I", "c1", 0, 1), ev("I", "c1", 1, 2), ev("U", "c1", 0, 3, text="dup"),
          ev("U", "c1", 0, 4, text="dup2"), ev("I", "c2", 0, 5)],
@@ -438,45 +424,90 @@ def test_fast_cow_path_matches_join_path_state(spark, tmp_table):
         # late event: older op_ts than the applied state → must lose
         [ev("U", "c1", 0, 9, secs=2, text="stale"), ev("I", "c1", 1, 10)],
     ]
-    fast = SnapshotMergeSink(spark, tmp_table + "_fast", n_buckets=4)
-    slow = SnapshotMergeSink(spark, tmp_table + "_slow", n_buckets=4)
-    for b, events in enumerate(batches):
-        fast.apply_batch(feed_df(spark, events), batch_id=b, collect_metrics=False)
-        slow.apply_batch(feed_df(spark, events), batch_id=b, collect_metrics=True)
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    got_f = fast.read().toPandas().sort_values(cols[:2]).reset_index(drop=True)
-    got_s = slow.read().toPandas().sort_values(cols[:2]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got_f[cols], got_s[cols])
+    for metrics_on in (False, True):
+        sink = SnapshotMergeSink(spark, f"{tmp_table}_{metrics_on}", n_buckets=4)
+        for b, events in enumerate(batches):
+            sink.apply_batch(feed_df(spark, events), batch_id=b, collect_metrics=metrics_on)
+        assert_state_equals_oracle(sink.read(), sum(batches, []))
 
 
-def test_fast_cow_write_plan_single_exchange_no_join(spark, tmp_table):
-    # the fast path's write job: ONE exchange (on _bucket), no
-    # SortMergeJoin — captured by hooking the parquet writer.
+def test_cow_write_plan_single_exchange_no_join_every_mode(spark, tmp_table):
+    # every COW mode, metrics on, writes through ONE plan: one exchange
+    # (on _bucket) and no join — captured by hooking the parquet writer.
+    import datetime as dt
+
     from pyspark.sql.readwriter import DataFrameWriter
 
-    sink = SnapshotMergeSink(spark, tmp_table, n_buckets=4)
-    sink.apply_batch(
-        feed_df(spark, [ev("I", f"c{i}", i % 4, i) for i in range(32)]),
-        batch_id=0, collect_metrics=False,
-    )
-    plans: list[str] = []
+    first = [ev("I", f"c{i}", i % 4, i) for i in range(32)]
+    modes = [
+        {},
+        {"protected": ("role",)},
+        {"update_only_nulls": True},
+        {"insert_missing": False},
+        {"listen_fields": ("text",)},
+    ]
+    plain = SnapshotMergeSink(spark, tmp_table, n_buckets=4)
+    plain.apply_batch(feed_df(spark, first), batch_id=0)
+    audit = SnapshotMergeSink(spark, tmp_table + "_audit", n_buckets=4, audit_timestamps=True)
+    t0 = dt.datetime(2026, 1, 1)
+    audit.apply_batch(feed_df(spark, first), batch_id=0, batch_time=t0)
+    applies = [(plain, b, kw) for b, kw in enumerate(modes, start=1)]
+    applies.append((audit, 1, {"batch_time": t0}))
     orig = DataFrameWriter.parquet
+    for sink, b, kw in applies:
+        plans: list[str] = []
 
-    def hooked(self, path, **kw):
-        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
-        return orig(self, path, **kw)
+        def hooked(self, path, **pkw):
+            plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+            return orig(self, path, **pkw)
 
-    DataFrameWriter.parquet = hooked
-    try:
-        sink.apply_batch(
-            feed_df(spark, [ev("U", f"c{i}", i % 4, 100 + i) for i in range(16)]),
-            batch_id=1, collect_metrics=False,
-        )
-    finally:
-        DataFrameWriter.parquet = orig
-    assert len(plans) == 1
-    assert plans[0].count("Exchange") == 1, plans[0]
-    assert "SortMergeJoin" not in plans[0], plans[0]
+        DataFrameWriter.parquet = hooked
+        try:
+            sink.apply_batch(
+                feed_df(spark, [ev("U", f"c{i}", i % 4, 100 * b + i) for i in range(16)]),
+                batch_id=b, collect_metrics=True, **kw,
+            )
+        finally:
+            DataFrameWriter.parquet = orig
+        assert len(plans) == 1, kw
+        assert plans[0].count("Exchange") == 1, (kw, plans[0])
+        assert "Join" not in plans[0], (kw, plans[0])
+
+
+def test_insert_missing_false_does_not_revive_deleted_key(spark, tmp_table):
+    # E3 Updater: a tombstone is not a live row to update — I, D, then
+    # U with insert_missing=False as three batches ends empty, as the
+    # oracle does, and reports no insert
+    batches = [
+        [ev("I", "c1", 0, 1, text="orig")],
+        [ev("D", "c1", 0, 2)],
+        [ev("U", "c1", 0, 3, text="upd")],
+    ]
+    sink = SnapshotMergeSink(spark, tmp_table, n_buckets=2)
+    sink.apply_batch(feed_df(spark, batches[0]), 0)
+    sink.apply_batch(feed_df(spark, batches[1]), 1)
+    m = sink.apply_batch(feed_df(spark, batches[2]), 2, insert_missing=False)
+    assert sink.read().count() == 0
+    assert (m.inserted, m.updated, m.deleted) == (0, 0, 0)
+    assert_state_equals_oracle(sink.read(), sum(batches, []), insert_missing=False)
+    # the tombstone survives: a late pre-delete event still cannot land
+    sink.apply_batch(feed_df(spark, [ev("U", "c1", 0, 0, secs=1, text="late")]), 3)
+    assert sink.read().count() == 0
+
+
+def test_batch_changed_between_passes_is_refused(spark, tmp_table, monkeypatch):
+    # the stats pass and the write each evaluate the batch: a bucket the
+    # stats pass missed had no target rows read, so the apply must fail
+    # before its commit instead of dropping that bucket's state
+    first = [ev("I", f"c{i}", 0, i) for i in range(16)]
+    sink = SnapshotMergeSink(spark, tmp_table, n_buckets=4)
+    sink.apply_batch(feed_df(spark, first), 0)
+    stats = sink._bucket_stats
+    monkeypatch.setattr(sink, "_bucket_stats", lambda df: stats(df)[1:])
+    with pytest.raises(RuntimeError, match="changed between"):
+        sink.apply_batch(feed_df(spark, [ev("U", f"c{i}", 0, 100 + i) for i in range(16)]), 1)
+    assert sink.committed_batches() == {0}
+    assert_state_equals_oracle(sink.read(), first)
 
 
 def test_metrics_values_unchanged_by_observe_rework(spark, tmp_table):

@@ -3,10 +3,12 @@ shuffle/skew; per-partition lineage table)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from chomper_spark.operators.dedup import dedup_latest
-from chomper_spark.operators.lineage import LineageTable, batch_lineage
+from chomper_spark.operators.lineage import LineageTable, lineage_rows
 from chomper_spark.operators.skew import salted_count_per_conv, stage_by_conv, with_salt
 from chomper_spark.sources.feed import synthetic_change_feed
 from tests.helpers import ev, feed_df
@@ -49,23 +51,50 @@ def test_salt_is_deterministic(spark):
     assert a == b and len(set(a)) > 1  # hot conv spreads over salts
 
 
-def test_batch_lineage_counts(spark, tmp_path):
-    events = [
-        ev("I", "c1", 0, 1),
-        ev("U", "c1", 0, 2),  # same key → 1 dedup drop
-        ev("I", "c2", 0, 3),
-    ]
-    lin = batch_lineage(feed_df(spark, events), batch_id=7, n_buckets=4)
-    agg = lin.agg(
-        F.sum("events_applied").alias("e"),
-        F.sum("dedup_drops").alias("d"),
-        F.sum("merge_rows").alias("m"),
-    ).collect()[0]
-    assert (agg["e"], agg["d"], agg["m"]) == (3, 1, 2)
+def test_batch_lineage_rows_match_pandas_counts(spark, tmp_path):
+    # per-bucket lineage rows (events, dedup drops, distinct keys, lag
+    # behind the newest event) from the COW apply's touched-bucket
+    # aggregate and from the MOR helper, against pandas counts over the
+    # sink's bucket of each event
+    import pandas as pd
+
+    from chomper_spark.operators.merge import SnapshotMergeSink
+
+    events = [ev("I", f"c{i % 5}", i % 3, i) for i in range(40)] + [ev("D", "c1", 1, 50)]
+    df = feed_df(spark, events)
+    sink = SnapshotMergeSink(spark, str(tmp_path / "cow"), n_buckets=4)
+    ev_pd = df.select("conv_id", "turn_idx", "op_ts", sink._bucket_expr().alias("b")).toPandas()
+    g = ev_pd.groupby("b")
+    now_ms = 1_900_000_000_000
+    exp = pd.DataFrame({
+        "partition_id": g.size().index.astype("int64"),
+        "events_applied": g.size().values,
+        "merge_rows": ev_pd.drop_duplicates(["b", "conv_id", "turn_idx"]).groupby("b").size().values,
+        "watermark_lag_ms": (
+            now_ms - g["op_ts"].max().dt.tz_localize(None).astype("datetime64[ms]").astype("int64")
+        ).values,
+    })
+    exp["dedup_drops"] = exp["events_applied"] - exp["merge_rows"]
+
+    m = sink.apply_batch(df, batch_id=7)
+    assert m.bucket_stats == sink.bucket_stats(df)  # COW metrics == MOR helper
+    rows = lineage_rows(m.bucket_stats, 7, as_of_ms=now_ms)
+    got = pd.DataFrame(rows)[exp.columns]
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    assert set(pd.DataFrame(rows)["batch_id"]) == {7}
+    assert m.buckets_touched == len(rows)
+    assert (m.events_in, m.merge_rows) == (41, 15)
+
     t = LineageTable(spark, str(tmp_path / "lin"))
-    t.append(lin, 7)
-    t.append(batch_lineage(feed_df(spark, events), batch_id=8, n_buckets=4), 8)
-    assert t.read().select("batch_id").distinct().count() == 2
+    t.append(rows, 7)
+    t.append(rows, 7)  # replay replaces, never duplicates
+    t.append(lineage_rows(m.bucket_stats, 8), 8)  # no wall clock → NULL lag
+    back = t.read()
+    assert dict(back.dtypes)["partition_id"] == "int"
+    assert dict(back.dtypes)["events_applied"] == "bigint"
+    assert back.filter("batch_id = 7").count() == len(rows)
+    assert back.filter("batch_id = 8 and watermark_lag_ms is not null").count() == 0
+    assert not [d for d in os.listdir(str(tmp_path / "lin")) if d.startswith("_")]
 
 
 def test_dedup_agg_equals_window_form(spark):
@@ -83,15 +112,12 @@ def test_dedup_agg_equals_window_form(spark):
 
 
 def test_lineage_retention_bounds_dir_count(spark, tmp_path):
-    import os
-
     import pytest
 
     root = str(tmp_path / "lin")
     t = LineageTable(spark, root)
-    events = [ev("I", "c1", 0, 1)]
     for b in range(8):
-        t.append(batch_lineage(feed_df(spark, events), batch_id=b, n_buckets=2), b)
+        t.append(lineage_rows([(0, 1, 1, None)], b), b)
     stats = t.expire(keep_batches=3)
     assert stats == {"batches_removed": 5, "batches_kept": 3}
     dirs = sorted(d for d in os.listdir(root) if d.startswith("batch_id="))
@@ -104,8 +130,6 @@ def test_lineage_retention_bounds_dir_count(spark, tmp_path):
 
 
 def test_streaming_auto_lineage_retention(spark, tmp_path):
-    import os
-
     from chomper_spark.streaming import StreamingApply
 
     feed_dir = str(tmp_path / "feed")

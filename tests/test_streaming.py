@@ -9,7 +9,7 @@ rebuilt as readStream + foreachBatch.
 from __future__ import annotations
 
 from chomper_spark.streaming import StreamingApply
-from tests.helpers import assert_state_equals_oracle, ev, feed_df
+from tests.helpers import assert_state_equals_oracle, ev, feed_df, jobs_and_result
 
 
 def _write_chunk(spark, events, feed_dir):
@@ -47,6 +47,41 @@ def test_stream_micro_batches_apply_and_match_oracle(spark, tmp_path):
     lin = app.lineage.read()
     assert lin.count() > 0
     assert set(lin.columns) >= {"batch_id", "partition_id", "events_applied", "merge_rows"}
+    # processing-time lag behind each partition's newest event
+    lags = [r["watermark_lag_ms"] for r in lin.collect()]
+    assert all(lag is not None and lag >= 0 for lag in lags), lags
+
+
+def test_stream_lineage_cow_runs_no_spark_job_and_mor_matches(spark, tmp_path):
+    # COW: the lineage rows come from the apply's touched-bucket
+    # aggregate and are written from the driver — appending them runs
+    # no Spark job.  MOR computes the same rows with the same helper.
+    events = [ev("I", f"c{i % 3}", i % 2, i) for i in range(12)]
+    counts = {}
+    for mode in ("cow", "mor"):
+        feed_dir, state, ckpt, lineage = _dirs(tmp_path / mode)
+        _write_chunk(spark, events, feed_dir)
+        app = StreamingApply(
+            spark, feed_dir, state, ckpt, lineage_root=lineage,
+            n_buckets=4, write_mode=mode,
+        )
+        jobs = []
+        append = app.lineage.append
+        app.lineage.append = lambda rows, b: jobs.append(
+            jobs_and_result(spark, lambda: append(rows, b))[0]
+        )
+        app.run_available()
+        assert jobs and (mode == "mor" or jobs == [0] * len(jobs)), (mode, jobs)
+        assert_state_equals_oracle(
+            app.read().select("conv_id", "turn_idx", "role", "text", "tool", "ts"), events
+        )
+        counts[mode] = sorted(
+            (r["partition_id"], r["events_applied"], r["dedup_drops"], r["merge_rows"])
+            for r in app.lineage.read().collect()
+        )
+        assert sum(c[1] for c in counts[mode]) == 12
+        assert sum(c[3] for c in counts[mode]) == 6
+    assert counts["cow"] == counts["mor"]
 
 
 def test_stream_resume_from_checkpoint_applies_only_new(spark, tmp_path):
