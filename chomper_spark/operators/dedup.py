@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from chomper_spark import schema as S
+from chomper_spark.operators.evolve import quote
 
 
 def dedup_latest(
@@ -35,6 +36,15 @@ def dedup_latest(
     )
 
 
+def latest_wins_sql(cols: list[str], version_cols: list[str]) -> str:
+    """SQL aggregate ``_r``: the newest ``struct(cols)`` per group by
+    ``version_cols`` — deterministic when they are a total order."""
+    return (
+        f"max_by(struct({', '.join(map(quote, cols))}), "
+        f"struct({', '.join(map(quote, version_cols))})) AS _r"
+    )
+
+
 def dedup_latest_agg(
     batch: DataFrame,
     key_cols: list[str] | None = None,
@@ -51,9 +61,8 @@ def dedup_latest_agg(
     key_cols = key_cols or S.KEY_COLS
     version_cols = version_cols or S.VERSION_COLS
     rest = [c for c in batch.columns if c not in key_cols]
-    picked = batch.groupBy(*key_cols).agg(
-        F.max_by(
-            F.struct(*rest), F.struct(*[F.col(c) for c in version_cols])
-        ).alias("_r")
+    return (
+        batch.groupBy(*key_cols)
+        .agg(F.expr(latest_wins_sql(rest, version_cols)))
+        .selectExpr(*map(quote, key_cols), *[f"_r.{quote(c)} AS {quote(c)}" for c in rest])
     )
-    return picked.select(*key_cols, *[F.col(f"_r.{c}").alias(c) for c in rest])

@@ -49,6 +49,7 @@ whose semantics match ``MERGE INTO``):
 
 from __future__ import annotations
 
+import glob
 import itertools
 import json
 import os
@@ -62,13 +63,15 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, ty
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from chomper_spark import schema as S
-from chomper_spark.operators.dedup import dedup_latest_agg
+from chomper_spark.operators.dedup import dedup_latest_agg, latest_wins_sql
 from chomper_spark.operators.evolve import align_to_schema, evolve_schema, quote, sql_str
 
 _BUCKET = "_bucket"
+_SRC = "_src"  # MOR fold input: true for batch events, false for stored rows
 _MANIFEST_RE = re.compile(r"^m\d{8}\.json$")
 _SNAP_RE = re.compile(r"snapshots/s(\d{8})/")
 _SNAP_DIR_RE = re.compile(r"^s(\d{8})$")
+_SHARED_SID = r"(s\d{8})/delta_shared"  # a shared delta file's snapshot dir
 _COMMIT_RETRIES = 5
 
 
@@ -94,6 +97,31 @@ def _schema_for_rel(history: list[dict], rel: str) -> str:
         else:
             break
     return cur
+
+
+def _live(state: DataFrame) -> DataFrame:
+    """User-facing rows of a state frame: no tombstones, no version
+    metadata."""
+    return state.where(f"NOT {S.META_DELETED}").drop(*S.META_COLS)
+
+
+def _swap_in_bases(
+    buckets: dict, deltas: dict, fold: list[int], written: list[int], rel: str
+) -> dict:
+    """Point each ``fold`` bucket at the base its fold wrote under
+    ``rel`` (or drop the bucket when the fold left no rows) and retire
+    its delta chain.  Edits ``buckets``/``deltas`` in place; returns
+    the matching delta-manifest entries."""
+    doc: dict = {"bucket_updates": {}, "bucket_removals": [], "delta_removals": []}
+    done = set(written)
+    for k in map(str, fold):
+        if int(k) in done:
+            buckets[k] = doc["bucket_updates"][k] = f"{rel}/{_BUCKET}={k}"
+        elif buckets.pop(k, None) is not None:
+            doc["bucket_removals"].append(k)
+        if deltas.pop(k, None) is not None:
+            doc["delta_removals"].append(k)
+    return doc
 
 # Commit-metadata bounds (round 4).  A continuous stream commits one
 # snapshot per micro-batch for years — 10^5-10^6 commits over 10^4-10^6
@@ -339,6 +367,7 @@ class SnapshotMergeSink:
         # into every bucket dir (tasks × buckets small files per snapshot),
         # and file-creation/listing overhead dwarfs one narrow shuffle of
         # the touched buckets.  Off only for write-once append patterns.
+        # COW only: a MOR write's reduce needs the bucket exchange.
         self.compact_on_write = compact_on_write
         # write_mode:
         #   "cow" (copy-on-write): each batch reduces the touched buckets'
@@ -347,9 +376,10 @@ class SnapshotMergeSink:
         #     writes O(touched table).  Matches Iceberg COW MERGE.
         #   "mor" (merge-on-read): each batch APPENDS a per-bucket delta
         #     file (O(batch) write — the only shape that holds at 10^10
-        #     events) and reads reduce base+deltas latest-wins; delta
-        #     chains longer than ``mor_compact_threshold`` fold into a new
-        #     base inline (amortized rewrites).  Matches Iceberg/Hudi MOR.
+        #     events) and reads reduce base+deltas latest-wins; a bucket
+        #     whose chain reaches ``mor_compact_threshold`` folds into a
+        #     new base inside the apply's one write plan (amortized
+        #     rewrites, see ``_apply_mor``).  Matches Iceberg/Hudi MOR.
         #     Modes needing the pre-image at write time (update_only_nulls,
         #     insert_missing=False, protected, listen_fields, per-op
         #     metrics) require "cow".
@@ -726,9 +756,6 @@ class SnapshotMergeSink:
         keys = ", ".join(f"CAST({quote(c)} AS STRING)" for c in self.bucket_cols)
         return f"CAST(pmod(xxhash64({keys}), {self.n_buckets}) AS INT)"
 
-    def _bucket_expr(self) -> F.Column:
-        return F.expr(self._bucket_sql())
-
     def _bucket_stats(self, df: DataFrame) -> list[tuple]:
         """(bucket, events, distinct keys, newest op_ts as epoch ms) for
         every bucket ``df`` touches, sorted by bucket — at most
@@ -758,10 +785,11 @@ class SnapshotMergeSink:
             )
         )
 
-    def _read_buckets(self, manifest: dict, buckets: list[int]) -> DataFrame | None:
-        """Read state rows for the given buckets in ONE parquet scan
-        per live SCHEMA VERSION (plus one more per version when shared
-        small-batch deltas exist) — in steady state exactly one.
+    def _scan_buckets(self, manifest: dict, buckets: list[int]) -> DataFrame | None:
+        """The stored rows of the given buckets, raw: base ∪ chain, not
+        reduced (``_read_buckets`` and ``_fold_write`` reduce).  ONE
+        parquet scan per live SCHEMA VERSION (plus one more per version when
+        shared small-batch deltas exist) — in steady state exactly one.
 
         A single multi-path relation (not a union of per-bucket reads —
         N separate relations make planning and listing O(N) per batch).
@@ -785,7 +813,8 @@ class SnapshotMergeSink:
         references it (k's chain was folded into a base) — admitting
         k's rows from it would re-read folded data.  The latest-wins
         reduce would still dedup them against the newer base row, but
-        the read should not depend on that."""
+        the read should not depend on that.  Filters are SQL text (one
+        py4j call, not several per Column op)."""
         cur_json = manifest["schema"]
         schema = T.StructType.fromJson(json.loads(cur_json))
         history = manifest.get(
@@ -797,7 +826,6 @@ class SnapshotMergeSink:
             return _schema_for_rel(history, rel) if multi_version else cur_json
 
         deltas = manifest.get("deltas", {})
-        has_delta = False
         by_schema: dict[str, list[str]] = {}  # schema json → rel paths
         shared: dict[str, set[int]] = {}  # shared rel path → referencing buckets
         for k in buckets:
@@ -809,13 +837,16 @@ class SnapshotMergeSink:
                     shared.setdefault(d, set()).add(int(k))
                 else:
                     by_schema.setdefault(rel_schema(d), []).append(d)
-                has_delta = True
         parts = []
         for sjson, rels in sorted(by_schema.items()):
             grp = self.spark.read.schema(
                 T.StructType.fromJson(json.loads(sjson))
             ).parquet(*[os.path.join(self.root, r) for r in rels])
             parts.append(grp if sjson == cur_json else align_to_schema(grp, schema))
+
+        def in_set(allowed: set[int]) -> str:
+            return f"{_BUCKET} IN ({', '.join(map(str, sorted(allowed)))})"
+
         shared_by_schema: dict[str, dict[str, set[int]]] = {}
         for d, refs in shared.items():
             shared_by_schema.setdefault(rel_schema(d), {})[d] = refs
@@ -830,30 +861,33 @@ class SnapshotMergeSink:
             allowed_sets = {frozenset(v) for v in grp_shared.values()}
             if len(allowed_sets) == 1:
                 # common case: every shared file serves the same subset
-                cond = F.col(_BUCKET).isin(sorted(next(iter(allowed_sets))))
+                cond = in_set(next(iter(allowed_sets)))
             else:
                 # mixed referencing sets → per-file condition keyed on
                 # the snapshot dir embedded in the file path (each
                 # shared file lives in snapshots/s<id>/delta_shared)
-                sid = F.regexp_extract(F.input_file_name(), r"(s\d{8})/delta_shared", 1)
-                cond = F.lit(False)
-                for d, allowed in sorted(grp_shared.items()):
-                    d_sid = d.split("/")[1]  # snapshots/<sid>/delta_shared
-                    cond = cond | (
-                        (sid == d_sid) & F.col(_BUCKET).isin(sorted(allowed))
-                    )
-            flt = sdf.filter(cond).drop(_BUCKET)
+                sid = f"regexp_extract(input_file_name(), {sql_str(_SHARED_SID)}, 1)"
+                cond = " OR ".join(  # d = snapshots/<sid>/delta_shared
+                    f"({sid} = {sql_str(d.split('/')[1])} AND {in_set(allowed)})"
+                    for d, allowed in sorted(grp_shared.items())
+                )
+            flt = sdf.where(cond).drop(_BUCKET)
             parts.append(flt if sjson == cur_json else align_to_schema(flt, schema))
         if not parts:
             return None
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-        if has_delta:
-            # merge-on-read reduce: base rows and delta rows carry the
-            # applied version; latest (op_ts, batch_seq) per key wins
-            df = dedup_latest_agg(df, self.key_cols, [S.META_OP_TS, S.META_BATCH_SEQ])
         return df
+
+    def _read_buckets(self, manifest: dict, buckets: list[int]) -> DataFrame | None:
+        """State rows of the given buckets: ``_scan_buckets``, reduced
+        latest-wins per key by applied version when a chain has deltas."""
+        df = self._scan_buckets(manifest, buckets)
+        deltas = manifest.get("deltas", {})
+        if df is None or not any(deltas.get(str(k)) for k in buckets):
+            return df
+        return dedup_latest_agg(df, self.key_cols, [S.META_OP_TS, S.META_BATCH_SEQ])
 
     def manifest_at(self, snapshot_id: int) -> dict:
         """Load a historical manifest (time travel; available until
@@ -887,9 +921,7 @@ class SnapshotMergeSink:
         every commit is a snapshot, so any committed batch boundary is
         reconstructible until GC'd."""
         st = self.read_state(as_of_snapshot)
-        if st is None:
-            return None
-        return st.filter(~F.col(S.META_DELETED)).drop(*S.META_COLS)
+        return None if st is None else _live(st)
 
     def read_keys(
         self, keys: list[tuple], as_of_snapshot: int | None = None
@@ -934,14 +966,11 @@ class SnapshotMergeSink:
         # a projection of a local relation is folded on the driver (0
         # jobs); deduplicate here, since a Spark distinct would plan an
         # aggregate and run jobs again
-        buckets = sorted(
-            {r[0] for r in keys_df.select(self._bucket_expr()).collect()}
-        )
+        buckets = sorted({r[0] for r in keys_df.selectExpr(self._bucket_sql()).collect()})
         st = self._read_buckets(m, buckets)
         if st is None:
             return self.spark.createDataFrame([], schema=user_schema)
-        live = st.filter(~F.col(S.META_DELETED)).drop(*S.META_COLS)
-        return live.join(F.broadcast(keys_df), on=self.key_cols, how="left_semi")
+        return _live(st).join(keys_df.hint("broadcast"), on=self.key_cols, how="left_semi")
 
     def read_prune_for(
         self, keys_df: DataFrame, as_of_snapshot: int | None = None
@@ -966,17 +995,12 @@ class SnapshotMergeSink:
         if m is None:
             return None
         buckets = sorted(
-            r[0]
-            for r in keys_df.select(self._bucket_expr().alias("b")).distinct().collect()
+            r[0] for r in keys_df.selectExpr(self._bucket_sql()).distinct().collect()
         )
         st = self._read_buckets(m, buckets)
         if st is None:
-            schema = T.StructType.fromJson(json.loads(m["schema"]))
-            user = T.StructType(
-                [f_ for f_ in schema.fields if f_.name not in S.META_COLS]
-            )
-            return self.spark.createDataFrame([], schema=user)
-        return st.filter(~F.col(S.META_DELETED)).drop(*S.META_COLS)
+            st = self.spark.createDataFrame([], T.StructType.fromJson(json.loads(m["schema"])))
+        return _live(st)
 
     def read_changes(self) -> DataFrame | None:
         """The per-field change-audit table written by
@@ -1109,14 +1133,15 @@ class SnapshotMergeSink:
         file-count explosion).  "single" writes the whole batch as ONE
         delta file carrying the bucket id as a data column, referenced
         by every touched bucket's chain and bucket-filtered at read;
-        inline compaction folds it into bucketed bases as chains grow.
+        the apply that brings a chain to the threshold folds it into a
+        per-bucket base (and writes per-bucket files, see ``_apply_mor``).
 
         Metrics cost no extra Spark job.  COW takes events in, merge
         rows and dedup drops from its touched-bucket aggregate (which
         runs regardless, and also fills ``MergeMetrics.bucket_stats``),
         and the ins/upd/del and field-change counts from one
-        ``df.observe`` on the write; MOR observes both counts on its
-        single write job.
+        ``df.observe`` on the write; MOR observes its counts on its
+        single write job, from batch rows only.
         """
         if batch_id < 0:
             # the watermark ledger treats every id ≤ watermark as
@@ -1176,7 +1201,7 @@ class SnapshotMergeSink:
             quote(S.OP_COL),
             f"{quote(self.version_cols[0])} AS {S.META_OP_TS}",
             f"CAST({quote(self.version_cols[1])} AS BIGINT) AS {S.META_BATCH_SEQ}",
-        ).withColumn(_BUCKET, self._bucket_expr())
+        ).selectExpr("*", f"{self._bucket_sql()} AS {_BUCKET}")
 
         evolved = bool(metrics.schema_added or metrics.schema_widened)
         if self.write_mode == "mor":
@@ -1470,152 +1495,64 @@ class SnapshotMergeSink:
         delta_layout: str = "bucketed",
         evolved: bool = False,
     ) -> MergeMetrics:
-        """Merge-on-read apply: append one delta file per touched bucket
-        (O(batch) write, no target read), then fold any delta chain that
-        exceeds the compaction threshold into a new base (amortized).
-
-        ONE shuffle and ONE Spark job per batch: the repartition by
-        bucket is the only exchange — the latest-wins dedup groups on
-        (bucket, key), and HashPartitioning(bucket) already satisfies
-        that clustering, so Catalyst plans the aggregate WITHOUT a
-        second exchange and the write consumes it partition-aligned
-        (exactly one file per bucket).  Touched buckets come from the
-        dirs the write produced — no distinct-collect pre-pass.
+        """Merge-on-read apply: ONE write plan (``_fold_write``), with
+        compaction folded in.  The fold set comes from the manifest
+        before the write — every bucket whose delta chain reaches
+        ``mor_compact_threshold`` with this batch (``len(chain) + 1 >=
+        threshold``).  Their stored rows (base ∪ chain, scanned raw)
+        join the batch's events in the one exchange and latest-wins
+        reduce, and the one partitioned write makes the fold buckets'
+        new bases beside the other touched buckets' deltas: no delta
+        for a fold bucket, no re-read, the same job pair as a plain
+        O(batch) delta append.  A fold bucket the batch misses folds
+        from its stored rows alone.  ``delta_layout="single"`` writes
+        one shared delta file, except on a folding apply, which writes
+        per-bucket files (so its other buckets get per-bucket deltas).
 
         The delta row IS the state row (full row image + version +
-        tombstone flag): the read-side latest-wins reduce
-        (see _read_buckets) makes base∪deltas equivalent to the COW
-        table at every point — same oracle, same exactly-once ledger."""
+        tombstone flag): the read-side reduce (``_read_buckets``) makes
+        base∪deltas equal the COW table at every point.  The write runs
+        in the caller's session conf, AQE on: a repartition with an
+        explicit count is never coalesced, so AQE re-plans nothing."""
         snap_id = (manifest["snapshot_id"] + 1) if manifest else 0
         dir_id, _ = self._claim_snapshot_dir()
-        single = delta_layout == "single"
-        rel_delta = f"snapshots/s{dir_id:08d}/" + ("delta_shared" if single else "delta")
-        out_path = os.path.join(self.root, rel_delta)
-
-        # The write runs with AQE ON in the caller's session, unmodified:
-        # round 2 disabled AQE around this static plan (then-measured
-        # ~1s/batch driver re-planning), but session conf is SHARED
-        # state and a concurrently-planned COW join could observe AQE
-        # off and lose skew handling.  Re-measured this round (8 cores,
-        # 8M events, 3 reps each): AQE-on is no slower (13.7s vs 13.0s
-        # clone / 15.3s fresh-JVM with the off-toggle), so the toggle is
-        # gone entirely — no conf mutation, nothing to scope.  AQE keeps
-        # its hands off the plan anyway: repartition(n, col) with an
-        # explicit n is never coalesced, and the fused agg needs no
-        # exchange for AQE to re-plan.
-        proj = projected
-        if collect_metrics:
-            obs_in, obs_merge = Observation(), Observation()
-            proj = proj.observe(obs_in, F.count(F.lit(1)).alias("n"))
-        rest = [c for c in proj.columns if c not in (*self.key_cols, _BUCKET)]
-        dd = (
-            proj.repartition(1 if single else self.n_buckets, _BUCKET)
-            .groupBy(_BUCKET, *self.key_cols)
-            .agg(
-                F.max_by(
-                    F.struct(*rest),
-                    F.struct(F.col(S.META_OP_TS), F.col(S.META_BATCH_SEQ)),
-                ).alias("_r")
-            )
-            .select(
-                _BUCKET, *self.key_cols, *[F.col(f"_r.{c}").alias(c) for c in rest]
-            )
+        deltas = {k: list(v) for k, v in (manifest or {}).get("deltas", {}).items()}
+        fold = sorted(int(k) for k, v in deltas.items() if len(v) + 1 >= self.mor_compact_threshold)
+        shared = delta_layout == "single" and not fold
+        rel = f"snapshots/s{dir_id:08d}/" + ("delta_shared" if shared else "data")
+        rows = projected.selectExpr(
+            *map(quote, payload_cols),
+            f"CAST({S.META_OP_TS} AS TIMESTAMP) AS {S.META_OP_TS}",
+            S.META_BATCH_SEQ,
+            f"{quote(S.OP_COL)} = 'D' AS {S.META_DELETED}",
+            _BUCKET,
+            f"true AS {_SRC}",
         )
-        delta_df = dd.select(
-            *payload_cols,
-            F.col(S.META_OP_TS),
-            F.col(S.META_BATCH_SEQ),
-            (F.col(S.OP_COL) == "D").alias(S.META_DELETED),
-            F.col(_BUCKET),
-        )
-        delta_df = align_to_schema(
-            delta_df,
-            T.StructType(
-                state_schema.fields + [T.StructField(_BUCKET, T.IntegerType(), False)]
-            ),
+        if fold:
+            rows = self._stored_rows(manifest, fold, state_schema).unionByName(rows)
+        written, obs = self._fold_write(
+            rows, os.path.join(self.root, rel), 1 if shared else self.n_buckets,
+            shared=shared, collect_metrics=collect_metrics,
         )
         if collect_metrics:
-            # both counts ride the single write job — zero extra jobs
-            delta_df = delta_df.observe(obs_merge, F.count(F.lit(1)).alias("n"))
-        if single:
-            # one delta file for the whole batch, bucket id as a data
-            # column; the touched-bucket set rides the same write job
-            # via collect_set (bounded by n_buckets values)
-            obs_buckets = Observation()
-            delta_df = delta_df.observe(
-                obs_buckets, F.collect_set(F.col(_BUCKET)).alias("bks")
-            )
-            delta_df.write.mode("overwrite").parquet(out_path)
-            written = sorted(int(x) for x in (_obs_row(obs_buckets).get("bks") or []))
-        else:
-            delta_df.write.mode("overwrite").partitionBy(_BUCKET).parquet(out_path)
-        if collect_metrics:
-            metrics.events_in = int(_obs_row(obs_in).get("n") or 0)
-            metrics.merge_rows = int(_obs_row(obs_merge).get("n") or 0)
+            metrics.events_in = int(obs.get("ev") or 0)
+            metrics.merge_rows = int(obs.get("keys") or 0)
             metrics.dedup_drops = metrics.events_in - metrics.merge_rows
+        metrics.buckets_touched = len(written)  # incl. fold buckets it missed
 
         buckets = dict(manifest["buckets"]) if manifest else {}
-        deltas = {k: list(v) for k, v in (manifest.get("deltas", {}) if manifest else {}).items()}
-        if not single:
-            written = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(out_path)
-                if d.startswith(f"{_BUCKET}=")
-            )
-        metrics.buckets_touched = len(written)
+        delta_doc = _swap_in_bases(buckets, deltas, fold, written, rel)
         delta_sets: dict[str, list] = {}
-        bucket_updates: dict[str, str] = {}
-        bucket_removals: list[str] = []
-        delta_removals: list[str] = []
-        for k in written:
+        for k in set(written) - set(fold):
             chain = deltas.setdefault(str(k), [])
-            chain.append(rel_delta if single else f"{rel_delta}/{_BUCKET}={k}")
+            chain.append(rel if shared else f"{rel}/{_BUCKET}={k}")
             delta_sets[str(k)] = list(chain)
-
-        # -- inline compaction of long chains (before the commit, so the
-        # fold and the ledger update land atomically together)
-        to_compact = [
-            int(k) for k, v in deltas.items() if len(v) >= self.mor_compact_threshold
-        ]
+        delta_doc["delta_sets"] = delta_sets
         schema_json = json.dumps(state_schema.jsonValue())
         history = self._next_schema_history(manifest, evolved, dir_id, schema_json)
-        if to_compact:
-            probe = {
-                "buckets": buckets,
-                "deltas": deltas,
-                "schema": schema_json,
-                # mixed-schema chains (post-evolution) resolve per file
-                "schema_history": history,
-            }
-            reduced = self._read_buckets(probe, to_compact)
-            rel_base = f"snapshots/s{dir_id:08d}/base"
-            base_path = os.path.join(self.root, rel_base)
-            folded = reduced.withColumn(_BUCKET, self._bucket_expr())
-            if self.compact_on_write:
-                folded = folded.repartition(
-                    min(self.n_buckets, max(1, len(to_compact))), _BUCKET
-                )
-            folded.write.mode("overwrite").partitionBy(_BUCKET).parquet(base_path)
-            for k in to_compact:
-                if os.path.isdir(os.path.join(base_path, f"{_BUCKET}={k}")):
-                    buckets[str(k)] = f"{rel_base}/{_BUCKET}={k}"
-                    bucket_updates[str(k)] = buckets[str(k)]
-                elif buckets.pop(str(k), None) is not None:
-                    bucket_removals.append(str(k))
-                deltas.pop(str(k), None)
-                delta_sets.pop(str(k), None)
-                delta_removals.append(str(k))
-
-        wm, recent = _ledger_add(manifest, batch_id)
-        legacy = manifest is not None and "changes" not in manifest
-        delta_doc = {
-            "bucket_updates": bucket_updates,
-            "bucket_removals": bucket_removals,
-            "delta_sets": delta_sets,
-            "delta_removals": delta_removals,
-        }
         if evolved:
             delta_doc["schema_history"] = history
+        wm, recent = _ledger_add(manifest, batch_id)
         self._commit(
             {
                 "snapshot_id": snap_id,
@@ -1632,9 +1569,55 @@ class SnapshotMergeSink:
             },
             parent=manifest,
             delta_doc=delta_doc,
-            force_full=legacy,
+            force_full=manifest is not None and "changes" not in manifest,  # legacy v1
         )
         return metrics
+
+    def _stored_rows(
+        self, manifest: dict, buckets: list[int], state_schema: T.StructType
+    ) -> DataFrame:
+        """``_fold_write`` input from storage: the raw scan of
+        ``buckets``, aligned to ``state_schema`` (new columns NULL-fill)."""
+        return align_to_schema(
+            self._scan_buckets(manifest, buckets), state_schema,
+            f"{self._bucket_sql()} AS {_BUCKET}", f"false AS {_SRC}",
+        )
+
+    def _fold_write(
+        self, rows: DataFrame, out_path: str, n_parts: int, shared: bool = False,
+        collect_metrics: bool = False,
+    ) -> tuple[list[int], dict]:
+        """The one MOR write plan, shared by the apply and ``compact``:
+        ``rows`` (state columns, ``_bucket``, ``_src``) → ONE exchange
+        on ``_bucket`` → ONE latest-wins reduce per (bucket, key), which
+        that HashPartitioning already clusters → one write, one file
+        per bucket dir (``shared``: one file, bucket id as data).
+        Returns (buckets written, observed row): the bucket set rides
+        the write job; ``collect_metrics`` adds ``ev`` (batch events)
+        and ``keys`` (keys with one), counted from ``_src`` so stored
+        rows never count."""
+        q = quote
+        cols = [c for c in rows.columns if c not in (_BUCKET, _SRC)]
+        rest = [c for c in cols if c not in self.key_cols]
+        aggs = [latest_wins_sql(rest, [S.META_OP_TS, S.META_BATCH_SEQ])]
+        observed = [f"collect_set({_BUCKET}) AS bks"]
+        if collect_metrics:
+            aggs.append(f"count_if({_SRC}) AS _n")
+            observed += ["sum(_n) AS ev", "count_if(_n > 0) AS keys"]
+        obs = Observation()
+        out = (
+            rows.repartition(n_parts, _BUCKET)
+            .groupBy(_BUCKET, *self.key_cols)
+            .agg(*map(F.expr, aggs))
+            .observe(obs, *map(F.expr, observed))
+            .selectExpr(
+                *[q(c) if c in self.key_cols else f"_r.{q(c)} AS {q(c)}" for c in cols], _BUCKET
+            )
+        )
+        w = out.write.mode("overwrite")
+        (w if shared else w.partitionBy(_BUCKET)).parquet(out_path)
+        row = _obs_row(obs)  # populated by the write job
+        return sorted(map(int, row.get("bks") or [])), row
 
     def describe(self) -> dict:
         """Operator-facing table summary (metadata only — no data scan):
@@ -1673,11 +1656,11 @@ class SnapshotMergeSink:
 
     def _compact_attempt(self, upgrade_schema: bool = False) -> dict:
         """Fold EVERY delta chain into fresh per-bucket bases, now —
-        the on-demand maintenance twin of the threshold-triggered
-        inline compaction in ``_apply_mor`` (Iceberg's rewrite_data_files
-        / Hudi's compactor).  Run from a maintenance job before
-        serving-heavy periods: MOR reads then scan one base file per
-        bucket with no latest-wins reduce work beyond the scan.
+        the maintenance twin of a MOR apply's threshold fold, through
+        the same ``_fold_write`` plan over stored rows only (Iceberg's
+        rewrite_data_files / Hudi's compactor).  Run from a maintenance
+        job before serving-heavy periods: MOR reads then scan one base
+        file per bucket with no latest-wins reduce work beyond the scan.
 
         ``upgrade_schema`` additionally rewrites every bucket whose
         files predate the newest schema version — the lazy-rewrite
@@ -1703,23 +1686,16 @@ class SnapshotMergeSink:
         to_compact = sorted(to_compact_set)
         n_refs = sum(len(v) for v in deltas.values())
         state_schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-        reduced = self._read_buckets(manifest, to_compact)
         snap_id = manifest["snapshot_id"] + 1
         dir_id, _ = self._claim_snapshot_dir()
-        rel_base = f"snapshots/s{dir_id:08d}/base"
-        base_path = os.path.join(self.root, rel_base)
-        folded = reduced.withColumn(_BUCKET, self._bucket_expr())
-        if self.compact_on_write:
-            folded = folded.repartition(
-                min(self.n_buckets, max(1, len(to_compact))), _BUCKET
-            )
-        folded.write.mode("overwrite").partitionBy(_BUCKET).parquet(base_path)
+        rel = f"snapshots/s{dir_id:08d}/data"
+        written, _ = self._fold_write(
+            self._stored_rows(manifest, to_compact, state_schema),
+            os.path.join(self.root, rel),
+            min(self.n_buckets, len(to_compact)),
+        )
         buckets = dict(manifest["buckets"])
-        for k in to_compact:
-            if os.path.isdir(os.path.join(base_path, f"{_BUCKET}={k}")):
-                buckets[str(k)] = f"{rel_base}/{_BUCKET}={k}"
-            else:
-                buckets.pop(str(k), None)
+        _swap_in_bases(buckets, dict(deltas), to_compact, written, rel)
         schema_json = json.dumps(state_schema.jsonValue())
         if upgrade_schema:
             # every live file now carries the current schema (old-schema
@@ -1763,10 +1739,11 @@ class SnapshotMergeSink:
         A continuous stream commits one snapshot per micro-batch; without
         retention the state dir grows O(batches × table).  Untouched
         buckets are carried forward BY REFERENCE, so a bucket dir from an
-        old snapshot may still be live — only snapshot dirs referenced by
-        no retained manifest are deleted.  (Iceberg's expire_snapshots is
-        the managed-catalog equivalent.)  Returns {snapshots_removed,
-        manifests_removed, bytes_freed}.
+        old snapshot may still be live — snapshot dirs referenced by no
+        retained manifest are deleted, and so are the ``_bucket=k`` dirs
+        no retained manifest references inside the ones that stay.
+        (Iceberg's expire_snapshots is the managed-catalog equivalent.)
+        Returns {snapshots_removed, manifests_removed, bytes_freed}.
 
         ``orphan_age_seconds`` — the contract for cleaning ABOVE-HEAD
         debris (claimed snapshot dirs, checkpoint shard files,
@@ -1838,7 +1815,7 @@ class SnapshotMergeSink:
                 name,
                 {**rewrite_state, "chain_len": 0, "_name": name},
             )
-        live_snapshots: set[str] = set()
+        live_rels: set[str] = set()  # referenced data paths
         live_changes: set[str] = set()
         live_shards: set[str] = set()
         for name in keep:
@@ -1846,15 +1823,15 @@ class SnapshotMergeSink:
                 man = self._fold_by_name(name)
             except (FileNotFoundError, json.JSONDecodeError):
                 continue
-            for rel in man["buckets"].values():
-                live_snapshots.add(rel.split("/")[1])  # snapshots/<sid>/...
+            live_rels.update(man["buckets"].values())
             for chain in man.get("deltas", {}).values():
-                for rel in chain:
-                    live_snapshots.add(rel.split("/")[1])
+                live_rels.update(chain)
             for rel in self._changes_map(man, for_gc=True).values():
                 live_changes.add(rel.split("/", 1)[1])  # changes/<dir>
             live_shards.update(man.get("_shard_map", {}).values())
-            live_snapshots.add(f"s{man['snapshot_id']:08d}")
+        # snapshots/<sid>/...: a dir id is a claim, not a commit id, so
+        # only referenced paths make a dir live
+        live_snapshots = {rel.split("/")[1] for rel in live_rels}
         def _rm_sized(full: str) -> int:
             freed = sum(
                 os.path.getsize(os.path.join(r, f))
@@ -1897,6 +1874,15 @@ class SnapshotMergeSink:
                     continue
             stats["bytes_freed"] += _rm_sized(full)
             stats["snapshots_removed"] += 1
+        # unreferenced bucket dirs inside the dirs that stay — buckets
+        # that folded or were rewritten later than a live sibling.  Their
+        # writer has committed, so no age guard applies; shared deltas
+        # are whole-dir and handled above.
+        for d in sorted(live_snapshots):
+            pattern = os.path.join(glob.escape(os.path.join(sdir, d)), "*", f"{_BUCKET}=*")
+            for full in glob.glob(pattern):
+                if os.path.relpath(full, self.root) not in live_rels:
+                    stats["bytes_freed"] += _rm_sized(full)
         for name in names:
             if name not in keep:
                 os.remove(os.path.join(mdir, name))

@@ -297,7 +297,7 @@ def test_shared_delta_read_filters_per_referencing_bucket(spark, tmp_path):
     }
     got = sink._read_buckets(pruned, [j, k])
     got_buckets = {
-        r["b"] for r in got.select(sink._bucket_expr().alias("b")).distinct().collect()
+        r["b"] for r in got.select(F.expr(sink._bucket_sql()).alias("b")).distinct().collect()
     }
     assert j in got_buckets and k not in got_buckets
 
@@ -325,7 +325,297 @@ def test_shared_delta_read_filters_per_referencing_bucket(spark, tmp_path):
     assert {r["conv_id"] for r in got2.collect()} == {
         r["conv_id"]
         for r in sink.read_state()
-        .withColumn("b", sink._bucket_expr())
+        .withColumn("b", F.expr(sink._bucket_sql()))
         .filter(F.col("b").isin([j, k]))
         .collect()
     }
+
+
+# -- the fused fold: a compacting apply is ONE write plan ----------------
+
+
+def _keys_by_bucket(spark, sink, n_keys=64):
+    """conv ids (turn 0) grouped by the bucket they hash to."""
+    df = feed_df(spark, [ev("I", f"k{i}", 0, i) for i in range(n_keys)])
+    out: dict[int, list[str]] = {}
+    for r in df.selectExpr("conv_id", f"{sink._bucket_sql()} AS b").collect():
+        out.setdefault(r["b"], []).append(r["conv_id"])
+    return out
+
+
+def _batch(convs, seq0, text, op="U"):
+    return [ev(op, c, 0, seq0 + i, text=text) for i, c in enumerate(convs)]
+
+
+def _write_plans(fn):
+    """(physical plans of every parquet write ``fn`` runs, its result)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans: list[str] = []
+    orig = DataFrameWriter.parquet
+
+    def hooked(self, path, **kw):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return orig(self, path, **kw)
+
+    DataFrameWriter.parquet = hooked
+    try:
+        out = fn()
+    finally:
+        DataFrameWriter.parquet = orig
+    return plans, out
+
+
+def _bucket_dirs(snap_dir):
+    import os
+
+    return {
+        f"{sub}/{b}"
+        for sub in os.listdir(snap_dir)
+        if os.path.isdir(os.path.join(snap_dir, sub))
+        for b in os.listdir(os.path.join(snap_dir, sub))
+        if b.startswith("_bucket=")
+    }
+
+
+def test_folding_apply_is_one_write_with_one_exchange(spark, tmp_path):
+    # the batch that brings every chain to the threshold folds them in
+    # its own plan: one parquet write, one Exchange, no Join — and the
+    # fold buckets get a base, never a throw-away delta beside it
+    import os
+
+    sink = _mor(spark, tmp_path / "t", mor_compact_threshold=3)
+    by_b = _keys_by_bucket(spark, sink)
+    convs = [c for k in range(4) for c in by_b[k][:4]]
+    evs = []
+    for b in range(2):
+        evs += _batch(convs, 100 * b, f"v{b}", op="I" if b == 0 else "U")
+        sink.apply_batch(feed_df(spark, evs[-16:]), b)
+    folded = _batch(convs[:12], 200, "v2") + [ev("D", convs[12], 0, 299)]
+    evs += folded
+    plans, _ = _write_plans(lambda: sink.apply_batch(feed_df(spark, folded), 2))
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1, plans[0]
+    assert "Join" not in plans[0], plans[0]
+    man = sink.current_manifest()
+    assert man["deltas"] == {} and len(man["buckets"]) == 4
+    snap = str(tmp_path / "t" / "snapshots" / "s00000002")
+    referenced = {rel.split("/", 2)[2] for rel in man["buckets"].values()}
+    assert _bucket_dirs(snap) == referenced == {f"data/_bucket={k}" for k in range(4)}
+    assert not os.path.exists(os.path.join(snap, "delta"))
+    assert_state_equals_oracle(sink.read(), evs)
+
+
+def test_folding_apply_jobs_and_counters_match_a_delta_apply(spark, tmp_path):
+    # twin sinks fed the same history: one folds on the third batch,
+    # one appends a delta.  The fold launches no more jobs, and its
+    # counters count batch rows only — never the stored rows it reduces
+    from tests.helpers import jobs_and_result
+
+    fold = _mor(spark, tmp_path / "fold", mor_compact_threshold=3)
+    delta = _mor(spark, tmp_path / "delta", mor_compact_threshold=100)
+    convs = [f"c{i}" for i in range(24)]
+    evs = []
+    for b in range(2):
+        evs += _batch(convs, 100 * b, f"v{b}", op="I" if b == 0 else "U")
+        for s in (fold, delta):
+            s.apply_batch(feed_df(spark, evs[-24:]), b)
+    # duplicates within the batch (dedup drops) and a brand-new key
+    third = _batch(convs[:10], 200, "v2") + _batch(convs[:4], 300, "v3") + [
+        ev("I", "new", 0, 400)
+    ]
+    evs += third
+    (jd, md), (jf, mf) = (
+        jobs_and_result(
+            spark, lambda s=s: s.apply_batch(feed_df(spark, third), 2, collect_metrics=True)
+        )
+        for s in (delta, fold)
+    )
+    assert fold.current_manifest()["deltas"] == {}
+    assert delta.current_manifest()["deltas"]
+    assert jf <= jd, (jf, jd)
+    assert (mf.events_in, mf.merge_rows, mf.dedup_drops) == (
+        md.events_in, md.merge_rows, md.dedup_drops,
+    ) == (15, 11, 4)
+    for s in (fold, delta):
+        assert_state_equals_oracle(s.read(), evs)
+
+
+def test_folding_apply_with_evolved_schema_backfills_stored_rows(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    sink = _mor(spark, tmp_path / "t", mor_compact_threshold=3)
+    sink.apply_batch(feed_df(spark, [ev("I", f"c{i}", 0, i) for i in range(8)]), 0)
+    sink.apply_batch(feed_df(spark, [ev("U", "c1", 0, 10, text="u1")]), 1)
+    b2 = feed_df(spark, [ev("U", "c2", 0, 20, text="u2"), ev("I", "n1", 0, 21)])
+    m = sink.apply_batch(b2.withColumn("tool_meta", F.lit("v2")), 2)
+    assert m.schema_added == ["tool_meta"]
+    man = sink.current_manifest()
+    # c1's bucket folded its two-long chain in this apply
+    assert any(rel.startswith("snapshots/s00000002/") for rel in man["buckets"].values())
+    rows = {r["conv_id"]: r for r in sink.read().collect()}
+    assert len(rows) == 9
+    assert (rows["c2"]["tool_meta"], rows["n1"]["tool_meta"]) == ("v2", "v2")
+    assert all(rows[f"c{i}"]["tool_meta"] is None for i in (0, 1, 3, 4, 5, 6, 7))
+    assert (rows["c1"]["text"], rows["c2"]["text"]) == ("u1", "u2")
+
+
+def test_folding_apply_under_single_delta_layout(spark, tmp_path):
+    # a folding apply writes per-bucket files even when the batch asks
+    # for one shared delta: fold buckets get bases, a touched bucket
+    # with no chain gets a per-bucket delta
+    import os
+
+    sink = _mor(spark, tmp_path / "t", mor_compact_threshold=3)
+    by_b = _keys_by_bucket(spark, sink)
+    old, new = by_b[0][:3] + by_b[1][:3], by_b[2][:3]
+    evs = []
+    for b in range(2):
+        evs += _batch(old, 100 * b, f"v{b}", op="I" if b == 0 else "U")
+        sink.apply_batch(feed_df(spark, evs[-6:]), b, delta_layout="single")
+    third = _batch(old[:2], 200, "v2") + _batch(new, 300, "n", op="I")
+    evs += third
+    m = sink.apply_batch(feed_df(spark, third), 2, delta_layout="single")
+    assert m.buckets_touched == 3
+    man = sink.current_manifest()
+    assert man["deltas"] == {"2": ["snapshots/s00000002/data/_bucket=2"]}
+    assert {k: man["buckets"][k] for k in ("0", "1")} == {
+        k: f"snapshots/s00000002/data/_bucket={k}" for k in ("0", "1")
+    }
+    assert not os.path.exists(tmp_path / "t" / "snapshots" / "s00000002" / "delta_shared")
+    assert_state_equals_oracle(sink.read(), evs)
+
+
+def test_fold_bucket_the_batch_misses_keeps_its_state(spark, tmp_path):
+    # the fold set comes from the manifest, not the batch: a bucket at
+    # threshold - 1 folds even when this batch has no event for it
+    sink = _mor(spark, tmp_path / "t", mor_compact_threshold=3)
+    by_b = _keys_by_bucket(spark, sink)
+    a, b = by_b[0][:3], by_b[1][:3]
+    evs = []
+    for i in range(2):
+        evs += _batch(a + b, 100 * i, f"v{i}", op="I" if i == 0 else "U")
+        sink.apply_batch(feed_df(spark, evs[-6:]), i)
+    before_b = sink.read_keys([(c, 0) for c in b]).collect()
+    evs += _batch(a, 200, "v2")
+    sink.apply_batch(feed_df(spark, evs[-3:]), 2)
+    man = sink.current_manifest()
+    assert man["deltas"] == {}
+    assert man["buckets"]["1"] == "snapshots/s00000002/data/_bucket=1"
+    assert sorted(sink.read_keys([(c, 0) for c in b]).collect()) == sorted(before_b)
+    assert_state_equals_oracle(sink.read(), evs)
+
+
+def test_compact_write_plan_has_one_exchange(spark, tmp_path):
+    sink = _mor(spark, tmp_path / "t", mor_compact_threshold=100)
+    evs = []
+    for i in range(3):
+        evs += [ev("U" if i else "I", f"c{j}", 0, 10 * i + j, text=f"v{i}") for j in range(8)]
+        sink.apply_batch(feed_df(spark, evs[-8:]), i, delta_layout="single" if i == 1 else "bucketed")
+    plans, rep = _write_plans(sink.compact)
+    assert rep["delta_refs_folded"] >= 3
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1, plans[0]
+    assert "Join" not in plans[0], plans[0]
+    assert sink.current_manifest()["deltas"] == {}
+    assert_state_equals_oracle(sink.read(), evs)
+
+
+@pytest.mark.parametrize("crash", ["before_link", "before_flip"])
+def test_crash_in_folding_apply_commit(spark, tmp_path, monkeypatch, crash):
+    # fault injection at the fold: the fold's data is written, then the
+    # commit dies — before the manifest link (nothing committed: no
+    # partial base is visible, the retry re-folds, GC frees the dead
+    # claimed dir) or after it, before the _CURRENT flip (committed:
+    # the retry is a ledger skip)
+    import os
+
+    root = str(tmp_path / "t")
+    sink = _mor(spark, root, mor_compact_threshold=3)
+    evs = []
+    for i in range(2):
+        evs += [ev("U" if i else "I", f"c{j}", 0, 10 * i + j, text=f"v{i}") for j in range(8)]
+        sink.apply_batch(feed_df(spark, evs[-8:]), i)
+    head = sink.current_manifest()["_name"]
+    third = [ev("U", f"c{j}", 0, 100 + j, text="v2") for j in range(5)]
+
+    def boom(*a, **k):
+        raise RuntimeError("injected crash")
+
+    if crash == "before_link":
+        monkeypatch.setattr(sink, "_commit", boom)
+    else:
+        real_replace = os.replace
+
+        def replace(src, dst):
+            if str(dst).endswith("_CURRENT"):
+                boom()
+            return real_replace(src, dst)
+
+        monkeypatch.setattr(os, "replace", replace)
+    snaps = os.path.join(root, "snapshots")
+    dirs_before = set(os.listdir(snaps))
+    with pytest.raises(RuntimeError, match="injected"):
+        sink.apply_batch(feed_df(spark, third), 2)
+    monkeypatch.undo()
+    (claimed,) = set(os.listdir(snaps)) - dirs_before
+    assert _bucket_dirs(os.path.join(snaps, claimed))  # the fold was written
+
+    fresh = _mor(spark, root, mor_compact_threshold=3)
+    if crash == "before_link":
+        assert fresh.current_manifest()["_name"] == head
+        assert fresh.current_manifest()["deltas"]  # no partial base visible
+        assert_state_equals_oracle(fresh.read(), evs)
+    m = fresh.apply_batch(feed_df(spark, third), 2)
+    assert m.skipped == (crash == "before_flip")
+    assert fresh.current_manifest()["deltas"] == {}
+    assert_state_equals_oracle(fresh.read(), evs + third)
+    fresh.expire_snapshots(keep_manifests=1)
+    assert os.path.exists(os.path.join(snaps, claimed)) == (crash == "before_flip")
+    assert_state_equals_oracle(fresh.read(), evs + third)
+
+
+def test_expire_frees_unreferenced_bucket_dirs_in_live_snapshots(spark, tmp_path):
+    # buckets fold at different applies, so a snapshot dir can hold a
+    # live base beside a delta a later fold retired: GC frees the dead
+    # bucket dir and every retained manifest reads the same
+    import os
+
+    root = str(tmp_path / "t")
+    sink = _mor(spark, root, mor_compact_threshold=3)
+    by_b = _keys_by_bucket(spark, sink)
+    touch = [(0, 1), (0,), (0, 1), (1, 2), (0, 2), (1, 2, 3)]
+    evs = []
+    for i, bks in enumerate(touch):
+        evs += [ev("U" if i else "I", c, 0, 100 * i + j, text=f"v{i}")
+                for j, c in enumerate(c for k in bks for c in by_b[k][:2])]
+        sink.apply_batch(feed_df(spark, evs[len(evs) - 2 * len(bks):]), i)
+    keep = sorted(n for n in os.listdir(os.path.join(root, "manifests"))
+                  if n.endswith(".json"))[-2:]
+    sids = [int(n[1:9]) for n in keep]
+
+    def snapshot_rows():
+        return [sorted(map(tuple, sink.read(as_of_snapshot=s).collect())) for s in sids]
+
+    def dead_bucket_dirs(in_live_dirs=False):
+        live = set()
+        for s in sids:
+            man = sink.manifest_at(s)
+            live |= set(man["buckets"].values())
+            live |= {r for chain in man["deltas"].values() for r in chain}
+        live_dirs = {r.split("/")[1] for r in live}
+        return {
+            f"snapshots/{d}/{b}"
+            for d in os.listdir(os.path.join(root, "snapshots"))
+            if d in live_dirs or not in_live_dirs
+            for b in _bucket_dirs(os.path.join(root, "snapshots", d))
+        } - live
+
+    rows = snapshot_rows()
+    # e.g. bucket 1's delta in s2, retired when bucket 1 folded in s3,
+    # beside bucket 0's live base
+    assert "snapshots/s00000002/data/_bucket=1" in dead_bucket_dirs(in_live_dirs=True)
+    sink.expire_snapshots(keep_manifests=2)
+    assert dead_bucket_dirs() == set()
+    assert snapshot_rows() == rows
+    assert_state_equals_oracle(sink.read(), evs)

@@ -63,7 +63,7 @@ def test_batch_lineage_rows_match_pandas_counts(spark, tmp_path):
     events = [ev("I", f"c{i % 5}", i % 3, i) for i in range(40)] + [ev("D", "c1", 1, 50)]
     df = feed_df(spark, events)
     sink = SnapshotMergeSink(spark, str(tmp_path / "cow"), n_buckets=4)
-    ev_pd = df.select("conv_id", "turn_idx", "op_ts", sink._bucket_expr().alias("b")).toPandas()
+    ev_pd = df.select("conv_id", "turn_idx", "op_ts", F.expr(sink._bucket_sql()).alias("b")).toPandas()
     g = ev_pd.groupby("b")
     now_ms = 1_900_000_000_000
     exp = pd.DataFrame({

@@ -1,9 +1,12 @@
-"""Capture the PHYSICAL plan of the per-batch COW merge write (the
+"""Capture the PHYSICAL plan of the per-batch merge write (the
 engine-internal job bench times inside cdc_apply_* queries).
 
 The query functions only return the final table read, so their
 ``explain`` never shows the apply; this hooks DataFrameWriter.parquet
-to dump each write's plan during one 4-batch replay.
+to dump each write's plan during one 4-batch replay.  ``mor`` mode runs
+its sink at ``mor_compact_threshold=4``, so the 4th apply is the one
+that folds the delta chains: it keeps the 3rd (delta) and 4th (folding)
+apply's plans.
 
 Usage: python tools/capture_merge_plan.py <out_file> [cow|mor|audit|changes]
 """
@@ -47,6 +50,7 @@ def main() -> None:
         feed = with_batch_id(change_feed_from_events(spark, SF_DIR), 4).persist()
         kw: dict = {}
         write_mode = mode
+        threshold = 4 if mode == "mor" else 8
         if mode == "audit":
             write_mode = "cow"
             kw = {}
@@ -58,6 +62,7 @@ def main() -> None:
             tempfile.mkdtemp(prefix="plan_cap_"),
             n_buckets=16,
             write_mode=write_mode,
+            mor_compact_threshold=threshold,
             audit_timestamps=(mode == "audit"),
         )
         for b in range(4):
@@ -75,8 +80,9 @@ def main() -> None:
     finally:
         DataFrameWriter.parquet = orig
     # last batch's steady-state shape: "changes" mode writes two files
-    # per batch (change rows + snapshot) — keep both
-    keep = plans[-2:] if mode == "changes" else plans[-1:]
+    # per batch (change rows + snapshot) — keep both; "mor" keeps the
+    # last delta apply and the folding apply
+    keep = plans[-2:] if mode in ("changes", "mor") else plans[-1:]
     with open(out_file, "w") as fh:
         fh.write(f"# per-batch merge write plans ({mode}), sf={SF_DIR}\n")
         fh.write("\n\n".join(keep))
