@@ -249,13 +249,20 @@ WHERE floor((common::DOUBLE / (x.n_sh + y.n_sh - common)::DOUBLE) * 1000000.0) /
 # ------------------------------------------------------------- MinHash + LSH
 
 
-def _band_cols(k: int, bands: int, rows: int):
-    return [
-        F.md5(F.concat_ws("|", *[F.col(f"h{b * rows + r}") for r in range(rows)])).alias(
-            f"band{b}"
-        )
-        for b in range(bands)
-    ]
+def _band_rows(sig: DataFrame, bands: int, rows: int) -> DataFrame:
+    """Melt a signature frame (doc_id, h0..h{k-1}) into LSH band rows
+    (doc_id, band_idx, band_val): band b is the md5 of its ``rows``
+    consecutive signature values."""
+
+    def band(b: int):
+        return F.md5(F.concat_ws("|", *[F.col(f"h{b * rows + r}") for r in range(rows)]))
+
+    bv = F.array(
+        *[F.struct(F.lit(b).alias("band_idx"), band(b).alias("band_val")) for b in range(bands)]
+    )
+    return sig.select("doc_id", F.explode(bv).alias("bv")).select(
+        "doc_id", "bv.band_idx", "bv.band_val"
+    )
 
 
 def minhash_bands(
@@ -273,25 +280,7 @@ def minhash_bands(
     (``shingle_sets`` + ``_signature_cols``) instead of the two-shuffle
     explode→distinct→groupBy-min — value-identical (pinned by
     ``test_minhash_signature_projection_equals_groupby_min``)."""
-    sig = shingle_sets(docs).select("doc_id", *_signature_cols(k))
-    banded = sig.select("doc_id", *_band_cols(k, bands, rows))
-    return banded.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"), F.col(f"band{b}").alias("band_val")
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select(
-        "doc_id",
-        F.col("bv.band_idx").alias("band_idx"),
-        F.col("bv.band_val").alias("band_val"),
-    )
+    return _band_rows(shingle_sets(docs).select("doc_id", *_signature_cols(k)), bands, rows)
 
 
 def shingle_sets(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
@@ -369,21 +358,7 @@ def minhash_lsh_pairs(
     former plan re-exploded the corpus into (doc_id, shingle) rows four
     times (signature build, size join ×2, shared-shingle count join)."""
     sets = shingle_sets(docs)
-    sig = sets.select("doc_id", *_signature_cols(k))
-    banded = sig.select("doc_id", *_band_cols(k, bands, rows))
-    melted = banded.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"), F.col(f"band{b}").alias("band_val")
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("doc_id", F.col("bv.band_idx").alias("band_idx"), F.col("bv.band_val").alias("band_val"))
+    melted = _band_rows(sets.select("doc_id", *_signature_cols(k)), bands, rows)
     cand = (
         melted.alias("a")
         .join(melted.alias("b"), ["band_idx", "band_val"])

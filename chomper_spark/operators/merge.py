@@ -153,6 +153,32 @@ _RECENT_MAX = 100_000
 _SHARD_SIZE = 256
 _SHARD_MIN_BUCKETS = 1024
 _SHARD_SEQ = itertools.count()
+# The manifest format.  Every manifest, delta or checkpoint, carries
+# the HEAD keys (snapshot id, chain position, batch ledger, schema,
+# table properties); folding a delta adopts its head verbatim.  A
+# checkpoint also carries the state a delta edits: the schema history
+# (in a delta only when it changed) and the bucket, delta-chain and
+# change-dir maps (bucket/delta maps in shard files on wide tables).
+# ``_fold_by_name`` refuses a manifest that lacks any of them.
+_HEAD_KEYS = (
+    "snapshot_id", "chain_len", "batch_watermark", "recent_batches",
+    "schema", "key_cols", "bucket_cols", "n_buckets",
+)
+_CHECKPOINT_KEYS = (*_HEAD_KEYS, "schema_history", "buckets", "deltas", "changes")
+
+
+def _check_format(name: str, doc: dict, keys: tuple[str, ...]) -> dict:
+    """``doc`` if it carries every key in ``keys``; a manifest is input
+    from outside the program, so a missing key is refused here, before
+    any fold or apply reads it."""
+    missing = [k for k in keys if k not in doc]
+    if missing:
+        raise ValueError(
+            f"manifest {name} lacks {missing}: it was written in an older "
+            "format this engine does not read; the table needs a rewrite "
+            "into a new root"
+        )
+    return doc
 
 
 def _ledger_contains(manifest: dict | None, batch_id: int) -> bool:
@@ -160,12 +186,7 @@ def _ledger_contains(manifest: dict | None, batch_id: int) -> bool:
     not O(all batches ever committed)."""
     if manifest is None:
         return False
-    if "batch_watermark" in manifest:
-        return batch_id <= manifest["batch_watermark"] or batch_id in set(
-            manifest.get("recent_batches", ())
-        )
-    # raw v1 manifest (pre-fold); normalize_full usually precedes this
-    return batch_id in set(manifest.get("committed_batches", ()))
+    return batch_id <= manifest["batch_watermark"] or batch_id in manifest["recent_batches"]
 
 
 def _ledger_add(manifest: dict | None, batch_id: int) -> tuple[int, list[int]]:
@@ -173,7 +194,7 @@ def _ledger_add(manifest: dict | None, batch_id: int) -> tuple[int, list[int]]:
     watermark advances through any now-contiguous prefix, so recent
     stays empty under in-order epochs."""
     wm = manifest["batch_watermark"] if manifest else -1
-    recent = set(manifest.get("recent_batches", ())) if manifest else set()
+    recent = set(manifest["recent_batches"]) if manifest else set()
     recent.add(batch_id)
     while wm + 1 in recent:
         wm += 1
@@ -186,47 +207,27 @@ def _ledger_add(manifest: dict | None, batch_id: int) -> tuple[int, list[int]]:
     return wm, sorted(recent)
 
 
-def _normalize_full(raw: dict) -> dict:
-    """A checkpoint manifest as the fold base.  v1 manifests (round ≤3)
-    carried the full ``committed_batches`` list — contract it to the
-    bounded watermark+recent form once, at read."""
-    if "batch_watermark" not in raw:
-        ids = set(raw.get("committed_batches", ()))
-        wm = -1
-        while wm + 1 in ids:
-            wm += 1
-        raw["batch_watermark"] = wm
-        raw["recent_batches"] = sorted(i for i in ids if i > wm)
-    raw.setdefault("deltas", {})
-    raw.setdefault("chain_len", 0)
-    # pre-round-5 tables bucketed on the full key
-    if "key_cols" in raw:
-        raw.setdefault("bucket_cols", list(raw["key_cols"]))
-    # tables from before metadata-only evolution always rewrote every
-    # file on evolution, so all their files carry the current schema
-    raw.setdefault(
-        "schema_history", [{"from_snapshot": 0, "schema": raw["schema"]}]
-    )
-    return raw
+def _edited_keys(d: dict) -> set:
+    """The buckets a delta doc's map edits touch."""
+    return {
+        k for part in ("bucket_updates", "bucket_removals", "delta_sets", "delta_removals")
+        for k in d.get(part, ())
+    }
 
 
 def _apply_manifest_delta(base: dict, d: dict) -> dict:
     """Fold one delta manifest onto a resolved base.  Copies the maps
     it edits so a cached base is never aliased."""
     out = dict(base)
-    for k in ("snapshot_id", "batch_watermark", "recent_batches",
-              "schema", "key_cols", "n_buckets", "chain_len"):
-        out[k] = d[k]
-    if "bucket_cols" in d:  # absent in pre-round-5 delta manifests
-        out["bucket_cols"] = d["bucket_cols"]
+    out.update({k: d[k] for k in _HEAD_KEYS})
     if "schema_history" in d:  # present only on evolution commits
         out["schema_history"] = d["schema_history"]
-    buckets = dict(base.get("buckets", {}))
+    buckets = dict(base["buckets"])
     buckets.update(d.get("bucket_updates", {}))
     for k in d.get("bucket_removals", ()):
         buckets.pop(k, None)
     out["buckets"] = buckets
-    deltas = {k: list(v) for k, v in base.get("deltas", {}).items()}
+    deltas = {k: list(v) for k, v in base["deltas"].items()}
     deltas.update({k: list(v) for k, v in d.get("delta_sets", {}).items()})
     for k in d.get("delta_removals", ()):
         deltas.pop(k, None)
@@ -234,17 +235,10 @@ def _apply_manifest_delta(base: dict, d: dict) -> dict:
     # shard bookkeeping: which buckets changed since the base
     # checkpoint (drives which shard files the NEXT checkpoint must
     # rewrite), and the base's shard map (what it can reuse)
-    dirty = set(base.get("_dirty_buckets", ()))
-    dirty.update(d.get("bucket_updates", {}))
-    dirty.update(d.get("bucket_removals", ()))
-    dirty.update(d.get("delta_sets", {}))
-    dirty.update(d.get("delta_removals", ()))
-    out["_dirty_buckets"] = dirty
-    out["_shard_map"] = dict(base.get("_shard_map", {}))
-    if "changes" in base or d.get("changes_updates"):
-        changes = dict(base.get("changes", {}))
-        changes.update(d.get("changes_updates", {}))
-        out["changes"] = changes
+    out["_dirty_buckets"] = base["_dirty_buckets"] | _edited_keys(d)
+    out["_shard_map"] = dict(base["_shard_map"])
+    if d.get("changes_updates"):
+        out["changes"] = {**base["changes"], **d["changes_updates"]}
     return out
 
 
@@ -399,9 +393,9 @@ class SnapshotMergeSink:
         # exists, the on-disk values win.
         m = self.current_manifest()
         if m is not None:
-            self.n_buckets = int(m.get("n_buckets", self.n_buckets))
-            self.key_cols = list(m.get("key_cols", self.key_cols))
-            self.bucket_cols = list(m.get("bucket_cols", self.key_cols))
+            self.n_buckets = int(m["n_buckets"])
+            self.key_cols = list(m["key_cols"])
+            self.bucket_cols = list(m["bucket_cols"])
 
     # ---------------------------------------------------------- manifest io
 
@@ -445,7 +439,9 @@ class SnapshotMergeSink:
         its delta chain onto the nearest checkpoint (≤ _CHECKPOINT_EVERY
         file reads; one cached fold makes the steady-state cost O(1)
         per commit).  The folded dict carries ``_name`` for delta-commit
-        parent linkage; it is never written to disk."""
+        parent linkage; it is never written to disk.  Every manifest
+        loaded is checked against the format (``_check_format``) before
+        anything folds it."""
         cached = getattr(self, "_fold_cache", None)
         if cached and cached[0] == name:
             return cached[1]
@@ -457,9 +453,9 @@ class SnapshotMergeSink:
                 break
             raw = self._load_raw(cur)
             if not raw.get("delta"):
-                base = self._expand_checkpoint(_normalize_full(raw))
+                base = self._expand_checkpoint(cur, raw)
                 break
-            chain.append(raw)
+            chain.append(_check_format(cur, raw, _HEAD_KEYS))
             cur = raw["parent"]
         for d in reversed(chain):
             base = _apply_manifest_delta(base, d)
@@ -485,16 +481,6 @@ class SnapshotMergeSink:
                 self._fold_cache = None
                 continue
         return self._fold_by_name(self._current_name())
-
-    def committed_batches(self) -> set:
-        """Diagnostic helper (tests / small tables): MATERIALIZES the
-        committed-id set from the bounded watermark+recent ledger —
-        O(watermark), so never call it on a long-lived production
-        table; use ``_ledger_contains`` for membership."""
-        m = self.current_manifest()
-        if m is None:
-            return set()
-        return set(range(m["batch_watermark"] + 1)) | set(m.get("recent_batches", ()))
 
     def _write_manifest(self, doc: dict) -> str:
         """Publish a manifest with a compare-and-swap.
@@ -571,47 +557,42 @@ class SnapshotMergeSink:
             except FileExistsError:
                 nxt += 1
 
-    def _expand_checkpoint(self, base: dict) -> dict:
-        """Materialize a checkpoint's bucket/delta maps: sharded
-        checkpoints (wide tables) load their referenced shard files;
-        inline checkpoints pass through.  Either way the folded state
-        starts with an empty dirty set and the checkpoint's shard map."""
-        if "bucket_shards" in base:
-            buckets: dict[str, str] = {}
-            deltas: dict[str, list] = {}
-            for rel in base["bucket_shards"].values():
+    def _expand_checkpoint(self, name: str, raw: dict) -> dict:
+        """The folded state of checkpoint ``name``: exactly its
+        ``_CHECKPOINT_KEYS`` (checked), with a sharded checkpoint's
+        (wide table's) bucket/delta maps loaded from its shard files,
+        plus an empty dirty set and the checkpoint's shard map."""
+        shard_map = raw.pop("bucket_shards", None)
+        if shard_map is not None:
+            raw["buckets"], raw["deltas"] = {}, {}
+            for rel in shard_map.values():
                 with open(os.path.join(self.root, "manifests", rel)) as fh:
                     sh = json.load(fh)
-                buckets.update(sh.get("buckets", {}))
-                deltas.update(sh.get("deltas", {}))
-            base["buckets"] = buckets
-            base["deltas"] = deltas
-            # keep shard linkage only in the private bookkeeping key —
-            # a folded dict later passed as a checkpoint's new_full must
-            # not leak a stale on-disk shard map
-            base["_shard_map"] = dict(base.pop("bucket_shards"))
-        else:
-            base["_shard_map"] = {}
-        base["_dirty_buckets"] = set()
-        return base
+                raw["buckets"].update(sh.get("buckets", {}))
+                raw["deltas"].update(sh.get("deltas", {}))
+        _check_format(name, raw, _CHECKPOINT_KEYS)
+        return {
+            **{k: raw[k] for k in _CHECKPOINT_KEYS},
+            "_shard_map": shard_map or {},
+            "_dirty_buckets": set(),
+        }
 
-    def _maybe_shard_checkpoint(
-        self,
-        doc: dict,
-        new_full: dict,
-        prev_map: dict,
-        dirty_keys: set | None,
-    ) -> None:
-        """On wide tables, move a checkpoint ``doc``'s bucket/delta
-        maps into per-range shard files, rewriting ONLY the shards
-        containing ``dirty_keys`` (None = unknown → rewrite all) and
-        carrying clean shards forward from ``prev_map`` by reference.
-        Mutates ``doc`` (and ``new_full``'s shard bookkeeping)."""
-        if int(new_full["n_buckets"]) < _SHARD_MIN_BUCKETS:
-            new_full["_shard_map"] = {}
-            new_full["_dirty_buckets"] = set()
-            return
-        n_shards = -(-int(new_full["n_buckets"]) // _SHARD_SIZE)
+    def _checkpoint_doc(
+        self, full: dict, prev_map: dict, dirty_keys: set | None
+    ) -> dict:
+        """The checkpoint doc of ``full`` (a complete manifest at
+        ``chain_len`` 0): its ``_CHECKPOINT_KEYS``.  On wide tables the
+        bucket/delta maps move into per-range shard files, rewriting
+        ONLY the shards containing ``dirty_keys`` (None = unknown →
+        rewrite all) and carrying clean shards forward from
+        ``prev_map`` by reference.  Resets ``full``'s shard
+        bookkeeping to match the doc."""
+        doc = {"format": 2, **{k: full[k] for k in _CHECKPOINT_KEYS}}
+        full["_dirty_buckets"] = set()
+        if int(full["n_buckets"]) < _SHARD_MIN_BUCKETS:
+            full["_shard_map"] = {}
+            return doc
+        n_shards = -(-int(full["n_buckets"]) // _SHARD_SIZE)
         if not prev_map or dirty_keys is None:
             dirty_shards = set(range(n_shards))
         else:
@@ -621,17 +602,12 @@ class SnapshotMergeSink:
         }
         sdir = os.path.join(self.root, "manifests", "shards")
         os.makedirs(sdir, exist_ok=True)
-        buckets = new_full.get("buckets", {})
-        deltas = new_full.get("deltas", {})
         by_shard: dict[int, dict] = {}
-        for k, v in buckets.items():
-            s = int(k) // _SHARD_SIZE
-            if s in dirty_shards:
-                by_shard.setdefault(s, {"buckets": {}, "deltas": {}})["buckets"][k] = v
-        for k, v in deltas.items():
-            s = int(k) // _SHARD_SIZE
-            if s in dirty_shards:
-                by_shard.setdefault(s, {"buckets": {}, "deltas": {}})["deltas"][k] = v
+        for part in ("buckets", "deltas"):
+            for k, v in doc.pop(part).items():
+                s = int(k) // _SHARD_SIZE
+                if s in dirty_shards:
+                    by_shard.setdefault(s, {"buckets": {}, "deltas": {}})[part][k] = v
         for s, content in sorted(by_shard.items()):
             # name must be unique across concurrent writers racing the
             # same commit position (pid) and across same-process
@@ -644,11 +620,9 @@ class SnapshotMergeSink:
             with open(os.path.join(sdir, fname), "w") as fh:
                 json.dump(content, fh)
             shard_map[str(s)] = f"shards/{fname}"
-        doc.pop("buckets", None)
-        doc.pop("deltas", None)
         doc["bucket_shards"] = shard_map
-        new_full["_shard_map"] = dict(shard_map)
-        new_full["_dirty_buckets"] = set()
+        full["_shard_map"] = dict(shard_map)
+        return doc
 
     def _commit(
         self,
@@ -658,93 +632,72 @@ class SnapshotMergeSink:
         force_full: bool = False,
         touched_keys: set | None = None,
     ) -> None:
-        """Commit ``new_full`` (the complete logical manifest).
+        """Commit ``new_full``: the next manifest's ledger, schema,
+        ``schema_history`` and bucket/delta/change maps.  The snapshot
+        id (parent's + 1), ``chain_len`` and the table properties are
+        filled in here, for every commit.
 
-        With a ``delta_doc`` and an eligible parent, only the delta —
-        O(touched buckets) — is written; every _CHECKPOINT_EVERY
-        commits, and for every full-rewrite operation (truncate,
-        compact, schema evolution, legacy-v1 upgrade), a checkpoint is
-        written instead.  Either way the in-memory folded state is
-        installed into the fold cache, so the next ``apply_batch``
-        re-reads nothing."""
-        chain_len = 0 if parent is None else parent.get("chain_len", 0) + 1
+        With a ``delta_doc`` and a parent, only the delta — O(touched
+        buckets) — is written, and it carries ``schema_history`` only
+        when the history changed; every _CHECKPOINT_EVERY commits, and
+        for every full-rewrite operation (``force_full``: truncate,
+        compact), a checkpoint is written instead.  Either way the
+        in-memory folded state is installed into the fold cache, so the
+        next ``apply_batch`` re-reads nothing."""
+        chain_len = 0 if parent is None else parent["chain_len"] + 1
         as_delta = (
             not force_full
             and delta_doc is not None
             and parent is not None
-            and parent.get("_name")
             and chain_len <= _CHECKPOINT_EVERY
+        )
+        new_full.update(
+            snapshot_id=parent["snapshot_id"] + 1 if parent else 0,
+            chain_len=chain_len if as_delta else 0,
+            key_cols=self.key_cols,
+            bucket_cols=self.bucket_cols,
+            n_buckets=self.n_buckets,
         )
         # keys this commit touches (for shard dirtiness): derivable from
         # the delta_doc when present, else supplied by maintenance ops
         if delta_doc is not None and touched_keys is None:
-            touched_keys = set()
-            touched_keys.update(delta_doc.get("bucket_updates", {}))
-            touched_keys.update(delta_doc.get("bucket_removals", ()))
-            touched_keys.update(delta_doc.get("delta_sets", {}))
-            touched_keys.update(delta_doc.get("delta_removals", ()))
+            touched_keys = _edited_keys(delta_doc)
         if as_delta:
             doc = {
                 "format": 2,
                 "delta": True,
                 "parent": parent["_name"],
-                "chain_len": chain_len,
-                **{
-                    k: new_full[k]
-                    for k in (
-                        "snapshot_id", "batch_watermark", "recent_batches",
-                        "schema", "key_cols", "bucket_cols", "n_buckets",
-                    )
-                },
+                **{k: new_full[k] for k in _HEAD_KEYS},
                 **delta_doc,
             }
-            new_full["_shard_map"] = dict(parent.get("_shard_map", {}))
-            new_full["_dirty_buckets"] = (
-                set(parent.get("_dirty_buckets", ())) | touched_keys
-            )
+            if new_full["schema_history"] != parent["schema_history"]:
+                doc["schema_history"] = new_full["schema_history"]
+            new_full["_shard_map"] = dict(parent["_shard_map"])
+            new_full["_dirty_buckets"] = parent["_dirty_buckets"] | touched_keys
         else:
-            chain_len = 0
-            # overrides AFTER the spread so a chain_len/delta/parent key
-            # in new_full (e.g. a caller passing a folded manifest) can
-            # never leak into a checkpoint
-            doc = {
-                **{k: v for k, v in new_full.items() if not k.startswith("_")},
-                "format": 2,
-                "chain_len": 0,
-            }
-            doc.pop("delta", None)
-            doc.pop("parent", None)
-            doc.pop("bucket_shards", None)
             dirty = (
-                set(parent.get("_dirty_buckets", ())) | touched_keys
+                parent["_dirty_buckets"] | touched_keys
                 if parent is not None and touched_keys is not None
                 else None
             )
-            self._maybe_shard_checkpoint(
-                doc, new_full,
-                dict(parent.get("_shard_map", {})) if parent else {},
-                dirty,
-            )
+            doc = self._checkpoint_doc(new_full, parent["_shard_map"] if parent else {}, dirty)
         name = self._write_manifest(doc)
-        new_full["chain_len"] = chain_len
         new_full["_name"] = name
         self._fold_cache = (name, new_full)
 
-    def _next_schema_history(
-        self, manifest: dict | None, evolved: bool, snap_id: int, schema_json: str
-    ) -> list[dict]:
-        """schema_history for the next commit: append an entry only on
-        evolution (bounded by the number of evolutions ever, not by
-        commits)."""
-        if manifest is None:
-            return [{"from_snapshot": snap_id, "schema": schema_json}]
-        history = list(
-            manifest.get("schema_history")
-            or [{"from_snapshot": 0, "schema": manifest["schema"]}]
-        )
-        if evolved:
-            history.append({"from_snapshot": snap_id, "schema": schema_json})
-        return history
+    def _next_schema(
+        self, manifest: dict | None, evolved: bool, dir_id: int, state_schema: T.StructType
+    ) -> dict:
+        """``schema`` and ``schema_history`` for an apply's commit.  The
+        history appends an entry only on evolution (bounded by the
+        number of evolutions ever, not by commits), keyed by the
+        DATA-DIR id ``_schema_for_rel`` parses out of file paths, not by
+        the commit id."""
+        schema_json = json.dumps(state_schema.jsonValue())
+        history = manifest["schema_history"] if manifest else []
+        if evolved or manifest is None:
+            history = [*history, {"from_snapshot": dir_id, "schema": schema_json}]
+        return {"schema": schema_json, "schema_history": history}
 
     # ------------------------------------------------------------- reading
 
@@ -817,15 +770,13 @@ class SnapshotMergeSink:
         py4j call, not several per Column op)."""
         cur_json = manifest["schema"]
         schema = T.StructType.fromJson(json.loads(cur_json))
-        history = manifest.get(
-            "schema_history", [{"from_snapshot": 0, "schema": cur_json}]
-        )
+        history = manifest["schema_history"]
         multi_version = len({h["schema"] for h in history}) > 1
 
         def rel_schema(rel: str) -> str:
             return _schema_for_rel(history, rel) if multi_version else cur_json
 
-        deltas = manifest.get("deltas", {})
+        deltas = manifest["deltas"]
         by_schema: dict[str, list[str]] = {}  # schema json → rel paths
         shared: dict[str, set[int]] = {}  # shared rel path → referencing buckets
         for k in buckets:
@@ -884,7 +835,7 @@ class SnapshotMergeSink:
         """State rows of the given buckets: ``_scan_buckets``, reduced
         latest-wins per key by applied version when a chain has deltas."""
         df = self._scan_buckets(manifest, buckets)
-        deltas = manifest.get("deltas", {})
+        deltas = manifest["deltas"]
         if df is None or not any(deltas.get(str(k)) for k in buckets):
             return df
         return dedup_latest_agg(df, self.key_cols, [S.META_OP_TS, S.META_BATCH_SEQ])
@@ -906,9 +857,7 @@ class SnapshotMergeSink:
         )
         if m is None:
             return None
-        all_buckets = {int(k) for k in m["buckets"]} | {
-            int(k) for k in m.get("deltas", {})
-        }
+        all_buckets = {int(k) for k in m["buckets"]} | {int(k) for k in m["deltas"]}
         out = self._read_buckets(m, sorted(all_buckets))
         if out is None:
             schema = T.StructType.fromJson(json.loads(m["schema"]))
@@ -1010,42 +959,13 @@ class SnapshotMergeSink:
         exporters.py:304-333).  Only change dirs referenced by the
         CURRENT manifest are visible (commit-atomic with the table
         state; truncate clears them).  None if no committed changes."""
-        rels = sorted(self._changes_map(self.current_manifest()).values())
+        m = self.current_manifest()
+        rels = sorted(m["changes"].values()) if m else []
         if not rels:
             return None
         return self.spark.read.parquet(
             *[os.path.join(self.root, rel) for rel in rels]
         )
-
-    def _changes_map(self, manifest: dict | None, for_gc: bool = False) -> dict:
-        """Visible change dirs for a manifest.  Manifests written before
-        the 'changes' key existed reference nothing explicitly — fall
-        back to on-disk dirs (legacy migration; the next commit
-        backfills the key), but only admit dirs whose batch_id is in the
-        committed ledger: a crash between the pre-commit change-rows
-        write and the _CURRENT flip must not make that uncommitted
-        batch's rows visible (commit atomicity).  ``for_gc=True`` keeps
-        the unfiltered fallback so retention never deletes a legacy dir
-        it cannot prove dead."""
-        if manifest is None:
-            return {}
-        if "changes" in manifest:
-            return manifest["changes"]
-        cdir = os.path.join(self.root, "changes")
-        if not os.path.isdir(cdir):
-            return {}
-        all_dirs = {
-            d.split("=", 1)[1]: f"changes/{d}"
-            for d in sorted(os.listdir(cdir))
-            if "=" in d
-        }
-        if for_gc:
-            return all_dirs
-        return {
-            b: rel
-            for b, rel in all_dirs.items()
-            if b.lstrip("-").isdigit() and _ledger_contains(manifest, int(b))
-        }
 
     # ------------------------------------------------------------- merging
 
@@ -1372,7 +1292,6 @@ class SnapshotMergeSink:
         # -- write the new snapshot (only touched buckets) under a
         # claimed dir; commit id (manifest position) is decoupled —
         # see _claim_snapshot_dir
-        snap_id = (manifest["snapshot_id"] + 1) if manifest else 0
         dir_id, _ = self._claim_snapshot_dir()
         rel_data = f"snapshots/s{dir_id:08d}/data"
         out_path = os.path.join(self.root, rel_data)
@@ -1414,7 +1333,7 @@ class SnapshotMergeSink:
             }
 
         buckets = dict(manifest["buckets"]) if manifest else {}
-        deltas = dict(manifest.get("deltas", {})) if manifest else {}
+        deltas = dict(manifest["deltas"]) if manifest else {}
         # the stats pass and the write each evaluate the batch; a bucket
         # only the write produced had no target rows read, so committing
         # it would drop that bucket's state
@@ -1444,42 +1363,26 @@ class SnapshotMergeSink:
         # parquet write above happens pre-commit, so a crash before the
         # _CURRENT flip leaves an unreferenced (invisible) dir, never a
         # phantom change row for an uncommitted batch
-        legacy = manifest is not None and "changes" not in manifest
-        changes_map = dict(self._changes_map(manifest))
+        changes_map = dict(manifest["changes"]) if manifest else {}
         changes_updates: dict[str, str] = {}
         if changes_written:  # first-ever batch has no pre-image → no dir
             changes_map[str(batch_id)] = f"changes/batch_id={batch_id}"
             changes_updates[str(batch_id)] = changes_map[str(batch_id)]
-        schema_json = json.dumps(state_schema.jsonValue())
-        # schema history epochs are keyed by DATA-DIR id (what
-        # _schema_for_rel parses out of file paths), not commit id
-        history = self._next_schema_history(manifest, evolved, dir_id, schema_json)
-        delta_doc = {
-            "bucket_updates": bucket_updates,
-            "delta_removals": delta_removals,
-            "changes_updates": changes_updates,
-        }
-        if evolved:  # fold must adopt the appended history
-            delta_doc["schema_history"] = history
         self._commit(
             {
-                "snapshot_id": snap_id,
                 "batch_watermark": wm,
                 "recent_batches": recent,
                 "buckets": buckets,
                 "deltas": deltas,
                 "changes": changes_map,
-                "schema": schema_json,
-                "schema_history": history,
-                "key_cols": self.key_cols,
-                "bucket_cols": self.bucket_cols,
-                "n_buckets": self.n_buckets,
+                **self._next_schema(manifest, evolved, dir_id, state_schema),
             },
             parent=manifest,
-            delta_doc=delta_doc,
-            # a legacy-v1 parent needs its on-disk-scanned changes map
-            # materialized once
-            force_full=legacy,
+            delta_doc={
+                "bucket_updates": bucket_updates,
+                "delta_removals": delta_removals,
+                "changes_updates": changes_updates,
+            },
         )
         return metrics
 
@@ -1514,9 +1417,8 @@ class SnapshotMergeSink:
         base∪deltas equal the COW table at every point.  The write runs
         in the caller's session conf, AQE on: a repartition with an
         explicit count is never coalesced, so AQE re-plans nothing."""
-        snap_id = (manifest["snapshot_id"] + 1) if manifest else 0
         dir_id, _ = self._claim_snapshot_dir()
-        deltas = {k: list(v) for k, v in (manifest or {}).get("deltas", {}).items()}
+        deltas = {k: list(v) for k, v in manifest["deltas"].items()} if manifest else {}
         fold = sorted(int(k) for k, v in deltas.items() if len(v) + 1 >= self.mor_compact_threshold)
         shared = delta_layout == "single" and not fold
         rel = f"snapshots/s{dir_id:08d}/" + ("delta_shared" if shared else "data")
@@ -1548,28 +1450,18 @@ class SnapshotMergeSink:
             chain.append(rel if shared else f"{rel}/{_BUCKET}={k}")
             delta_sets[str(k)] = list(chain)
         delta_doc["delta_sets"] = delta_sets
-        schema_json = json.dumps(state_schema.jsonValue())
-        history = self._next_schema_history(manifest, evolved, dir_id, schema_json)
-        if evolved:
-            delta_doc["schema_history"] = history
         wm, recent = _ledger_add(manifest, batch_id)
         self._commit(
             {
-                "snapshot_id": snap_id,
                 "batch_watermark": wm,
                 "recent_batches": recent,
                 "buckets": buckets,
                 "deltas": deltas,
-                "changes": dict(self._changes_map(manifest)),
-                "schema": schema_json,
-                "schema_history": history,
-                "key_cols": self.key_cols,
-                "bucket_cols": self.bucket_cols,
-                "n_buckets": self.n_buckets,
+                "changes": manifest["changes"] if manifest else {},
+                **self._next_schema(manifest, evolved, dir_id, state_schema),
             },
             parent=manifest,
             delta_doc=delta_doc,
-            force_full=manifest is not None and "changes" not in manifest,  # legacy v1
         )
         return metrics
 
@@ -1628,23 +1520,22 @@ class SnapshotMergeSink:
         if m is None:
             return {"exists": False, "root": self.root}
         schema = T.StructType.fromJson(json.loads(m["schema"]))
-        history = m.get("schema_history") or []
         return {
             "exists": True,
             "root": self.root,
             "snapshot_id": m["snapshot_id"],
             "batch_watermark": m["batch_watermark"],
-            "out_of_order_batches": len(m.get("recent_batches", ())),
-            "manifest_chain_len": m.get("chain_len", 0),
+            "out_of_order_batches": len(m["recent_batches"]),
+            "manifest_chain_len": m["chain_len"],
             "n_buckets": self.n_buckets,
             "key_cols": list(self.key_cols),
             "bucket_cols": list(self.bucket_cols),
             "live_buckets": len(m["buckets"]),
-            "delta_chains": len(m.get("deltas", {})),
-            "delta_refs": sum(len(v) for v in m.get("deltas", {}).values()),
-            "schema_versions_live": len({h["schema"] for h in history} or {m["schema"]}),
+            "delta_chains": len(m["deltas"]),
+            "delta_refs": sum(len(v) for v in m["deltas"].values()),
+            "schema_versions_live": len({h["schema"] for h in m["schema_history"]}),
             "columns": [f_.name for f_ in schema.fields],
-            "change_batches_visible": len(self._changes_map(m)),
+            "change_batches_visible": len(m["changes"]),
         }
 
     def compact(self, upgrade_schema: bool = False) -> dict:
@@ -1673,9 +1564,9 @@ class SnapshotMergeSink:
         manifest = self.current_manifest()
         if manifest is None:
             return {"buckets_compacted": 0, "delta_refs_folded": 0}
-        deltas = manifest.get("deltas", {})
+        deltas = manifest["deltas"]
         to_compact_set = {int(k) for k in deltas}
-        history = manifest.get("schema_history") or []
+        history = manifest["schema_history"]
         if upgrade_schema and len({h["schema"] for h in history}) > 1:
             latest_from = history[-1]["from_snapshot"]
             for k, rel in manifest["buckets"].items():
@@ -1685,8 +1576,8 @@ class SnapshotMergeSink:
             return {"buckets_compacted": 0, "delta_refs_folded": 0}
         to_compact = sorted(to_compact_set)
         n_refs = sum(len(v) for v in deltas.values())
-        state_schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-        snap_id = manifest["snapshot_id"] + 1
+        schema_json = manifest["schema"]
+        state_schema = T.StructType.fromJson(json.loads(schema_json))
         dir_id, _ = self._claim_snapshot_dir()
         rel = f"snapshots/s{dir_id:08d}/data"
         written, _ = self._fold_write(
@@ -1696,31 +1587,21 @@ class SnapshotMergeSink:
         )
         buckets = dict(manifest["buckets"])
         _swap_in_bases(buckets, dict(deltas), to_compact, written, rel)
-        schema_json = json.dumps(state_schema.jsonValue())
         if upgrade_schema:
             # every live file now carries the current schema (old-schema
             # buckets and all delta chains were just rewritten) — the
             # history collapses, so it cannot grow over years of
             # evolutions
             history = [{"from_snapshot": 0, "schema": schema_json}]
-        else:
-            history = list(
-                manifest.get("schema_history")
-                or [{"from_snapshot": 0, "schema": schema_json}]
-            )
         self._commit(
             {
-                "snapshot_id": snap_id,
                 "batch_watermark": manifest["batch_watermark"],
-                "recent_batches": list(manifest.get("recent_batches", ())),
+                "recent_batches": manifest["recent_batches"],
                 "buckets": buckets,
                 "deltas": {},
-                "changes": dict(self._changes_map(manifest)),
+                "changes": manifest["changes"],
                 "schema": schema_json,
                 "schema_history": history,
-                "key_cols": self.key_cols,
-                "bucket_cols": self.bucket_cols,
-                "n_buckets": self.n_buckets,
             },
             parent=manifest,
             force_full=True,  # maintenance rewrite → natural checkpoint
@@ -1789,32 +1670,17 @@ class SnapshotMergeSink:
             if not raw.get("delta"):
                 continue
             folded = self._fold_by_name(name)
-            # overrides AFTER the spread: the folded dict carries the
-            # delta's chain_len, which must not leak into a checkpoint
-            doc = {
-                **{k: v for k, v in folded.items() if not k.startswith("_")},
-                "format": 2,
-                "chain_len": 0,
-            }
-            doc.pop("delta", None)
-            doc.pop("parent", None)
             # wide tables: the rewrite checkpoints shard too — only the
             # shards dirtied since the chain's base are rewritten
-            rewrite_state = dict(folded)
-            self._maybe_shard_checkpoint(
-                doc,
-                rewrite_state,
-                dict(folded.get("_shard_map", {})),
-                set(folded.get("_dirty_buckets", ())),
+            rewrite_state = {**folded, "chain_len": 0}
+            doc = self._checkpoint_doc(
+                rewrite_state, folded["_shard_map"], folded["_dirty_buckets"]
             )
             mpath = os.path.join(mdir, name)
             with open(mpath + ".tmp", "w") as fh:
                 json.dump(doc, fh)
             os.replace(mpath + ".tmp", mpath)
-            self._fold_cache = (
-                name,
-                {**rewrite_state, "chain_len": 0, "_name": name},
-            )
+            self._fold_cache = (name, rewrite_state)
         live_rels: set[str] = set()  # referenced data paths
         live_changes: set[str] = set()
         live_shards: set[str] = set()
@@ -1824,11 +1690,11 @@ class SnapshotMergeSink:
             except (FileNotFoundError, json.JSONDecodeError):
                 continue
             live_rels.update(man["buckets"].values())
-            for chain in man.get("deltas", {}).values():
+            for chain in man["deltas"].values():
                 live_rels.update(chain)
-            for rel in self._changes_map(man, for_gc=True).values():
+            for rel in man["changes"].values():
                 live_changes.add(rel.split("/", 1)[1])  # changes/<dir>
-            live_shards.update(man.get("_shard_map", {}).values())
+            live_shards.update(man["_shard_map"].values())
         # snapshots/<sid>/...: a dir id is a claim, not a commit id, so
         # only referenced paths make a dir live
         live_snapshots = {rel.split("/")[1] for rel in live_rels}
@@ -1942,7 +1808,7 @@ class SnapshotMergeSink:
             wm, recent = _ledger_add(manifest, batch_id)
         else:
             wm = manifest["batch_watermark"] if manifest else -1
-            recent = list(manifest.get("recent_batches", ())) if manifest else []
+            recent = manifest["recent_batches"] if manifest else []
         schema = (
             manifest["schema"]
             if manifest
@@ -1954,9 +1820,8 @@ class SnapshotMergeSink:
         )
         self._commit(
             {
-                "snapshot_id": (manifest["snapshot_id"] + 1) if manifest else 0,
                 "batch_watermark": wm,
-                "recent_batches": list(recent),
+                "recent_batches": recent,
                 "buckets": {},
                 "deltas": {},
                 # full refresh also resets the visible change history —
@@ -1965,10 +1830,8 @@ class SnapshotMergeSink:
                 "schema": schema,
                 # no live files → single-version history
                 "schema_history": [{"from_snapshot": 0, "schema": schema}],
-                "key_cols": self.key_cols,
-                "bucket_cols": self.bucket_cols,
-                "n_buckets": self.n_buckets,
             },
+            parent=manifest,
             force_full=True,  # the reset must not be expressed as a delta
         )
 

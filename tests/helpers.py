@@ -64,3 +64,32 @@ def jobs_and_result(spark, fn):
     start = dag.nextJobId()
     out = fn()
     return dag.nextJobId() - start, out
+
+
+def committed_batches(sink) -> set:
+    """The committed batch ids of ``sink``'s HEAD, materialized from the
+    bounded watermark + out-of-order ledger — O(watermark), for small
+    test tables only."""
+    m = sink.current_manifest()
+    if m is None:
+        return set()
+    return set(range(m["batch_watermark"] + 1)) | set(m["recent_batches"])
+
+
+def write_plans(fn):
+    """(physical plans of every parquet write ``fn`` runs, its result)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans: list[str] = []
+    orig = DataFrameWriter.parquet
+
+    def hooked(self, path, **kw):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return orig(self, path, **kw)
+
+    DataFrameWriter.parquet = hooked
+    try:
+        out = fn()
+    finally:
+        DataFrameWriter.parquet = orig
+    return plans, out

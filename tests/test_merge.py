@@ -12,7 +12,9 @@ import pandas as pd
 import pytest
 
 from chomper_spark.operators.merge import IcebergMergeSink, SnapshotMergeSink
-from tests.helpers import assert_state_equals_oracle, ev, feed_df, jobs_and_result
+from tests.helpers import (
+    assert_state_equals_oracle, committed_batches, ev, feed_df, jobs_and_result,
+)
 
 
 def test_single_batch_upsert_matches_oracle(spark, tmp_table):
@@ -185,7 +187,7 @@ def test_resume_with_fresh_sink_instance_cross_restart(spark, tmp_table):
     del sink1
 
     sink2 = SnapshotMergeSink(spark, tmp_table, n_buckets=4)
-    assert sink2.committed_batches() == {0, 1}
+    assert committed_batches(sink2) == {0, 1}
     ms = [
         sink2.apply_batch(feed_df(spark, b), i)
         for i, b in enumerate([b0, b1, b2])
@@ -208,7 +210,7 @@ def test_truncate_empties_table_and_is_replay_safe(spark, tmp_table):
     sink.apply_batch(feed_df(spark, [ev("I", "c1", 0, 1), ev("I", "c2", 0, 2)]), 0)
     sink.truncate(batch_id=1)
     assert sink.read().count() == 0
-    assert sink.committed_batches() == {0, 1}
+    assert committed_batches(sink) == {0, 1}
     snap = sink.current_manifest()["snapshot_id"]
     sink.truncate(batch_id=1)  # replayed truncation is a no-op
     assert sink.current_manifest()["snapshot_id"] == snap
@@ -506,7 +508,7 @@ def test_batch_changed_between_passes_is_refused(spark, tmp_table, monkeypatch):
     monkeypatch.setattr(sink, "_bucket_stats", lambda df: stats(df)[1:])
     with pytest.raises(RuntimeError, match="changed between"):
         sink.apply_batch(feed_df(spark, [ev("U", f"c{i}", 0, 100 + i) for i in range(16)]), 1)
-    assert sink.committed_batches() == {0}
+    assert committed_batches(sink) == {0}
     assert_state_equals_oracle(sink.read(), first)
 
 
@@ -639,44 +641,72 @@ def test_changes_commit_atomic_and_truncate_clears(spark, tmp_table):
     assert not os.path.exists(orphan)
 
 
-def test_legacy_manifest_change_dirs_gated_by_ledger(spark, tmp_table):
-    # manifests written before the 'changes' key existed fall back to
-    # on-disk dirs — but an uncommitted batch's dir (crash between the
-    # change-rows write and the _CURRENT flip) must stay invisible,
-    # while GC retention still treats it conservatively as live
+def test_every_commit_kind_writes_the_one_manifest_format(spark, tmp_path):
+    # one commit of each kind; after each, a fresh sink folds HEAD from
+    # disk to exactly the writer's cached fold, and every manifest on
+    # disk carries the format's keys.  A checkpoint that lacks one is
+    # refused on open with an error naming it, not folded partway.
     import json
     import os
 
-    sink = SnapshotMergeSink(spark, tmp_table, n_buckets=2)
-    kw = dict(listen_fields=("text",), emit_change_rows=True)
-    sink.apply_batch(feed_df(spark, [ev("I", "c1", 0, 1, text="a")]), batch_id=0, **kw)
-    sink.apply_batch(feed_df(spark, [ev("U", "c1", 0, 2, text="b")]), batch_id=1, **kw)
-    # simulate a legacy table: strip the 'changes' key from the manifest
-    with open(os.path.join(tmp_table, "_CURRENT")) as fh:
-        name = fh.read().strip()
-    mpath = os.path.join(tmp_table, "manifests", name)
-    # write a faithful v1-shaped manifest in its place: full maps, the
-    # complete committed-id list, no changes key, no v2 fields
-    man = {k: v for k, v in sink.current_manifest().items() if not k.startswith("_")}
-    man.pop("changes")
-    man["committed_batches"] = sorted(sink.committed_batches())
-    for k in ("format", "chain_len", "batch_watermark", "recent_batches"):
-        man.pop(k, None)
-    with open(mpath, "w") as fh:
-        json.dump(man, fh)
-    # reopen: a legacy table is encountered by a FRESH sink (the live
-    # instance's fold cache rightly assumes nobody edits manifests
-    # behind its back)
-    sink = SnapshotMergeSink(spark, tmp_table, n_buckets=2)
-    assert sink.read_changes().count() == 1  # committed batch 1 visible
-    # plant an uncommitted legacy dir (batch 99 not in the ledger)
-    orphan = os.path.join(tmp_table, "changes", "batch_id=99")
-    sink.read_changes().limit(1).write.mode("overwrite").parquet(orphan)
-    assert sink.read_changes().count() == 1  # still hidden
-    assert "99" not in sink._changes_map(sink.current_manifest())
-    assert "99" in sink._changes_map(sink.current_manifest(), for_gc=True)
-    sink.expire_snapshots(keep_manifests=3)
-    assert os.path.exists(orphan)  # GC is conservative on legacy tables
+    from pyspark.sql import functions as F
+
+    from chomper_spark.operators.merge import _CHECKPOINT_KEYS, _HEAD_KEYS
+
+    def public(m):
+        return {k: v for k, v in m.items() if not k.startswith("_")}
+
+    def check(sink):
+        head = sink._current_name()
+        assert sink._fold_cache[0] == head
+        fresh = SnapshotMergeSink(spark, sink.root).current_manifest()
+        assert public(fresh) == public(sink._fold_cache[1])
+        mdir = os.path.join(sink.root, "manifests")
+        for name in os.listdir(mdir):
+            if name.endswith(".json"):
+                with open(os.path.join(mdir, name)) as fh:
+                    doc = json.load(fh)
+                keys = _HEAD_KEYS if doc.get("delta") else _CHECKPOINT_KEYS
+                assert set(keys) <= set(doc), (name, set(keys) - set(doc))
+
+    cow = SnapshotMergeSink(spark, str(tmp_path / "cow"), n_buckets=4)
+    chg = dict(listen_fields=("text",), emit_change_rows=True)
+    cow.apply_batch(feed_df(spark, [ev("I", f"c{i}", 0, i) for i in range(8)]), 0)
+    check(cow)
+    cow.apply_batch(feed_df(spark, [ev("U", "c1", 0, 10, text="b")]), 1, **chg)
+    assert cow.read_changes().count() == 1
+    check(cow)
+    evolved = feed_df(spark, [ev("I", "c9", 0, 11)]).withColumn("tool_meta", F.lit("v2"))
+    assert cow.apply_batch(evolved, 2).schema_added == ["tool_meta"]
+    assert len(cow.current_manifest()["schema_history"]) == 2
+    check(cow)
+    assert cow.compact(upgrade_schema=True)["buckets_compacted"] >= 1
+    check(cow)
+    cow.truncate(batch_id=3)
+    check(cow)
+    cow.apply_batch(feed_df(spark, [ev("I", "c5", 0, 12)]), 4)
+    assert cow.expire_snapshots(keep_manifests=1)["manifests_removed"] >= 1
+    check(cow)  # HEAD was a delta, rewritten in place as a checkpoint
+
+    mor = SnapshotMergeSink(
+        spark, str(tmp_path / "mor"), n_buckets=4, write_mode="mor", mor_compact_threshold=2
+    )
+    mor.apply_batch(feed_df(spark, [ev("I", f"c{i}", 0, i) for i in range(8)]), 0)
+    check(mor)
+    assert mor.current_manifest()["deltas"]
+    mor.apply_batch(feed_df(spark, [ev("U", f"c{i}", 0, 10 + i) for i in range(8)]), 1)
+    assert mor.current_manifest()["deltas"] == {}  # the apply folded every chain
+    check(mor)
+
+    head = os.path.join(cow.root, "manifests", cow._current_name())
+    with open(head) as fh:
+        doc = json.load(fh)
+    assert not doc.get("delta")
+    for key in _CHECKPOINT_KEYS:
+        with open(head, "w") as fh:
+            json.dump({k: v for k, v in doc.items() if k != key}, fh)
+        with pytest.raises(ValueError, match=rf"{os.path.basename(head)} lacks \['{key}'\]"):
+            SnapshotMergeSink(spark, cow.root)
 
 
 def test_commit_metadata_bounded_by_batch_not_history(spark, tmp_table):
@@ -740,7 +770,7 @@ def test_ledger_watermark_handles_out_of_order_batch_ids(spark, tmp_table):
     sink.apply_batch(feed_df(spark, [ev("I", "k4", 0, 4)]), 4)
     m = sink.current_manifest()
     assert m["batch_watermark"] == 5 and m["recent_batches"] == []
-    assert sink.committed_batches() == {0, 1, 2, 3, 4, 5}
+    assert committed_batches(sink) == {0, 1, 2, 3, 4, 5}
 
 
 def test_ledger_metadata_constant_over_thousand_batches():
@@ -1075,4 +1105,4 @@ def test_threaded_apply_vs_compact_stress(spark, tmp_table):
     assert got == {"seed", *{f"a{i}" for i in range(8)}}
     m = final.current_manifest()
     assert m["batch_watermark"] == 7  # 0..7 contiguous
-    assert 100 in final.committed_batches()
+    assert 100 in committed_batches(final)

@@ -7,7 +7,9 @@ from __future__ import annotations
 import pytest
 
 from chomper_spark.operators.merge import SnapshotMergeSink
-from tests.helpers import assert_state_equals_oracle, ev, feed_df
+from tests.helpers import (
+    assert_state_equals_oracle, committed_batches, ev, feed_df, write_plans,
+)
 
 
 def _mor(spark, path, **kw):
@@ -244,7 +246,7 @@ def test_on_demand_compact_folds_all_chains(spark, tmp_path):
     assert_state_equals_oracle(sink.read(), all_ev)
     # idempotent no-op on a compacted table; ledger untouched
     assert sink.compact() == {"buckets_compacted": 0, "delta_refs_folded": 0}
-    assert sink.committed_batches() == {0, 1, 2, 3}
+    assert committed_batches(sink) == {0, 1, 2, 3}
     # the batch ledger still skips replays after compaction
     assert sink.apply_batch(feed_df(spark, all_ev[:2]), 0).skipped
 
@@ -294,6 +296,7 @@ def test_shared_delta_read_filters_per_referencing_bucket(spark, tmp_path):
         "buckets": dict(man["buckets"]),
         "deltas": {kk: list(v) for kk, v in man["deltas"].items() if int(kk) != k},
         "schema": man["schema"],
+        "schema_history": man["schema_history"],
     }
     got = sink._read_buckets(pruned, [j, k])
     got_buckets = {
@@ -316,6 +319,7 @@ def test_shared_delta_read_filters_per_referencing_bucket(spark, tmp_path):
             for kk, v in man2["deltas"].items()
         },
         "schema": man2["schema"],
+        "schema_history": man2["schema_history"],
     }
     got2 = sink._read_buckets(mixed, [j, k])
     texts = {r["conv_id"]: r["text"] for r in got2.collect()}
@@ -347,25 +351,6 @@ def _batch(convs, seq0, text, op="U"):
     return [ev(op, c, 0, seq0 + i, text=text) for i, c in enumerate(convs)]
 
 
-def _write_plans(fn):
-    """(physical plans of every parquet write ``fn`` runs, its result)."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    plans: list[str] = []
-    orig = DataFrameWriter.parquet
-
-    def hooked(self, path, **kw):
-        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
-        return orig(self, path, **kw)
-
-    DataFrameWriter.parquet = hooked
-    try:
-        out = fn()
-    finally:
-        DataFrameWriter.parquet = orig
-    return plans, out
-
-
 def _bucket_dirs(snap_dir):
     import os
 
@@ -393,7 +378,7 @@ def test_folding_apply_is_one_write_with_one_exchange(spark, tmp_path):
         sink.apply_batch(feed_df(spark, evs[-16:]), b)
     folded = _batch(convs[:12], 200, "v2") + [ev("D", convs[12], 0, 299)]
     evs += folded
-    plans, _ = _write_plans(lambda: sink.apply_batch(feed_df(spark, folded), 2))
+    plans, _ = write_plans(lambda: sink.apply_batch(feed_df(spark, folded), 2))
     assert len(plans) == 1
     assert plans[0].count("Exchange") == 1, plans[0]
     assert "Join" not in plans[0], plans[0]
@@ -512,7 +497,7 @@ def test_compact_write_plan_has_one_exchange(spark, tmp_path):
     for i in range(3):
         evs += [ev("U" if i else "I", f"c{j}", 0, 10 * i + j, text=f"v{i}") for j in range(8)]
         sink.apply_batch(feed_df(spark, evs[-8:]), i, delta_layout="single" if i == 1 else "bucketed")
-    plans, rep = _write_plans(sink.compact)
+    plans, rep = write_plans(sink.compact)
     assert rep["delta_refs_folded"] >= 3
     assert len(plans) == 1
     assert plans[0].count("Exchange") == 1, plans[0]

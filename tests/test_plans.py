@@ -93,26 +93,20 @@ def test_merge_source_dedup_has_mapside_partial_combine(spark):
 
 
 def test_mor_write_plan_single_exchange(spark, tmp_path):
-    # the fused MOR dedup groups on (bucket, key); HashPartitioning(bucket)
-    # satisfies that clustering → exactly ONE exchange in the whole plan.
-    from chomper_spark.operators.merge import _BUCKET
-    from chomper_spark.sources.feed import synthetic_change_feed
+    # a MOR delta apply groups on (bucket, key); HashPartitioning(bucket)
+    # satisfies that clustering → exactly ONE exchange in its write
+    # plan, and no join against stored rows
+    from chomper_spark.operators.merge import SnapshotMergeSink
+    from tests.helpers import ev, feed_df, write_plans
 
-    feed = synthetic_change_feed(spark, 1000, n_convs=50, seed=1)
-    projected = feed.withColumn(
-        _BUCKET,
-        F.pmod(
-            F.xxhash64(F.col("conv_id").cast("string"), F.col("turn_idx").cast("string")),
-            F.lit(16),
-        ).cast("int"),
-    )
-    rest = [c for c in projected.columns if c not in ("conv_id", "turn_idx", _BUCKET)]
-    dd = (
-        projected.repartition(16, _BUCKET)
-        .groupBy(_BUCKET, "conv_id", "turn_idx")
-        .agg(F.max_by(F.struct(*rest), F.struct("op_ts", "batch_seq")).alias("_r"))
-    )
-    assert _plan(dd).count("Exchange") == 1
+    sink = SnapshotMergeSink(spark, str(tmp_path / "t"), n_buckets=16, write_mode="mor")
+    sink.apply_batch(feed_df(spark, [ev("I", f"c{i}", 0, i) for i in range(40)]), 0)
+    batch = [ev("U", f"c{i}", 0, 100 + i) for i in range(0, 40, 3)] + [ev("D", "c1", 0, 200)]
+    plans, _ = write_plans(lambda: sink.apply_batch(feed_df(spark, batch), 1))
+    assert sink.current_manifest()["buckets"] == {}  # delta appends, no fold
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1, plans[0]
+    assert "Join" not in plans[0], plans[0]
 
 
 def test_whole_stage_codegen_covers_transform_pipeline(spark):
