@@ -1,2 +1,2 @@
 from chomper_spark.operators.dedup import dedup_latest  # noqa: F401
-from chomper_spark.operators.merge import SnapshotMergeSink, read_table  # noqa: F401
+from chomper_spark.operators.merge import SnapshotMergeSink  # noqa: F401

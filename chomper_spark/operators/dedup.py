@@ -36,15 +36,6 @@ def dedup_latest(
     )
 
 
-def latest_wins_sql(cols: list[str], version_cols: list[str]) -> str:
-    """SQL aggregate ``_r``: the newest ``struct(cols)`` per group by
-    ``version_cols`` — deterministic when they are a total order."""
-    return (
-        f"max_by(struct({', '.join(map(quote, cols))}), "
-        f"struct({', '.join(map(quote, version_cols))})) AS _r"
-    )
-
-
 def dedup_latest_agg(
     batch: DataFrame,
     key_cols: list[str] | None = None,
@@ -63,6 +54,9 @@ def dedup_latest_agg(
     rest = [c for c in batch.columns if c not in key_cols]
     return (
         batch.groupBy(*key_cols)
-        .agg(F.expr(latest_wins_sql(rest, version_cols)))
+        .agg(F.expr(
+            f"max_by(struct({', '.join(map(quote, rest))}), "
+            f"struct({', '.join(map(quote, version_cols))})) AS _r"
+        ))
         .selectExpr(*map(quote, key_cols), *[f"_r.{quote(c)} AS {quote(c)}" for c in rest])
     )

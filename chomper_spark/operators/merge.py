@@ -13,9 +13,8 @@ Reference semantics being reproduced, set-oriented (SURVEY.md §2.3):
 
 plus the north rule's delete arm (op='D') and exactly-once.
 
-Physical design (no Iceberg runtime jar in this sandbox — verified —
-so the MERGE sink is an interface with a snapshot/manifest fallback
-whose semantics match ``MERGE INTO``):
+Physical design (a snapshot/manifest table whose apply semantics
+match ``MERGE INTO``; no lakehouse catalog is needed):
 
 * Table state = hash-bucketed parquet: bucket k holds keys with
   ``pmod(xxhash64(cast(conv_id as string), cast(turn_idx as string)),
@@ -24,7 +23,7 @@ whose semantics match ``MERGE INTO``):
   conversation's turns spread over all buckets, so no single task
   owns a hot key (north rule: salted-key skew handling — turn_idx is
   the natural salt; see also ``with_salt`` in operators/skew.py).
-* A batch touches only the buckets its keys hash to → the merge join
+* A batch touches only the buckets its keys hash to → the apply
   reads/rewrites just those buckets (Iceberg-style partition pruning);
   untouched buckets are carried forward by manifest reference, never
   rewritten.  At 10^10 rows this is what keeps a micro-batch O(batch),
@@ -63,11 +62,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, ty
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from chomper_spark import schema as S
-from chomper_spark.operators.dedup import dedup_latest_agg, latest_wins_sql
+from chomper_spark.operators.dedup import dedup_latest_agg
 from chomper_spark.operators.evolve import align_to_schema, evolve_schema, quote, sql_str
 
 _BUCKET = "_bucket"
-_SRC = "_src"  # MOR fold input: true for batch events, false for stored rows
+_SRC = "_src"  # fold input: true for batch events, false for stored rows
 _MANIFEST_RE = re.compile(r"^m\d{8}\.json$")
 _SNAP_RE = re.compile(r"snapshots/s(\d{8})/")
 _SNAP_DIR_RE = re.compile(r"^s(\d{8})$")
@@ -306,8 +305,8 @@ def _meta_schema(payload: T.StructType, audit: bool = False) -> T.StructType:
 class SnapshotMergeSink:
     """MERGE INTO target USING batch ON key — snapshot/manifest engine.
 
-    Equivalent Iceberg SQL (used verbatim when a MERGE-capable catalog
-    is on the classpath — see ``IcebergMergeSink``):
+    What an apply computes, as Iceberg SQL (plus the tombstone and
+    pre-image rules of ``apply_batch``):
 
         MERGE INTO target t USING deduped_batch s
         ON t.conv_id = s.conv_id AND t.turn_idx = s.turn_idx
@@ -323,7 +322,6 @@ class SnapshotMergeSink:
         n_buckets: int = 32,
         key_cols: list[str] | None = None,
         version_cols: list[str] | None = None,
-        compact_on_write: bool = True,
         write_mode: str = "cow",
         mor_compact_threshold: int = 8,
         audit_timestamps: bool = False,
@@ -355,28 +353,20 @@ class SnapshotMergeSink:
         # apply_batch(batch_time=...) argument, never current_timestamp()
         # (replay must be deterministic).  Needs the pre-image → COW only.
         self.audit_timestamps = audit_timestamps
-        # compact_on_write: repartition by bucket before the snapshot write
-        # → exactly one file per bucket.  Measured 4× faster end-to-end than
-        # skipping the shuffle: without it every shuffle task writes a file
-        # into every bucket dir (tasks × buckets small files per snapshot),
-        # and file-creation/listing overhead dwarfs one narrow shuffle of
-        # the touched buckets.  Off only for write-once append patterns.
-        # COW only: a MOR write's reduce needs the bucket exchange.
-        self.compact_on_write = compact_on_write
-        # write_mode:
-        #   "cow" (copy-on-write): each batch reduces the touched buckets'
-        #     rows together with its events, latest-wins per key, and
-        #     rewrites them — reads are a plain scan, but every batch
+        # write_mode: both modes apply a batch through the one fold plan
+        # (``_fold_write``); they differ in which buckets it folds.
+        #   "cow" (copy-on-write): every touched bucket folds — its stored
+        #     rows and the batch's events reduce latest-wins per key into
+        #     a new base — so reads are a plain scan, but every batch
         #     writes O(touched table).  Matches Iceberg COW MERGE.
         #   "mor" (merge-on-read): each batch APPENDS a per-bucket delta
         #     file (O(batch) write — the only shape that holds at 10^10
-        #     events) and reads reduce base+deltas latest-wins; a bucket
-        #     whose chain reaches ``mor_compact_threshold`` folds into a
-        #     new base inside the apply's one write plan (amortized
-        #     rewrites, see ``_apply_mor``).  Matches Iceberg/Hudi MOR.
+        #     events) and reads reduce base+deltas latest-wins; only a
+        #     bucket whose chain reaches ``mor_compact_threshold`` folds
+        #     (amortized rewrites).  Matches Iceberg/Hudi MOR.
         #     Modes needing the pre-image at write time (update_only_nulls,
-        #     insert_missing=False, protected, listen_fields, per-op
-        #     metrics) require "cow".
+        #     insert_missing=False, protected, listen_fields, audit
+        #     timestamps, per-op metrics) require "cow".
         if write_mode not in ("cow", "mor"):
             raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
         self.write_mode = write_mode
@@ -740,7 +730,8 @@ class SnapshotMergeSink:
 
     def _scan_buckets(self, manifest: dict, buckets: list[int]) -> DataFrame | None:
         """The stored rows of the given buckets, raw: base ∪ chain, not
-        reduced (``_read_buckets`` and ``_fold_write`` reduce).  ONE
+        reduced (reads reduce them in ``_read_buckets``; every apply and
+        ``compact`` reduce them in ``_fold_write``, via ``_stored_rows``).  ONE
         parquet scan per live SCHEMA VERSION (plus one more per version when
         shared small-batch deltas exist) — in steady state exactly one.
 
@@ -1022,14 +1013,15 @@ class SnapshotMergeSink:
         self,
         batch: DataFrame,
         batch_id: int,
-        update_only_nulls: bool = False,
-        insert_missing: bool = True,
-        protected: tuple[str, ...] = (),
-        listen_fields: tuple[str, ...] = (),
-        collect_metrics: bool = True,
-        batch_time=None,
-        emit_change_rows: bool = False,
-        delta_layout: str = "bucketed",
+        *,
+        update_only_nulls: bool,
+        insert_missing: bool,
+        protected: tuple[str, ...],
+        listen_fields: tuple[str, ...],
+        collect_metrics: bool,
+        batch_time,
+        emit_change_rows: bool,
+        delta_layout: str,
     ) -> MergeMetrics:
         """Apply one micro-batch of change events. Idempotent.
 
@@ -1054,7 +1046,13 @@ class SnapshotMergeSink:
         delta file carrying the bucket id as a data column, referenced
         by every touched bucket's chain and bucket-filtered at read;
         the apply that brings a chain to the threshold folds it into a
-        per-bucket base (and writes per-bucket files, see ``_apply_mor``).
+        per-bucket base (and writes per-bucket files).
+
+        Both modes write through ONE plan (``_fold_write``): the batch's
+        events ∪ the stored rows of the buckets it folds, one exchange
+        on the bucket, one reduce per key, one write.  COW folds every
+        touched bucket; MOR folds the chains that reach
+        ``mor_compact_threshold`` and appends deltas elsewhere.
 
         Metrics cost no extra Spark job.  COW takes events in, merge
         rows and dedup drops from its touched-bucket aggregate (which
@@ -1081,6 +1079,15 @@ class SnapshotMergeSink:
             raise ValueError(f"delta_layout must be 'bucketed' or 'single', got {delta_layout!r}")
         if delta_layout == "single" and self.write_mode != "mor":
             raise ValueError("delta_layout='single' applies to write_mode='mor' only")
+        if self.write_mode == "mor" and (
+            update_only_nulls or not insert_missing or protected or listen_fields
+            or self.audit_timestamps
+        ):
+            raise ValueError(
+                "update_only_nulls / insert_missing=False / protected / "
+                "listen_fields / audit_timestamps need the pre-image at "
+                "write time — use write_mode='cow'"
+            )
 
         # on an AUDIT sink the audit column names are engine-reserved
         # (never payload); a plain sink must NOT strip user columns that
@@ -1111,7 +1118,6 @@ class SnapshotMergeSink:
             new_payload = payload_schema
         state_schema = _meta_schema(new_payload, audit=self.audit_timestamps)
         payload_cols = [f_.name for f_ in new_payload.fields]
-        data_cols = [c for c in payload_cols if c not in self.key_cols]
 
         # -- project the raw batch to the (evolved) payload + version/meta
         # columns, with the widen-stable bucket id (pure codegen, no action)
@@ -1124,250 +1130,114 @@ class SnapshotMergeSink:
         ).selectExpr("*", f"{self._bucket_sql()} AS {_BUCKET}")
 
         evolved = bool(metrics.schema_added or metrics.schema_widened)
-        if self.write_mode == "mor":
-            if (update_only_nulls or not insert_missing or protected or listen_fields
-                    or self.audit_timestamps):
-                raise ValueError(
-                    "update_only_nulls / insert_missing=False / protected / "
-                    "listen_fields / audit_timestamps need the pre-image at "
-                    "write time — use write_mode='cow'"
-                )
-            # schema evolution is metadata-only on the MOR path too: the
-            # delta files of this batch carry the evolved schema, older
-            # files align at read via schema_history
-            return self._apply_mor(
-                projected, manifest, batch_id, state_schema, payload_cols,
-                metrics, collect_metrics,
-                delta_layout=delta_layout, evolved=evolved,
-            )
-
-        # -- bucket pruning: only read/rewrite the buckets this batch
-        # touches.  The same one-exchange pass yields the batch counters
-        # and the per-bucket lineage rows, so none of them costs a job.
-        # The batch is evaluated here and again by the write, not cached
-        # (AQE builds a cache in a job of its own); the commit checks
-        # that both evaluations touched the same buckets.
-        stats = self._bucket_stats(projected)
-        touched = [b for b, *_ in stats]
-        metrics.bucket_stats = stats
-        metrics.buckets_touched = len(touched)
-        metrics.events_in = sum(n for _, n, _, _ in stats)
-        metrics.merge_rows = sum(k for _, _, k, _ in stats)
-        metrics.dedup_drops = metrics.events_in - metrics.merge_rows
-        # schema evolution is metadata-only: the commit records the new
-        # schema in schema_history and touches ONLY this batch's buckets;
-        # files under older schemas are NULL-backfilled/cast at read
-        # (see _read_buckets) and rewritten lazily by compaction.
-        tgt = self._read_buckets(manifest, touched) if manifest else None
-
-        # -- the one COW plan: union(target rows, batch events) →
-        # repartition(_bucket) → one latest-wins reduce per key.  The
-        # reduce's winner ``_r`` is the newest batch event when it is
-        # STRICTLY newer than the target row (target-wins ordering bit on
-        # an exact version tie), else the target row itself — so it also
-        # dedups the batch.  HashPartitioning on _bucket satisfies the
-        # aggregate's clustering on (_bucket, *keys): one exchange, no
-        # join, and the write consumes it partition-aligned.  At most one
-        # target row exists per key, so the pre-image ``_t`` rides the
-        # same reduce as a plain aggregate, for the modes that read it.
-        # The plan is built from SQL text: a selectExpr crosses to the
-        # JVM in one py4j call, where each Column op costs several round
-        # trips — at ~1k events per batch those dominated plan building.
-        q = quote
-        _TGT = "_is_tgt"
+        mor = self.write_mode == "mor"
         audit = list(S.AUDIT_COLS) if self.audit_timestamps else []
-        meta = [S.META_OP_TS, S.META_BATCH_SEQ, S.META_DELETED]
-        unioned = projected.selectExpr(
-            *map(q, payload_cols),
+        if audit:
+            # a batch event carries the batch time in both audit columns
+            bt = F.lit(batch_time).cast("timestamp")
+            projected = projected.withColumns({c: bt for c in audit})
+        rows = projected.selectExpr(
+            *map(quote, payload_cols),
+            *audit,
             f"CAST({S.META_OP_TS} AS TIMESTAMP) AS {S.META_OP_TS}",
             S.META_BATCH_SEQ,
-            f"{q(S.OP_COL)} = 'D' AS {S.META_DELETED}",
+            f"{quote(S.OP_COL)} = 'D' AS {S.META_DELETED}",
             _BUCKET,
-            f"false AS {_TGT}",
+            f"true AS {_SRC}",
         )
-        if audit:
-            # a source row carries the batch time in both audit columns
-            bt = F.lit(batch_time).cast("timestamp")
-            unioned = unioned.withColumns({c: bt for c in audit})
-        if tgt is not None:
-            unioned = align_to_schema(
-                tgt, state_schema, f"{self._bucket_sql()} AS {_BUCKET}", f"true AS {_TGT}"
-            ).unionByName(unioned)
-        if self.compact_on_write:
-            unioned = unioned.repartition(
-                min(self.n_buckets, max(1, len(touched))), _BUCKET
+
+        # -- the fold set: the buckets whose stored rows (base ∪ chain,
+        # raw) join the batch in the one write plan and get a new base.
+        # COW folds every bucket the batch touches.  MOR folds every
+        # chain this batch brings to ``mor_compact_threshold`` (also one
+        # the batch misses) and appends a delta to each other touched
+        # bucket: an O(batch) write, with amortized rewrites.
+        deltas = {k: list(v) for k, v in manifest["deltas"].items()} if manifest else {}
+        if mor:
+            fold = sorted(
+                int(k) for k, v in deltas.items() if len(v) + 1 >= self.mor_compact_threshold
             )
-        need_pre = bool(
-            protected or update_only_nulls or not insert_missing or listen_fields
-            or audit
-        )
-        row = ", ".join(map(q, [*data_cols, *audit, *meta]))
-        aggs = [
-            # target-wins tie-break: the source must be STRICTLY newer
-            f"max_by(struct({row}, {_TGT}), "
-            f"struct({S.META_OP_TS}, {S.META_BATCH_SEQ}, {_TGT})) AS _r"
-        ]
-        if need_pre:
-            aggs.append(f"first(CASE WHEN {_TGT} THEN struct({row}) END, true) AS _t")
-        elif collect_metrics:
-            aggs.append(f"max(CASE WHEN {_TGT} THEN NOT {S.META_DELETED} END) AS _live")
-        reduced = unioned.groupBy(_BUCKET, *self.key_cols).agg(*map(F.expr, aggs))
-
-        take_src = f"NOT _r.{_TGT}"
-        t_present = "_t IS NOT NULL"
-        live_t = (
-            f"({t_present} AND NOT _t.{S.META_DELETED})"
-            if need_pre
-            else "coalesce(_live, false)"
-        )
-        if not insert_missing:
-            # E3 Updater: only a LIVE row is a match — a tombstone is not
-            reduced = reduced.filter(t_present)
-            take_src = f"({take_src} AND {live_t})"
-
-        def applied_val(c: str) -> str:
-            """The value an applied UPDATE of a live row writes for c —
-            change counts/rows reflect what lands in the table, not the
-            raw source image (update_only_nulls only fills target NULLs;
-            protected columns are never written)."""
-            if c in protected:
-                return f"_t.{q(c)}"
-            if update_only_nulls:
-                return f"coalesce(_t.{q(c)}, _r.{q(c)})"
-            return f"_r.{q(c)}"
-
-        def pick(c: str, data: bool = True) -> str:
-            if not need_pre:
-                return f"_r.{q(c)} AS {q(c)}"
-            # an insert, or a re-insert over a tombstone, writes the
-            # whole source row: only a LIVE target protects or keeps
-            # its values
-            upd = f"WHEN {take_src} AND {live_t} THEN {applied_val(c)} " if data else ""
-            return f"CASE {upd}WHEN {take_src} THEN _r.{q(c)} ELSE _t.{q(c)} END AS {q(c)}"
-
-        audit_out = (
-            [
-                # created_at fixed at first materialization (it survives
-                # a tombstone); updated_at advances on every applied change
-                f"CASE WHEN {t_present} THEN _t.{S.AUDIT_CREATED} "
-                f"ELSE _r.{S.AUDIT_CREATED} END AS {S.AUDIT_CREATED}",
-                pick(S.AUDIT_UPDATED, data=False),
-            ]
-            if audit
-            else []
-        )
-        upsert = f"{take_src} AND NOT _r.{S.META_DELETED}"
-
-        def field_changed(c: str) -> str:
-            return f"NOT ({applied_val(c)} <=> _t.{q(c)})"
-
-        changes_written = emit_change_rows and tgt is not None
-        if changes_written:
-            # the change-rows write below is a second action over it
-            reduced = reduced.persist()
-        observed = reduced
-        if collect_metrics:
-            obs = Observation()
-            # per-op and field-change counts ride the write job
-            counts = {
-                "ins": f"{upsert} AND NOT {live_t}",
-                "upd": f"{upsert} AND {live_t}",
-                "del": f"{take_src} AND {live_t} AND _r.{S.META_DELETED}",
-                **{
-                    f"chg_{c}": f"{upsert} AND {live_t} AND {field_changed(c)}"
-                    for c in listen_fields
-                },
-            }
-            observed = reduced.observe(
-                obs, *[F.expr(f"count_if({cond}) AS {q(n)}") for n, cond in counts.items()]
-            )
-        merged = observed.selectExpr(
-            *map(q, self.key_cols),
-            *[pick(c) for c in data_cols],
-            *audit_out,
-            *[pick(c, data=False) for c in meta],
-            _BUCKET,
-        )
-
-        # -- write the new snapshot (only touched buckets) under a
-        # claimed dir; commit id (manifest position) is decoupled —
-        # see _claim_snapshot_dir
+            # a folding apply writes per-bucket files, so its other
+            # buckets get per-bucket deltas
+            shared = delta_layout == "single" and not fold
+            n_parts = 1 if shared else self.n_buckets
+        else:
+            # bucket pruning: only the touched buckets are read and
+            # rewritten.  The same one-exchange pass yields the batch
+            # counters and the per-bucket lineage rows, so none of them
+            # costs a job.  The batch is evaluated here and again by the
+            # write, not cached (AQE builds a cache in a job of its
+            # own); the commit checks that both touched the same buckets.
+            stats = self._bucket_stats(projected)
+            fold = [b for b, *_ in stats]
+            metrics.bucket_stats = stats
+            metrics.buckets_touched = len(fold)
+            metrics.events_in = sum(n for _, n, _, _ in stats)
+            metrics.merge_rows = sum(k for _, _, k, _ in stats)
+            metrics.dedup_drops = metrics.events_in - metrics.merge_rows
+            shared = False
+            n_parts = min(self.n_buckets, max(1, len(fold)))
         dir_id, _ = self._claim_snapshot_dir()
-        rel_data = f"snapshots/s{dir_id:08d}/data"
-        out_path = os.path.join(self.root, rel_data)
-        merged = align_to_schema(
-            merged,
-            T.StructType(state_schema.fields + [T.StructField(_BUCKET, T.IntegerType(), False)]),
+        rel = f"snapshots/s{dir_id:08d}/" + ("delta_shared" if shared else "data")
+        # schema evolution is metadata-only: stored rows under an older
+        # schema NULL-backfill/cast here, and the commit records the new
+        # schema in schema_history
+        stored = self._stored_rows(manifest, fold, state_schema)
+        if stored is not None:
+            rows = stored.unionByName(rows)
+        # change rows compare with the pre-image: a batch whose buckets
+        # hold no stored rows writes no change dir
+        changes = f"changes/batch_id={batch_id}" if emit_change_rows and stored is not None else None
+        written, obs = self._fold_write(
+            rows, os.path.join(self.root, rel), n_parts, shared=shared,
+            collect_metrics=collect_metrics,
+            pre=None if mor else {
+                "update_only_nulls": update_only_nulls,
+                "insert_missing": insert_missing,
+                "protected": protected,
+                "listen_fields": listen_fields,
+                "changes": changes and os.path.join(self.root, changes),
+                "batch_id": batch_id,
+            },
         )
-        merged.write.mode("overwrite").partitionBy(_BUCKET).parquet(out_path)
-        if changes_written:
-            # full E6 (chomper/contrib/sql/exporters.py:304-333): one
-            # change row per (key, listened field) whose value an applied
-            # UPDATE of a live row changed — the audit feed downstream CDC
-            # consumers tail.  Overwrite-per-batch = replay-idempotent.
-            # The first-ever batch has no pre-image → no change dir.
-            changes = ", ".join(
-                f"named_struct('field', {sql_str(c)}, "
-                f"'old_value', CAST(_t.{q(c)} AS STRING), "
-                f"'new_value', CAST({applied_val(c)} AS STRING), "
-                f"'_chg', {field_changed(c)})"
-                for c in listen_fields
+        if mor:
+            metrics.buckets_touched = len(written)  # incl. fold buckets it missed
+            if collect_metrics:
+                metrics.events_in = int(obs.get("ev") or 0)
+                metrics.merge_rows = int(obs.get("keys") or 0)
+                metrics.dedup_drops = metrics.events_in - metrics.merge_rows
+        elif not set(written) <= set(fold):
+            # the stats pass and the write each evaluate the batch; a
+            # bucket only the write produced had no stored rows read, so
+            # committing it would drop that bucket's state
+            raise RuntimeError(
+                f"batch {batch_id} changed between its stats pass and its "
+                f"write (new buckets {sorted(set(written) - set(fold))}); "
+                "apply a deterministic or persisted batch"
             )
-            reduced.filter(f"{upsert} AND {live_t}").selectExpr(
-                *map(q, self.key_cols),
-                f"inline(filter(array({changes}), x -> x._chg))",
-            ).selectExpr(
-                *map(q, self.key_cols), "field", "old_value", "new_value",
-                f"CAST({batch_id} AS BIGINT) AS batch_id",
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.root, "changes", f"batch_id={batch_id}")
-            )
-            reduced.unpersist()
-        if collect_metrics:
-            row = _obs_row(obs)  # populated by the write job above
-            metrics.inserted = int(row.get("ins") or 0)
-            metrics.updated = int(row.get("upd") or 0)
-            metrics.deleted = int(row.get("del") or 0)
+        elif collect_metrics:
+            metrics.inserted = int(obs.get("ins") or 0)
+            metrics.updated = int(obs.get("upd") or 0)
+            metrics.deleted = int(obs.get("del") or 0)
             metrics.field_changes = {
-                c: int(row.get(f"chg_{c}") or 0) for c in listen_fields
+                c: int(obs.get(f"chg_{c}") or 0) for c in listen_fields
             }
 
         buckets = dict(manifest["buckets"]) if manifest else {}
-        deltas = dict(manifest["deltas"]) if manifest else {}
-        # the stats pass and the write each evaluate the batch; a bucket
-        # only the write produced had no target rows read, so committing
-        # it would drop that bucket's state
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out_path)
-            if d.startswith(f"{_BUCKET}=")
-        }
-        if not written <= set(touched):
-            raise RuntimeError(
-                f"batch {batch_id} changed between its stats pass and its "
-                f"write (new buckets {sorted(written - set(touched))}); "
-                "apply a deterministic or persisted batch"
-            )
-        bucket_updates: dict[str, str] = {}
-        delta_removals: list[str] = []
-        for k in touched:
-            bucket_dir = os.path.join(out_path, f"{_BUCKET}={k}")
-            if os.path.isdir(bucket_dir):
-                buckets[str(k)] = f"{rel_data}/{_BUCKET}={k}"
-                bucket_updates[str(k)] = buckets[str(k)]
-            # the COW rewrite folded any delta chain for this bucket
-            if deltas.pop(str(k), None) is not None:
-                delta_removals.append(str(k))
-        wm, recent = _ledger_add(manifest, batch_id)
+        delta_doc = _swap_in_bases(buckets, deltas, fold, written, rel)
+        delta_doc["delta_sets"] = {}
+        for k in map(str, sorted(set(written) - set(fold))):  # MOR delta appends
+            deltas[k] = [*deltas.get(k, []), rel if shared else f"{rel}/{_BUCKET}={k}"]
+            delta_doc["delta_sets"][k] = deltas[k]
         # change-audit dirs become VISIBLE only via the manifest: the
-        # parquet write above happens pre-commit, so a crash before the
+        # parquet write happens pre-commit, so a crash before the
         # _CURRENT flip leaves an unreferenced (invisible) dir, never a
         # phantom change row for an uncommitted batch
         changes_map = dict(manifest["changes"]) if manifest else {}
-        changes_updates: dict[str, str] = {}
-        if changes_written:  # first-ever batch has no pre-image → no dir
-            changes_map[str(batch_id)] = f"changes/batch_id={batch_id}"
-            changes_updates[str(batch_id)] = changes_map[str(batch_id)]
+        if changes:
+            changes_map[str(batch_id)] = changes
+            delta_doc["changes_updates"] = {str(batch_id): changes}
+        wm, recent = _ledger_add(manifest, batch_id)
         self._commit(
             {
                 "batch_watermark": wm,
@@ -1378,136 +1248,163 @@ class SnapshotMergeSink:
                 **self._next_schema(manifest, evolved, dir_id, state_schema),
             },
             parent=manifest,
-            delta_doc={
-                "bucket_updates": bucket_updates,
-                "delta_removals": delta_removals,
-                "changes_updates": changes_updates,
-            },
-        )
-        return metrics
-
-    def _apply_mor(
-        self,
-        projected: DataFrame,
-        manifest: dict | None,
-        batch_id: int,
-        state_schema: T.StructType,
-        payload_cols: list[str],
-        metrics: MergeMetrics,
-        collect_metrics: bool,
-        delta_layout: str = "bucketed",
-        evolved: bool = False,
-    ) -> MergeMetrics:
-        """Merge-on-read apply: ONE write plan (``_fold_write``), with
-        compaction folded in.  The fold set comes from the manifest
-        before the write — every bucket whose delta chain reaches
-        ``mor_compact_threshold`` with this batch (``len(chain) + 1 >=
-        threshold``).  Their stored rows (base ∪ chain, scanned raw)
-        join the batch's events in the one exchange and latest-wins
-        reduce, and the one partitioned write makes the fold buckets'
-        new bases beside the other touched buckets' deltas: no delta
-        for a fold bucket, no re-read, the same job pair as a plain
-        O(batch) delta append.  A fold bucket the batch misses folds
-        from its stored rows alone.  ``delta_layout="single"`` writes
-        one shared delta file, except on a folding apply, which writes
-        per-bucket files (so its other buckets get per-bucket deltas).
-
-        The delta row IS the state row (full row image + version +
-        tombstone flag): the read-side reduce (``_read_buckets``) makes
-        base∪deltas equal the COW table at every point.  The write runs
-        in the caller's session conf, AQE on: a repartition with an
-        explicit count is never coalesced, so AQE re-plans nothing."""
-        dir_id, _ = self._claim_snapshot_dir()
-        deltas = {k: list(v) for k, v in manifest["deltas"].items()} if manifest else {}
-        fold = sorted(int(k) for k, v in deltas.items() if len(v) + 1 >= self.mor_compact_threshold)
-        shared = delta_layout == "single" and not fold
-        rel = f"snapshots/s{dir_id:08d}/" + ("delta_shared" if shared else "data")
-        rows = projected.selectExpr(
-            *map(quote, payload_cols),
-            f"CAST({S.META_OP_TS} AS TIMESTAMP) AS {S.META_OP_TS}",
-            S.META_BATCH_SEQ,
-            f"{quote(S.OP_COL)} = 'D' AS {S.META_DELETED}",
-            _BUCKET,
-            f"true AS {_SRC}",
-        )
-        if fold:
-            rows = self._stored_rows(manifest, fold, state_schema).unionByName(rows)
-        written, obs = self._fold_write(
-            rows, os.path.join(self.root, rel), 1 if shared else self.n_buckets,
-            shared=shared, collect_metrics=collect_metrics,
-        )
-        if collect_metrics:
-            metrics.events_in = int(obs.get("ev") or 0)
-            metrics.merge_rows = int(obs.get("keys") or 0)
-            metrics.dedup_drops = metrics.events_in - metrics.merge_rows
-        metrics.buckets_touched = len(written)  # incl. fold buckets it missed
-
-        buckets = dict(manifest["buckets"]) if manifest else {}
-        delta_doc = _swap_in_bases(buckets, deltas, fold, written, rel)
-        delta_sets: dict[str, list] = {}
-        for k in set(written) - set(fold):
-            chain = deltas.setdefault(str(k), [])
-            chain.append(rel if shared else f"{rel}/{_BUCKET}={k}")
-            delta_sets[str(k)] = list(chain)
-        delta_doc["delta_sets"] = delta_sets
-        wm, recent = _ledger_add(manifest, batch_id)
-        self._commit(
-            {
-                "batch_watermark": wm,
-                "recent_batches": recent,
-                "buckets": buckets,
-                "deltas": deltas,
-                "changes": manifest["changes"] if manifest else {},
-                **self._next_schema(manifest, evolved, dir_id, state_schema),
-            },
-            parent=manifest,
             delta_doc=delta_doc,
         )
         return metrics
 
     def _stored_rows(
-        self, manifest: dict, buckets: list[int], state_schema: T.StructType
-    ) -> DataFrame:
+        self, manifest: dict | None, buckets: list[int], state_schema: T.StructType
+    ) -> DataFrame | None:
         """``_fold_write`` input from storage: the raw scan of
-        ``buckets``, aligned to ``state_schema`` (new columns NULL-fill)."""
+        ``buckets`` (base ∪ chain, not reduced), aligned to
+        ``state_schema`` (new columns NULL-fill); None when they hold
+        no files."""
+        scan = self._scan_buckets(manifest, buckets) if manifest else None
+        if scan is None:
+            return None
         return align_to_schema(
-            self._scan_buckets(manifest, buckets), state_schema,
-            f"{self._bucket_sql()} AS {_BUCKET}", f"false AS {_SRC}",
+            scan, state_schema, f"{self._bucket_sql()} AS {_BUCKET}", f"false AS {_SRC}",
         )
 
     def _fold_write(
-        self, rows: DataFrame, out_path: str, n_parts: int, shared: bool = False,
-        collect_metrics: bool = False,
+        self, rows: DataFrame, out_path: str, n_parts: int, *, shared: bool,
+        collect_metrics: bool, pre: dict | None,
     ) -> tuple[list[int], dict]:
-        """The one MOR write plan, shared by the apply and ``compact``:
-        ``rows`` (state columns, ``_bucket``, ``_src``) → ONE exchange
-        on ``_bucket`` → ONE latest-wins reduce per (bucket, key), which
-        that HashPartitioning already clusters → one write, one file
-        per bucket dir (``shared``: one file, bucket id as data).
-        Returns (buckets written, observed row): the bucket set rides
-        the write job; ``collect_metrics`` adds ``ev`` (batch events)
-        and ``keys`` (keys with one), counted from ``_src`` so stored
-        rows never count."""
+        """The engine's one apply/compact write plan: ``rows`` (state
+        columns, ``_bucket``, ``_src``) → ONE exchange on ``_bucket`` →
+        ONE reduce per (bucket, key), which that HashPartitioning
+        already clusters → one write, one file per bucket dir
+        (``shared``: one file, bucket id as data).  The reduce's winner
+        ``_r`` is the newest row by version, a stored row winning an
+        exact tie (an event must be STRICTLY newer), so it also dedups
+        the batch.  Returns (buckets written, observed row): the bucket
+        set rides the write job.  The plan is SQL text: a selectExpr
+        crosses to the JVM in one py4j call, where each Column op costs
+        several round trips.
+
+        ``pre`` is None where ``rows`` need not hold every stored row
+        of a key (a MOR apply, ``compact``): the winner is written, and
+        ``collect_metrics`` counts ``ev`` (batch events) and ``keys``
+        (keys with one) from ``_src``, so stored rows never count.  A
+        COW apply passes its modes as ``pre`` (``apply_batch``'s
+        ``update_only_nulls``, ``insert_missing``, ``protected`` and
+        ``listen_fields``; ``changes``, the change-rows dir or None;
+        ``batch_id``) with every stored row of the touched buckets in
+        ``rows``.  Stored rows arrive raw, so the pre-image ``_t`` is
+        the NEWEST stored row of the key, and the same reduce carries
+        the mode projections, the ins/upd/del/field-change counts and
+        the rows ``changes`` gets."""
         q = quote
         cols = [c for c in rows.columns if c not in (_BUCKET, _SRC)]
         rest = [c for c in cols if c not in self.key_cols]
-        aggs = [latest_wins_sql(rest, [S.META_OP_TS, S.META_BATCH_SEQ])]
-        observed = [f"collect_set({_BUCKET}) AS bks"]
-        if collect_metrics:
-            aggs.append(f"count_if({_SRC}) AS _n")
-            observed += ["sum(_n) AS ev", "count_if(_n > 0) AS keys"]
-        obs = Observation()
-        out = (
+        version = f"{S.META_OP_TS}, {S.META_BATCH_SEQ}"
+        aggs = [
+            f"max_by(struct({', '.join(map(q, rest))}, {_SRC}), "
+            f"struct({version}, NOT {_SRC})) AS _r"
+        ]
+        observed = {"bks": f"collect_set({_BUCKET})"}
+        keep = changes = None
+        need_pre = False
+        audit = self.audit_timestamps
+        if pre is None:
+            if collect_metrics:
+                aggs.append(f"count_if({_SRC}) AS _n")
+                observed.update(ev="sum(_n)", keys="count_if(_n > 0)")
+        else:
+            protected, listen, changes = pre["protected"], pre["listen_fields"], pre["changes"]
+            need_pre = bool(
+                protected or pre["update_only_nulls"] or not pre["insert_missing"]
+                or listen or audit
+            )
+            if need_pre or collect_metrics:
+                # the counters need only the pre-image's tombstone bit
+                t_cols = rest if need_pre else [S.META_DELETED]
+                aggs.append(
+                    f"max_by(IF({_SRC}, NULL, struct({', '.join(map(q, t_cols))})), "
+                    f"IF({_SRC}, NULL, struct({version}))) AS _t"
+                )
+            take_src = f"_r.{_SRC}"
+            live_t = f"(_t IS NOT NULL AND NOT _t.{S.META_DELETED})"
+            if not pre["insert_missing"]:
+                # E3 Updater: only a LIVE row is a match — a tombstone is not
+                keep = "_t IS NOT NULL"
+                take_src = f"({take_src} AND {live_t})"
+            upsert = f"{take_src} AND NOT _r.{S.META_DELETED}"
+
+            def applied_val(c: str) -> str:
+                """The value an applied UPDATE of a live row writes for c —
+                change counts/rows reflect what lands in the table, not the
+                raw event (update_only_nulls only fills stored NULLs;
+                protected columns are never written)."""
+                if c in protected:
+                    return f"_t.{q(c)}"
+                if pre["update_only_nulls"]:
+                    return f"coalesce(_t.{q(c)}, _r.{q(c)})"
+                return f"_r.{q(c)}"
+
+            def field_changed(c: str) -> str:
+                return f"NOT ({applied_val(c)} <=> _t.{q(c)})"
+
+            if collect_metrics:
+                observed.update({
+                    "ins": f"count_if({upsert} AND NOT {live_t})",
+                    "upd": f"count_if({upsert} AND {live_t})",
+                    "del": f"count_if({take_src} AND {live_t} AND _r.{S.META_DELETED})",
+                    **{
+                        f"chg_{c}": f"count_if({upsert} AND {live_t} AND {field_changed(c)})"
+                        for c in listen
+                    },
+                })
+
+        def pick(c: str) -> str:
+            if not need_pre:
+                return f"_r.{q(c)} AS {q(c)}"
+            if audit and c == S.AUDIT_CREATED:
+                # fixed at first materialization (it survives a
+                # tombstone); updated_at advances on every change
+                return f"CASE WHEN _t IS NOT NULL THEN _t.{c} ELSE _r.{c} END AS {c}"
+            # an insert, or a re-insert over a tombstone, writes the
+            # whole event: only a LIVE stored row protects or keeps its
+            # values
+            engine = (*S.AUDIT_COLS, *S.META_COLS) if audit else S.META_COLS
+            upd = "" if c in engine else f"WHEN {take_src} AND {live_t} THEN {applied_val(c)} "
+            return f"CASE {upd}WHEN {take_src} THEN _r.{q(c)} ELSE _t.{q(c)} END AS {q(c)}"
+
+        reduced = (
             rows.repartition(n_parts, _BUCKET)
             .groupBy(_BUCKET, *self.key_cols)
             .agg(*map(F.expr, aggs))
-            .observe(obs, *map(F.expr, observed))
-            .selectExpr(
-                *[q(c) if c in self.key_cols else f"_r.{q(c)} AS {q(c)}" for c in cols], _BUCKET
-            )
         )
-        w = out.write.mode("overwrite")
+        if keep:
+            reduced = reduced.filter(keep)
+        if changes:
+            reduced = reduced.persist()  # the change rows are a second action over it
+        obs = Observation()
+        w = (
+            reduced.observe(obs, *[F.expr(f"{e} AS {q(n)}") for n, e in observed.items()])
+            .selectExpr(*[q(c) if c in self.key_cols else pick(c) for c in cols], _BUCKET)
+            .write.mode("overwrite")
+        )
         (w if shared else w.partitionBy(_BUCKET)).parquet(out_path)
+        if changes:
+            # full E6 (chomper/contrib/sql/exporters.py:304-333): one
+            # change row per (key, listened field) whose value an applied
+            # UPDATE of a live row changed — the audit feed downstream CDC
+            # consumers tail.  Overwrite-per-batch = replay-idempotent.
+            chg = ", ".join(
+                f"named_struct('field', {sql_str(c)}, "
+                f"'old_value', CAST(_t.{q(c)} AS STRING), "
+                f"'new_value', CAST({applied_val(c)} AS STRING), "
+                f"'_chg', {field_changed(c)})"
+                for c in listen
+            )
+            reduced.filter(f"{upsert} AND {live_t}").selectExpr(
+                *map(q, self.key_cols), f"inline(filter(array({chg}), x -> x._chg))",
+            ).selectExpr(
+                *map(q, self.key_cols), "field", "old_value", "new_value",
+                f"CAST({pre['batch_id']} AS BIGINT) AS batch_id",
+            ).write.mode("overwrite").parquet(changes)
+            reduced.unpersist()
         row = _obs_row(obs)  # populated by the write job
         return sorted(map(int, row.get("bks") or [])), row
 
@@ -1545,7 +1442,7 @@ class SnapshotMergeSink:
         re-folds — never a silent clobber in either direction."""
         return self._retry_conflicts(lambda: self._compact_attempt(upgrade_schema))
 
-    def _compact_attempt(self, upgrade_schema: bool = False) -> dict:
+    def _compact_attempt(self, upgrade_schema: bool) -> dict:
         """Fold EVERY delta chain into fresh per-bucket bases, now —
         the maintenance twin of a MOR apply's threshold fold, through
         the same ``_fold_write`` plan over stored rows only (Iceberg's
@@ -1584,6 +1481,7 @@ class SnapshotMergeSink:
             self._stored_rows(manifest, to_compact, state_schema),
             os.path.join(self.root, rel),
             min(self.n_buckets, len(to_compact)),
+            shared=False, collect_metrics=False, pre=None,
         )
         buckets = dict(manifest["buckets"])
         _swap_in_bases(buckets, dict(deltas), to_compact, written, rel)
@@ -1792,7 +1690,7 @@ class SnapshotMergeSink:
         """Commit-conflict-retrying wrapper (see ``apply_batch``)."""
         return self._retry_conflicts(lambda: self._truncate_attempt(batch_id))
 
-    def _truncate_attempt(self, batch_id: int | None = None) -> None:
+    def _truncate_attempt(self, batch_id: int | None) -> None:
         """TRUNCATE (E4 PostgresTruncator, chomper/contrib/postgres.py:262-292;
         E10 sql Truncator, chomper/contrib/sql/exporters.py:325-333):
         atomically flip to an empty snapshot — the full-refresh precursor
@@ -1833,33 +1731,4 @@ class SnapshotMergeSink:
             },
             parent=manifest,
             force_full=True,  # the reset must not be expressed as a delta
-        )
-
-
-def read_table(spark: SparkSession, root: str) -> DataFrame | None:
-    """Read the live rows of a SnapshotMergeSink table."""
-    return SnapshotMergeSink(spark, root).read()
-
-
-class IcebergMergeSink:
-    """MERGE INTO via a real lakehouse catalog (Iceberg/Delta).
-
-    The sandbox image carries no Iceberg/Delta jars, so this is the
-    interface documentation + SQL builder; ``SnapshotMergeSink`` is the
-    executable engine with identical semantics.  On a cluster with
-    Iceberg on the classpath, apply_batch would run `build_merge_sql`.
-    """
-
-    @staticmethod
-    def build_merge_sql(target: str, source_view: str, key_cols: list[str], data_cols: list[str]) -> str:
-        on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-        newer = "(s.op_ts > t._op_ts OR (s.op_ts = t._op_ts AND s.batch_seq > t._batch_seq))"
-        sets = ", ".join(f"t.{c} = s.{c}" for c in data_cols)
-        cols = ", ".join(key_cols + data_cols)
-        vals = ", ".join(f"s.{c}" for c in key_cols + data_cols)
-        return (
-            f"MERGE INTO {target} t USING {source_view} s ON {on} "
-            f"WHEN MATCHED AND s.op = 'D' AND {newer} THEN DELETE "
-            f"WHEN MATCHED AND {newer} THEN UPDATE SET {sets} "
-            f"WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT ({cols}) VALUES ({vals})"
         )

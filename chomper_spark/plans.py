@@ -52,10 +52,6 @@ class Importer:
         self.pipeline = list(pipeline)
         self.sink = sink
 
-    def dataframe(self, spark: SparkSession) -> DataFrame:
-        """The assembled lazy plan (feeder → transforms), no action."""
-        return tx.pipe(self.feeder(spark), *self.pipeline)
-
     def run(self, spark: SparkSession, batch_id: int = 0, **apply_kwargs) -> RunResult:
         """One batch pass: count-in, transform, apply to the sink.
 

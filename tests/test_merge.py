@@ -11,7 +11,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from chomper_spark.operators.merge import IcebergMergeSink, SnapshotMergeSink
+from chomper_spark.operators.merge import SnapshotMergeSink
 from tests.helpers import (
     assert_state_equals_oracle, committed_batches, ev, feed_df, jobs_and_result,
 )
@@ -238,17 +238,6 @@ def test_expire_snapshots_keeps_live_state(spark, tmp_table):
     # and the sink still applies new batches afterwards
     sink.apply_batch(feed_df(spark, [ev("U", "c1", 0, 99, text="post-gc")]), 99)
     assert {r["text"] for r in sink.read().filter("conv_id = 'c1'").collect()} == {"post-gc"}
-
-
-def test_iceberg_merge_sql_builder():
-    sql = IcebergMergeSink.build_merge_sql(
-        "lake.transcripts", "batch_view", ["conv_id", "turn_idx"], ["role", "text"]
-    )
-    assert "MERGE INTO lake.transcripts t USING batch_view s" in sql
-    assert "t.conv_id = s.conv_id AND t.turn_idx = s.turn_idx" in sql
-    assert "WHEN MATCHED AND s.op = 'D'" in sql and "THEN DELETE" in sql
-    assert "WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT" in sql
-    assert "t.role = s.role, t.text = s.text" in sql
 
 
 def test_read_plan_is_single_scan(spark, tmp_table):

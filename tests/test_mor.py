@@ -604,3 +604,81 @@ def test_expire_frees_unreferenced_bucket_dirs_in_live_snapshots(spark, tmp_path
     assert dead_bucket_dirs() == set()
     assert snapshot_rows() == rows
     assert_state_equals_oracle(sink.read(), evs)
+
+
+# -- a COW apply is the fold over the buckets it touches -----------------
+
+
+def test_cow_apply_over_delta_chains_is_one_write_with_one_exchange(spark, tmp_path):
+    # a MOR table with a delta chain on every bucket, reopened as COW:
+    # the chains' rows join the fold raw, with no latest-wins pass of
+    # their own, so a protected apply writes through one plan with one
+    # Exchange (as on a plain COW table) and retires every chain
+    sink = _mor(spark, tmp_path / "t", mor_compact_threshold=100)
+    by_b = _keys_by_bucket(spark, sink)
+    evs = []
+    for b in range(3):
+        evs += _batch([c for k in range(4) for c in by_b[k][2 * b:2 * b + 2]], 100 * b, "v", op="I")
+        sink.apply_batch(feed_df(spark, evs[-8:]), b)
+    assert {k: len(v) for k, v in sink.current_manifest()["deltas"].items()} == {
+        str(k): 3 for k in range(4)
+    }
+    cow = SnapshotMergeSink(spark, str(tmp_path / "t"), n_buckets=4, write_mode="cow")
+    upd = _batch([c for k in range(4) for c in by_b[k][:3]], 400, "new") + [ev("I", "fresh", 0, 500)]
+    evs += upd
+    plans, m = write_plans(
+        lambda: cow.apply_batch(feed_df(spark, upd), 3, protected=("text",), collect_metrics=True)
+    )
+    assert len(plans) == 1
+    assert plans[0].count("Exchange") == 1, plans[0]
+    assert "Join" not in plans[0], plans[0]
+    assert cow.current_manifest()["deltas"] == {}
+    assert (m.inserted, m.updated, m.deleted) == (1, 12, 0)
+    # the history before the protected batch inserts distinct keys only,
+    # so the oracle may apply ``protected`` to all of it
+    assert_state_equals_oracle(cow.read(), evs, protected=("text",))
+
+
+def _cow_over_chain(spark, path, base, delta):
+    """(A COW sink, the events it holds) over one bucket: a base built
+    from event ``base`` and filler keys, then a one-delta chain holding
+    event ``delta``.  The base file is the larger, and Spark lists a
+    scan's files largest first, so the older stored row reaches the
+    reduce first."""
+    fill = [ev("I", f"f{i}", 0, 100 + i) for i in range(32)]
+    sink = SnapshotMergeSink(
+        spark, str(path), n_buckets=1, write_mode="mor", mor_compact_threshold=100
+    )
+    sink.apply_batch(feed_df(spark, [base, *fill]), 0)
+    sink.compact()
+    sink.apply_batch(feed_df(spark, [delta]), 1)
+    man = sink.current_manifest()
+    assert len(man["buckets"]) == 1 and len(man["deltas"]["0"]) == 1
+    return SnapshotMergeSink(spark, str(path), write_mode="cow"), [base, *fill, delta]
+
+
+def test_cow_pre_image_is_the_newest_stored_row_of_a_chain(spark, tmp_path):
+    # stored rows reach the COW fold raw, base and chain: the pre-image
+    # and the live flag are the NEWEST stored row's, not any stored row's
+    # live base → tombstone delta: a re-insert is an insert
+    cow, evs = _cow_over_chain(
+        spark, tmp_path / "a", ev("I", "c1", 0, 1, text="orig"), ev("D", "c1", 0, 2)
+    )
+    evs.append(ev("I", "c1", 0, 3, text="again"))
+    m = cow.apply_batch(feed_df(spark, evs[-1:]), 2, collect_metrics=True)
+    assert (m.inserted, m.updated, m.deleted) == (1, 0, 0)
+    assert_state_equals_oracle(cow.read(), evs)
+
+    # tool NULL in the base → "x" in the delta: update_only_nulls keeps
+    # "x".  The delta repeats the base's other values, so a plain and an
+    # update_only_nulls apply of it agree and the oracle may use the mode
+    # throughout
+    base = ev("I", "c1", 0, 1, text="t")
+    cow, evs = _cow_over_chain(
+        spark, tmp_path / "b", base, {**ev("U", "c1", 0, 2, text="t", tool="x"), "ts": base["ts"]}
+    )
+    evs.append(ev("U", "c1", 0, 3, text="t2", tool="y"))
+    m = cow.apply_batch(feed_df(spark, evs[-1:]), 2, update_only_nulls=True, collect_metrics=True)
+    assert (m.inserted, m.updated) == (0, 1)
+    assert cow.read_keys([("c1", 0)]).first()["tool"] == "x"
+    assert_state_equals_oracle(cow.read(), evs, update_only_nulls=True)
