@@ -240,9 +240,7 @@ def _q_emb_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_id=0,
         collect_metrics=False,
     )
-    batch_bands = sim._melt_bands(
-        new_emb, sim.NEARDUP_BANDS, sim.LSH_ROWS, sim.DIM
-    ).persist()
+    batch_bands = sim.embedding_bands(new_emb).persist()
     index = sink.read_prune_for(
         batch_bands.select("band_idx", "bucket")
     ).select("band_idx", "bucket", "vec_id")

@@ -28,49 +28,50 @@ convention).  No Python UDFs anywhere — all codegen'd Column exprs.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, Window, functions as F
 
+from chomper_spark.functions.bands import (
+    band_pairs,
+    batch_wins,
+    bucket_stats,
+    cap_per_bucket,
+    incremental_candidates,
+    incremental_candidates_sql,
+    index_events,
+)
 from chomper_spark.functions.text import hex60_duck, hex60_spark, stable6, stable6_sql
 
 SHINGLE_N = 3
 MINHASH_K = 12
 LSH_BANDS = 4
 LSH_ROWS = 3  # K = BANDS * ROWS
+BAND_COLS = ["band_idx", "band_val"]  # MinHash band melt / index bucket key
 SIMHASH_BITS = 60  # hex60(md5) yields 60 bits; 32-bit signatures saturate
 #                    corpus-scale chunk buckets (see simhash_pairs)
 SIMHASH_CHUNKS = 4  # 15-bit chunks → lossless for hamming <= 3
 SIMHASH_CHUNK_BITS = 15  # 2^15 = 32768 values per chunk (~128x the 8-bit
 #                          granularity the 32-bit design had)
+CHUNK_COLS = ["chunk_idx", "chunk_val"]  # SimHash chunk melt bucket key
 HAMMING_MAX = 3
-
-def cap_per_bucket(
-    df: DataFrame, part_cols: list[str], order_col: str, cap: int
-) -> DataFrame:
-    """THE deterministic bucket-cap convention, shared by every capped
-    candidate generator (SimHash chunks, doc/embedding LSH bands, the
-    incremental band indexes): keep the ``cap`` lowest ``order_col``
-    values per ``part_cols`` bucket.  One definition so the Spark side
-    and every DuckDB oracle (row_number() OVER (PARTITION BY …
-    ORDER BY id) <= cap) can never drift apart."""
-    w = Window.partitionBy(*part_cols).orderBy(order_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= cap)
-        .drop("_rn")
-    )
 
 
 # ---------------------------------------------------------------- shingling
 
 
-def shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
-    """Distinct n-token shingles per doc (codegen'd array exprs, one
-    explode; DISTINCT shuffles on (doc_id, shingle))."""
-    sh = F.expr(
+def _shingle_array(n: int):
+    """Each doc's n-token shingles as one codegen'd array expression."""
+    return F.expr(
         f"transform(sequence(1, greatest(size(split(text, ' ')) - {n - 1}, 1)), "
         f"i -> array_join(slice(split(text, ' '), i, {n}), ' '))"
     )
-    return docs.select("doc_id", F.explode(sh).alias("shingle")).distinct()
+
+
+def shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+    """Distinct n-token shingles per doc (one explode; DISTINCT
+    shuffles on (doc_id, shingle))."""
+    return docs.select("doc_id", F.explode(_shingle_array(n)).alias("shingle")).distinct()
 
 
 def _shingles_sql(n: int = SHINGLE_N) -> str:
@@ -81,6 +82,22 @@ def _shingles_sql(n: int = SHINGLE_N) -> str:
         f"i -> array_to_string((string_split(text, ' '))[i:i+{n - 1}], ' '))) AS shingle "
         "FROM documents)"
     )
+
+
+# The exact shingle-Jaccard verify, shared by every shingle oracle: the
+# ``sz`` (set size) and ``common`` (shared shingles) CTEs over a
+# ``cand`` CTE of (doc_a, doc_b) pairs and the ``su`` shingle CTE; the
+# final SELECT reads the 6-decimal ``_JACCARD_SQL`` ``_JACCARD_FROM`` them.
+_JACCARD_CTES = """sz AS (SELECT doc_id, count(*) AS n_sh FROM su GROUP BY doc_id),
+common AS (
+  SELECT c.doc_a, c.doc_b, count(*) AS common
+  FROM cand c
+  JOIN su a ON a.doc_id = c.doc_a
+  JOIN su b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
+  GROUP BY 1, 2
+)"""
+_JACCARD_SQL = stable6_sql("common::DOUBLE / (x.n_sh + y.n_sh - common)::DOUBLE")
+_JACCARD_FROM = "FROM common c JOIN sz x ON c.doc_a = x.doc_id JOIN sz y ON c.doc_b = y.doc_id"
 
 
 # -------------------------------------------------------------- exact dedup
@@ -231,18 +248,10 @@ cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM rare a JOIN rare b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
 ),
-sz AS (SELECT doc_id, count(*) AS n_sh FROM su GROUP BY doc_id),
-common AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS common
-  FROM cand c
-  JOIN su a ON a.doc_id = c.doc_a
-  JOIN su b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY 1, 2
-)
-SELECT c.doc_a, c.doc_b,
-       floor((common::DOUBLE / (x.n_sh + y.n_sh - common)::DOUBLE) * 1000000.0) / 1000000.0 AS jaccard
-FROM common c JOIN sz x ON c.doc_a = x.doc_id JOIN sz y ON c.doc_b = y.doc_id
-WHERE floor((common::DOUBLE / (x.n_sh + y.n_sh - common)::DOUBLE) * 1000000.0) / 1000000.0 >= {threshold}
+{_JACCARD_CTES}
+SELECT c.doc_a, c.doc_b, {_JACCARD_SQL} AS jaccard
+{_JACCARD_FROM}
+WHERE {_JACCARD_SQL} >= {threshold}
 """
 
 
@@ -290,12 +299,8 @@ def shingle_sets(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     signatures become projections and pair verification become an
     array intersection (round 6, guide §2.3: shuffle sets once instead
     of re-exploding per consumer)."""
-    sh = F.expr(
-        f"transform(sequence(1, greatest(size(split(text, ' ')) - {n - 1}, 1)), "
-        f"i -> array_join(slice(split(text, ' '), i, {n}), ' '))"
-    )
     return (
-        docs.select("doc_id", F.explode(sh).alias("shingle"))
+        docs.select("doc_id", F.explode(_shingle_array(n)).alias("shingle"))
         .groupBy("doc_id")
         .agg(F.collect_set("shingle").alias("shingles"))
     )
@@ -359,48 +364,39 @@ def minhash_lsh_pairs(
     times (signature build, size join ×2, shared-shingle count join)."""
     sets = shingle_sets(docs)
     melted = _band_rows(sets.select("doc_id", *_signature_cols(k)), bands, rows)
-    cand = (
-        melted.alias("a")
-        .join(melted.alias("b"), ["band_idx", "band_val"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = band_pairs(
+        melted, melted, BAND_COLS, "doc_id", operator.lt, ("doc_a", "doc_b")
+    ).distinct()
     return _pair_jaccard_sets(cand, sets)
 
 
-def minhash_lsh_sql(
-    k: int = MINHASH_K, bands: int = LSH_BANDS, rows: int = LSH_ROWS
-) -> str:
-    mins = ", ".join(
-        f"min(md5(concat('{i}|', shingle))) AS h{i}" for i in range(k)
-    )
+def _minhash_bands_sql(k: int, bands: int, rows: int) -> str:
+    """DuckDB twin of ``minhash_bands`` over the ``su`` shingle CTE: the
+    ``sig`` (groupBy-min signature) and ``bands`` (UNION ALL melt) CTEs."""
+    mins = ", ".join(f"min(md5(concat('{i}|', shingle))) AS h{i}" for i in range(k))
     band_selects = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band_idx, "
         f"md5(concat_ws('|', {', '.join(f'h{b * rows + r}' for r in range(rows))})) AS band_val "
         "FROM sig"
         for b in range(bands)
     )
+    return f"sig AS (SELECT doc_id, {mins} FROM su GROUP BY doc_id),\nbands AS ({band_selects})"
+
+
+def minhash_lsh_sql(
+    k: int = MINHASH_K, bands: int = LSH_BANDS, rows: int = LSH_ROWS
+) -> str:
     return f"""
 WITH su AS ({_shingles_sql()}),
-sig AS (SELECT doc_id, {mins} FROM su GROUP BY doc_id),
-bands AS ({band_selects}),
+{_minhash_bands_sql(k, bands, rows)},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b
     ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
 ),
-sz AS (SELECT doc_id, count(*) AS n_sh FROM su GROUP BY doc_id),
-common AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS common
-  FROM cand c
-  JOIN su a ON a.doc_id = c.doc_a
-  JOIN su b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY 1, 2
-)
-SELECT c.doc_a, c.doc_b,
-       floor((common::DOUBLE / (x.n_sh + y.n_sh - common)::DOUBLE) * 1000000.0) / 1000000.0 AS jaccard
-FROM common c JOIN sz x ON c.doc_a = x.doc_id JOIN sz y ON c.doc_b = y.doc_id
+{_JACCARD_CTES}
+SELECT c.doc_a, c.doc_b, {_JACCARD_SQL} AS jaccard
+{_JACCARD_FROM}
 """
 
 
@@ -500,27 +496,13 @@ def band_index_events(
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
 ) -> DataFrame:
-    """One insert event per (band_idx, band_val, doc_id) of the batch,
-    shaped for a SnapshotMergeSink keyed on those three columns and
-    BUCKETED on (band_idx, band_val) — the persistent MinHash band
-    index.  Maintaining the index through the sink gives band inserts
-    the engine's exactly-once ledger (a replayed batch re-emits the
-    same rows and is skipped), and the band-prefix bucketing means an
-    arriving batch probes only the buckets its own band hashes land in
-    (``read_prune_for`` on the two band columns) — candidate
-    generation is O(batch), never O(corpus).  The incremental-near-dup
-    twin of ``hash_index_events``; mirrors the reference's
-    upsert-by-identifier loop (chomper/contrib/postgres.py:295-393)
-    applied to signatures instead of rows."""
-    return minhash_bands(new_docs, k, bands, rows).select(
-        F.lit("I").alias("op"),
-        F.to_timestamp(F.lit("2026-01-01")).alias("op_ts"),
-        F.lit(batch_seq).cast("long").alias("batch_seq"),
-        "band_idx",
-        "band_val",
-        "doc_id",
-        F.lit(batch_seq).cast("long").alias("added_batch"),
-    )
+    """Insert events for the persistent MinHash band index, a
+    SnapshotMergeSink keyed (band_idx, band_val, doc_id) and bucketed on
+    the band prefix (``bands.index_events``): an arriving batch probes
+    only the buckets its own bands land in (``read_prune_for``), so
+    candidate generation is O(batch), never O(corpus).  The near-dup
+    twin of ``hash_index_events``."""
+    return index_events(minhash_bands(new_docs, k, bands, rows), batch_seq, BAND_COLS, "doc_id")
 
 
 def incremental_neardup(
@@ -558,66 +540,29 @@ def incremental_neardup(
 
     ``batch_bands``: pass a PERSISTED ``minhash_bands(new_docs)``
     frame when the caller already computed it (it must — the index
-    probe needs it) — the band frame feeds three subtrees (index
-    probe, index join, intra-batch self-join), and without caching the
-    batch is re-shingled + re-minhashed per subtree.  The frame is
-    O(batch × bands) tiny rows, so caching it is the right trade at
-    every scale (unlike the corpus-sized shingle frame of
-    ``ngram_jaccard_pairs`` — see BASELINE.md round 5).
+    probe needs it): it feeds the index probe and both candidate
+    joins, and uncached the batch is re-shingled per subtree.  It is
+    O(batch × bands) tiny rows, so caching it pays at every scale.
 
-    ``index_bucket_cap``: a mass-duplicate corpus degenerates a band
-    bucket (10^5 copies share every band), and an UNCAPPED index join
-    would emit O(batch × occupancy) candidates per arriving dup.  The
-    join therefore considers only the ``index_bucket_cap`` LOWEST
-    doc_ids per (band_idx, band_val) — the right subset for dedup,
-    since canonical identity is min-id, so a true near-dup still
-    matches the bucket's canonical members; the cap only prunes
-    redundant links to other (already-linked) duplicates.  Same
-    deterministic convention as every other cap in this module
-    (mirrored in the DuckDB oracle; saturation observable via
-    ``lineage.dedup_drop_lineage`` over ``index_bucket_stats``).  The
-    cap window runs over the PRUNED index read — O(probed buckets),
-    not the corpus.
+    ``index_bucket_cap``: the index join considers only the lowest
+    doc_ids per (band_idx, band_val) — see
+    ``bands.incremental_candidates``; saturation is observable via
+    ``bands.bucket_stats`` of the index rows.
 
     ``cache_registry``: the function persists two candidate-bounded
-    frames (see below); a looping caller (StreamingNearDup) passes a
-    list to collect them and unpersists after consuming the result, so
-    a long-running stream never accumulates cache entries."""
+    frames (candidates first); a looping caller (StreamingNearDup)
+    passes a list to collect them and unpersists after consuming the
+    result, so a long-running stream never accumulates cache entries."""
     if batch_bands is None:
         batch_bands = minhash_bands(new_docs, k, bands, rows)
-    capped_index = cap_per_bucket(
-        index, ["band_idx", "band_val"], "doc_id", index_bucket_cap
+    cand = incremental_candidates(
+        index, batch_bands, BAND_COLS, "doc_id", index_bucket_cap,
+        ("doc_a", "doc_b"), cache_registry,
     )
-    cand_corpus = (
-        batch_bands.alias("n")
-        .join(capped_index.alias("i"), ["band_idx", "band_val"])
-        .filter(F.col("n.doc_id") != F.col("i.doc_id"))
-        .select(F.col("n.doc_id").alias("doc_a"), F.col("i.doc_id").alias("doc_b"))
-    )
-    cand_batch = (
-        batch_bands.alias("a")
-        .join(batch_bands.alias("b"), ["band_idx", "band_val"])
-        .filter(F.col("a.doc_id") > F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-    # the candidate pair list is referenced by every verify subtree
-    # (id projection ×2, common-shingle join, size joins) — without
-    # caching, each reference re-runs the band joins INCLUDING the
-    # index read, blowing the plan to ~180 exchanges.  Both cached
-    # frames are candidate-bounded (caps above), i.e. tiny at any
-    # corpus size.
-    cand = cand_corpus.unionByName(cand_batch).distinct().persist()
-    if cache_registry is not None:
-        cache_registry.append(cand)
     # verify on candidates only: shingle just the docs that appear in a
-    # candidate pair (left_semi prune), never the whole corpus.  For a
-    # doc_id present on BOTH sides (a re-crawl), the BATCH text wins —
-    # classification verifies what just arrived, not the stale crawl.
-    texts = new_docs.select("doc_id", "text").unionByName(
-        corpus_docs.select("doc_id", "text").join(
-            new_docs.select("doc_id"), "doc_id", "left_anti"
-        )
-    )
+    # candidate pair (left_semi prune), never the whole corpus; a
+    # re-crawled doc verifies with its batch text
+    texts = batch_wins(new_docs, corpus_docs, "doc_id", "text")
     ids = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
@@ -641,22 +586,6 @@ def incremental_neardup(
     )
 
 
-def index_bucket_stats(
-    index: DataFrame, cap: int = INDEX_BUCKET_CAP
-) -> DataFrame:
-    """Per-(band_idx, band_val) occupancy of the persistent band index
-    + what ``index_bucket_cap`` excludes from candidate generation —
-    feed through ``lineage.dedup_drop_lineage`` per classification run
-    so cap saturation on a mass-duplicate corpus is a production
-    signal."""
-    return index.groupBy("band_idx", "band_val").agg(
-        F.count(F.lit(1)).alias("members"),
-        F.greatest(F.count(F.lit(1)) - F.lit(cap), F.lit(0)).alias(
-            "members_dropped"
-        ),
-    )
-
-
 def incremental_neardup_sql(
     threshold: float = 0.8,
     k: int = MINHASH_K,
@@ -667,45 +596,17 @@ def incremental_neardup_sql(
     """DuckDB twin: index = band rows of even doc_ids (the ingested
     corpus), new batch = odd doc_ids — same split convention as
     ``incremental_exact_dedup_sql``."""
-    mins = ", ".join(f"min(md5(concat('{i}|', shingle))) AS h{i}" for i in range(k))
-    band_selects = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, "
-        f"md5(concat_ws('|', {', '.join(f'h{b * rows + r}' for r in range(rows))})) AS band_val "
-        "FROM sig"
-        for b in range(bands)
+    cand = incremental_candidates_sql(
+        "bands", BAND_COLS, "doc_id", index_bucket_cap, ("doc_a", "doc_b")
     )
-    jac = "floor((common::DOUBLE / (x.n_sh + y.n_sh - common)::DOUBLE) * 1000000.0) / 1000000.0"
     return f"""
 WITH su AS ({_shingles_sql()}),
-sig AS (SELECT doc_id, {mins} FROM su GROUP BY doc_id),
-bands AS ({band_selects}),
-idx AS (
-  SELECT doc_id, band_idx, band_val FROM (
-    SELECT *, row_number() OVER (PARTITION BY band_idx, band_val ORDER BY doc_id) AS _rn
-    FROM bands WHERE doc_id % 2 = 0)
-  WHERE _rn <= {index_bucket_cap}
-),
-nb AS (SELECT * FROM bands WHERE doc_id % 2 = 1),
-cand AS (
-  SELECT DISTINCT n.doc_id AS doc_a, i.doc_id AS doc_b
-  FROM nb n JOIN idx i
-    ON n.band_idx = i.band_idx AND n.band_val = i.band_val AND n.doc_id <> i.doc_id
-  UNION
-  SELECT DISTINCT a.doc_id, b.doc_id
-  FROM nb a JOIN nb b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id > b.doc_id
-),
-sz AS (SELECT doc_id, count(*) AS n_sh FROM su GROUP BY doc_id),
-common AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS common
-  FROM cand c
-  JOIN su a ON a.doc_id = c.doc_a
-  JOIN su b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY 1, 2
-)
-SELECT c.doc_a AS doc_id, c.doc_b AS dup_of, {jac} AS jaccard
-FROM common c JOIN sz x ON c.doc_a = x.doc_id JOIN sz y ON c.doc_b = y.doc_id
-WHERE {jac} >= {threshold}
+{_minhash_bands_sql(k, bands, rows)},
+{cand},
+{_JACCARD_CTES}
+SELECT c.doc_a AS doc_id, c.doc_b AS dup_of, {_JACCARD_SQL} AS jaccard
+{_JACCARD_FROM}
+WHERE {_JACCARD_SQL} >= {threshold}
 """
 
 
@@ -1033,27 +934,19 @@ def simhash_pairs(
     """SimHash near-dup pairs: candidates share one of 4 15-bit chunks
     (lossless for hamming ≤ 3 by pigeonhole), verified via bit_count.
 
-    Chunk width is the corpus-scale recall dial: the earlier 32-bit/
-    8-bit-chunk design had only 256 values per chunk, so at corpus
-    scale EVERY bucket blows past any member cap and recall collapses
-    to the lowest ``chunk_cap`` doc_ids per bucket.  60-bit signatures
-    with 15-bit chunks give 32768 values per chunk (~n/32768 expected
-    members) while staying lossless for hamming ≤ 3.  Buckets can
-    still degenerate on mass-duplicate corpora — there the cap bounds
-    the O(n²/2^15) self-join:
-    ``chunk_cap`` bounds every bucket to its lowest ``chunk_cap``
-    doc_ids (deterministic, mirrored exactly in the DuckDB oracle), the
-    same BUCKET_CAP pattern as the embedding LSH (similarity.py); what
-    the cap drops is observable via ``simhash_candidate_stats`` — no
-    silent truncation.  The capped melt carries only (doc_id, two small
-    ints): the window sort that enforces the cap buffers ~16 bytes/row,
-    so even a degenerate all-equal corpus stays task-sized."""
-    capped = cap_per_bucket(
-        _simhash_chunks(docs), ["chunk_idx", "chunk_val"], "doc_id", chunk_cap
-    )
+    Chunk width is the corpus-scale recall dial: 8-bit chunks (256
+    values) put ~n/256 docs in EVERY bucket, so any member cap collapses
+    recall; 60-bit signatures with 15-bit chunks give 32768 values per
+    chunk while staying lossless for hamming ≤ 3.  On mass-duplicate
+    corpora ``chunk_cap`` still bounds each bucket's self-join to its
+    lowest doc_ids (``bands.cap_per_bucket``); what it drops is
+    observable via ``simhash_candidate_stats``.  The capped melt
+    carries only (doc_id, simhash, two small ints), so the window sort
+    that enforces the cap stays task-sized even on an all-equal corpus."""
+    capped = cap_per_bucket(_simhash_chunks(docs), CHUNK_COLS, "doc_id", chunk_cap)
     return (
         capped.alias("a")
-        .join(capped.alias("b"), ["chunk_idx", "chunk_val"])
+        .join(capped.alias("b"), CHUNK_COLS)
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
             F.col("a.doc_id").alias("doc_a"),
@@ -1068,15 +961,9 @@ def simhash_pairs(
 def simhash_candidate_stats(
     docs: DataFrame, chunk_cap: int = SIMHASH_CHUNK_CAP
 ) -> DataFrame:
-    """Per-(chunk_idx, chunk_val) occupancy + what the cap drops — the
-    "no silent caps" counter (members_dropped docs emit no candidates
-    from that chunk).  Same melt the candidate generation uses."""
-    return _simhash_chunks(docs).groupBy("chunk_idx", "chunk_val").agg(
-        F.count(F.lit(1)).alias("members"),
-        F.greatest(F.count(F.lit(1)) - F.lit(chunk_cap), F.lit(0)).alias(
-            "members_dropped"
-        ),
-    )
+    """Per-(chunk_idx, chunk_val) occupancy + what the cap drops, over
+    the same melt ``simhash_pairs`` caps."""
+    return bucket_stats(_simhash_chunks(docs), CHUNK_COLS, chunk_cap)
 
 
 def simhash_pairs_sql(

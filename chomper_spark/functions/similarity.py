@@ -31,6 +31,7 @@ slower; see tests/test_plans.py::test_similarity_* for the guards).
 from __future__ import annotations
 
 import hashlib
+import operator
 
 import numpy as np
 import pandas as pd
@@ -38,6 +39,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from chomper_spark.functions.bands import (
+    band_pairs,
+    batch_wins,
+    bucket_stats,
+    cap_per_bucket,
+    incremental_candidates,
+    incremental_candidates_sql,
+    index_events,
+)
 from chomper_spark.functions.text import stable6, stable6_sql
 
 DIM = 64
@@ -60,6 +70,7 @@ NEARDUP_BANDS = 6  # near-dup wants higher recall at high cosine
 # (deterministic: lowest vec_ids kept) emit no candidates from that
 # band; lsh_candidate_stats() reports what was dropped.
 BUCKET_CAP = 10_000
+BAND_COLS = ["band_idx", "bucket"]  # band melt / index bucket key
 
 
 def _dot_sql(a_elem: str, b_elem: str, dim: int = DIM) -> str:
@@ -181,6 +192,20 @@ def _cosine_udf(dim: int):
     return cosine
 
 
+def _cosine_pairs(cand: DataFrame, vecs: DataFrame, a: str, b: str, dim: int) -> DataFrame:
+    """(a, b, sim): each candidate pair joined back by id to both
+    embeddings of ``vecs`` (vec_id, embedding) and verified with the
+    exact cosine — the one verify under every LSH family; the 64-float
+    payload never rides the candidate shuffle."""
+    a_emb = vecs.select(F.col("vec_id").alias(a), F.col("embedding").alias("a_emb"))
+    b_emb = vecs.select(F.col("vec_id").alias(b), F.col("embedding").alias("n_emb"))
+    return (
+        cand.join(a_emb, a)
+        .join(b_emb, b)
+        .select(a, b, _cosine_udf(dim)("a_emb", "n_emb").alias("sim"))
+    )
+
+
 def _centroid_dots(m: np.ndarray, cents: np.ndarray, dim: int) -> np.ndarray:
     """(n, C) per-centroid dot matrix, left-associated over d."""
     acc = m[:, 0:1] * cents[:, 0]
@@ -221,19 +246,19 @@ def _ivf_dots_udf(cents: np.ndarray, dim: int):
 # --------------------------------------------- banded random-hyperplane LSH
 
 
-def _planes(n_planes: int, dim: int = DIM) -> list[list[float]]:
+def _planes(n_planes: int, dim: int = DIM, salt: str = "") -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes: component (p, d) =
-    hex60(md5(f"{p}_{d}")) / 2^59 - 1  ∈ [-1, 1).  Computed in Python
-    (hashlib md5 == Spark/DuckDB md5) and embedded as double literals
-    in both engines — shortest-roundtrip repr parses identically."""
-    out = []
-    for p in range(n_planes):
-        row = []
-        for d in range(1, dim + 1):
-            h = int(hashlib.md5(f"{p}_{d}".encode()).hexdigest()[:15], 16)
-            row.append(h / 2**59 - 1.0)
-        out.append(row)
-    return out
+    hex60(md5(f"{salt}{p}_{d}")) / 2^59 - 1  ∈ [-1, 1).  Computed in
+    Python (hashlib md5 == Spark/DuckDB md5) and embedded as double
+    literals in both engines — shortest-roundtrip repr parses
+    identically."""
+    return [
+        [
+            int(hashlib.md5(f"{salt}{p}_{d}".encode()).hexdigest()[:15], 16) / 2**59 - 1.0
+            for d in range(1, dim + 1)
+        ]
+        for p in range(n_planes)
+    ]
 
 
 def _band_bucket_sql(
@@ -253,36 +278,33 @@ def _band_bucket_sql(
     return "(" + " + ".join(bits) + ")"
 
 
-def _melt_bands(emb: DataFrame, bands: int, rows: int, dim: int) -> DataFrame:
+def embedding_bands(
+    emb: DataFrame, bands: int = NEARDUP_BANDS, rows: int = LSH_ROWS, dim: int = DIM
+) -> DataFrame:
     """One (vec_id, band_idx, bucket) row per vector per band — the
-    shared melt under both candidate generation and the occupancy
-    stats, so the two can never disagree about bucket membership.
-    All band signatures come from ONE Arrow-batched projection
-    (``_band_buckets_udf``), bit-identical to the SQL oracle's
-    literal-embedded ``_band_bucket_sql``."""
+    candidate-generation key, the occupancy-stats input AND the row
+    shape of the persistent vector index (see
+    ``incremental_emb_neardup``); the embedding twin of
+    ``docdedup.minhash_bands``.  All band signatures come from ONE
+    Arrow-batched projection (``_band_buckets_udf``), bit-identical to
+    the SQL oracle's ``melted`` CTE (pinned by
+    ``test_embedding_melt_equals_duckdb_melted_cte``)."""
     b_udf = _band_buckets_udf(bands, rows, dim)
     return emb.select(
         "vec_id", F.posexplode(b_udf("embedding")).alias("band_idx", "bucket")
     )
 
 
-def _banded(
-    emb: DataFrame, bands: int, rows: int, dim: int, cap: int
-) -> DataFrame:
-    """Melt each vector into (vec_id, band_idx, bucket) rows, capped at
-    ``cap`` members per (band, bucket) — deterministic (lowest vec_ids
-    kept), mirrored exactly in the SQL oracle.  The melt carries ONLY
-    the id + two small ints: the 64-float payload never rides the
-    candidate shuffle (it is joined back by id for verification)."""
-    from chomper_spark.functions.docdedup import cap_per_bucket
-
-    return cap_per_bucket(
-        _melt_bands(emb, bands, rows, dim), ["band_idx", "bucket"], "vec_id", cap
-    )
+def _banded(emb: DataFrame, bands: int, rows: int, dim: int, cap: int) -> DataFrame:
+    """The band melt capped at ``cap`` lowest vec_ids per (band, bucket):
+    only the id + two small ints ride the candidate shuffle."""
+    return cap_per_bucket(embedding_bands(emb, bands, rows, dim), BAND_COLS, "vec_id", cap)
 
 
-def _banded_sql(elem: str, bands: int, rows: int, dim: int, cap: int) -> str:
-    """The DuckDB twin of ``_banded``: sig CTE + UNION ALL melt + cap."""
+def _melt_sql(elem: str, bands: int, rows: int, dim: int) -> str:
+    """DuckDB twin of ``embedding_bands``: the ``sig`` CTE (one
+    literal-embedded bucket column per band) and the UNION ALL
+    ``melted`` CTE."""
     band_cols = ", ".join(
         f"{_band_bucket_sql(elem, 'embedding', b, rows, dim)}::INT AS band{b}"
         for b in range(bands)
@@ -291,9 +313,13 @@ def _banded_sql(elem: str, bands: int, rows: int, dim: int, cap: int) -> str:
         f"SELECT vec_id, {b} AS band_idx, band{b} AS bucket FROM sig"
         for b in range(bands)
     )
+    return f"sig AS (SELECT vec_id, {band_cols} FROM embeddings),\nmelted AS ({melt})"
+
+
+def _banded_sql(elem: str, bands: int, rows: int, dim: int, cap: int) -> str:
+    """The DuckDB twin of ``_banded``: the melt CTEs + the cap."""
     return f"""
-sig AS (SELECT vec_id, {band_cols} FROM embeddings),
-melted AS ({melt}),
+{_melt_sql(elem, bands, rows, dim)},
 capped AS (
   SELECT vec_id, band_idx, bucket FROM (
     SELECT vec_id, band_idx, bucket,
@@ -304,21 +330,12 @@ capped AS (
 
 
 def lsh_candidate_stats(
-    emb: DataFrame,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-    dim: int = DIM,
+    emb: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS, dim: int = DIM,
     cap: int = BUCKET_CAP,
 ) -> DataFrame:
-    """Per-(band, bucket) occupancy + what the cap would drop — the
-    "no silent caps" counter: members_dropped vectors emit no
-    candidates from that band.  One aggregate over the SAME melt the
-    candidate generation uses."""
-    melted = _melt_bands(emb, bands, rows, dim)
-    return melted.groupBy("band_idx", "bucket").agg(
-        F.count(F.lit(1)).alias("members"),
-        F.greatest(F.count(F.lit(1)) - F.lit(cap), F.lit(0)).alias("members_dropped"),
-    )
+    """Per-(band, bucket) occupancy + what the cap drops, over the same
+    melt the candidate generation caps."""
+    return bucket_stats(embedding_bands(emb, bands, rows, dim), BAND_COLS, cap)
 
 
 def lsh_bucketed_ann(
@@ -338,23 +355,10 @@ def lsh_bucketed_ann(
     generation is bounded and never all-pairs; the embedding payload
     joins back by vec_id only for the verify step."""
     capped = _banded(emb, bands, rows, dim, cap)
-    cand = (
-        capped.alias("a")
-        .join(capped.alias("b"), ["band_idx", "bucket"])
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("vec_id"), F.col("b.vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    a_emb = emb.select(F.col("vec_id"), F.col("embedding").alias("a_emb"))
-    n_emb = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("n_emb")
-    )
-    cos = _cosine_udf(dim)
-    scored = (
-        cand.join(a_emb, "vec_id")
-        .join(n_emb, "neighbor_id")
-        .select("vec_id", "neighbor_id", cos("a_emb", "n_emb").alias("sim"))
-    )
+    cand = band_pairs(
+        capped, capped, BAND_COLS, "vec_id", operator.ne, ("vec_id", "neighbor_id")
+    ).distinct()
+    scored = _cosine_pairs(cand, emb, "vec_id", "neighbor_id", dim)
     w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -370,9 +374,7 @@ def lsh_bucketed_ann_sql(
     dim: int = DIM,
     cap: int = BUCKET_CAP,
 ) -> str:
-    cos = _cosine_sql("a_emb", "n_emb", _DK, dim).replace(
-        "a_emb", "ea.embedding"
-    ).replace("n_emb", "eb.embedding")
+    cos = _cosine_sql("ea.embedding", "eb.embedding", _DK, dim)
     return f"""
 WITH {_banded_sql(_DK, bands, rows, dim, cap)},
 cand AS (
@@ -412,26 +414,11 @@ def _centroids(n: int, dim: int = DIM) -> list[list[float]]:
     point.  The assignment/probe/verify plumbing is identical either
     way: centroids are inlined into the projection (broadcast-by-
     literal), never shuffled."""
-    out = []
-    for c in range(n):
-        row = []
-        for d in range(1, dim + 1):
-            h = int(hashlib.md5(f"ivf_{c}_{d}".encode()).hexdigest()[:15], 16)
-            row.append(h / 2**59 - 1.0)
-        out.append(row)
-    return out
+    return _planes(n, dim, salt="ivf_")
 
 
-def _cell_dots_sql(
-    elem: str,
-    col: str,
-    n_centroids: int,
-    dim: int,
-    centroids: list[list[float]] | None = None,
-) -> list[str]:
-    cents = centroids if centroids is not None else _centroids(n_centroids, dim)
-    if len(cents) != n_centroids or any(len(c) != dim for c in cents):
-        raise ValueError(f"centroids must be {n_centroids} rows of dim {dim}")
+def _cell_dots_sql(elem: str, col: str, n_centroids: int, dim: int) -> list[str]:
+    cents = _centroids(n_centroids, dim)
     e = elem.format(col=col)
     return [
         " + ".join(f"{e.format(d=d)} * {cents[c][d - 1]!r}" for d in range(1, dim + 1))
@@ -534,9 +521,7 @@ def ivf_topk_sql(
         f"FROM embeddings WHERE vec_id < {n_queries}"
         for c, d in enumerate(dots)
     )
-    cos = _cosine_sql("q_emb", "n_emb", _DK, dim).replace(
-        "q_emb", "p.embedding"
-    ).replace("n_emb", "dt.embedding")
+    cos = _cosine_sql("p.embedding", "dt.embedding", _DK, dim)
     return f"""
 WITH wm AS (SELECT vec_id, embedding, {mx} AS _mx FROM embeddings),
 dt AS (SELECT vec_id AS neighbor_id, embedding, {case}::INT AS cell FROM wm),
@@ -573,20 +558,12 @@ def embedding_neardup_pairs(
     recalled with P ≈ 0.97 (see module constants), while candidate
     volume stays O(n · B / 2^R) per bucket — never all-pairs."""
     capped = _banded(emb, bands, rows, dim, cap)
-    cand = (
-        capped.alias("a")
-        .join(capped.alias("b"), ["band_idx", "bucket"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    a_emb = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("a_emb"))
-    b_emb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("n_emb"))
-    cos = _cosine_udf(dim)
+    cand = band_pairs(
+        capped, capped, BAND_COLS, "vec_id", operator.lt, ("vec_a", "vec_b")
+    ).distinct()
     return (
-        cand.join(a_emb, "vec_a")
-        .join(b_emb, "vec_b")
-        .select("vec_a", "vec_b", stable6(cos("a_emb", "n_emb")).alias("cosine"))
+        _cosine_pairs(cand, emb, "vec_a", "vec_b", dim)
+        .select("vec_a", "vec_b", stable6(F.col("sim")).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -598,9 +575,7 @@ def embedding_neardup_sql(
     dim: int = DIM,
     cap: int = BUCKET_CAP,
 ) -> str:
-    cos = _cosine_sql("a_emb", "n_emb", _DK, dim).replace(
-        "a_emb", "ea.embedding"
-    ).replace("n_emb", "eb.embedding")
+    cos = _cosine_sql("ea.embedding", "eb.embedding", _DK, dim)
     return f"""
 WITH {_banded_sql(_DK, bands, rows, dim, cap)},
 cand AS (
@@ -628,21 +603,10 @@ def emb_band_index_events(
     rows: int = LSH_ROWS,
     dim: int = DIM,
 ) -> DataFrame:
-    """One insert event per (band_idx, bucket, vec_id) of the batch,
-    shaped for a SnapshotMergeSink keyed on those three columns and
-    BUCKETED on (band_idx, bucket) — the persistent vector-LSH index,
-    the embedding twin of ``docdedup.band_index_events``.  Index
-    maintenance inherits the exactly-once ledger; the band-prefix
-    bucketing lets an arriving batch probe only its own buckets."""
-    return _melt_bands(new_emb, bands, rows, dim).select(
-        F.lit("I").alias("op"),
-        F.to_timestamp(F.lit("2026-01-01")).alias("op_ts"),
-        F.lit(batch_seq).cast("long").alias("batch_seq"),
-        "band_idx",
-        "bucket",
-        "vec_id",
-        F.lit(batch_seq).cast("long").alias("added_batch"),
-    )
+    """Insert events for the persistent vector-LSH index, keyed
+    (band_idx, bucket, vec_id) — the embedding twin of
+    ``docdedup.band_index_events``."""
+    return index_events(embedding_bands(new_emb, bands, rows, dim), batch_seq, BAND_COLS, "vec_id")
 
 
 def incremental_emb_neardup(
@@ -659,56 +623,27 @@ def incremental_emb_neardup(
 ) -> DataFrame:
     """Classify a NEW batch of embeddings for near-duplicates against a
     persistent vector-LSH bucket index — O(batch) signatures + a
-    capped band-join against the (bucketed, prunable) index + exact
-    cosine verified on candidate ids only; never a corpus scan or
-    re-index.  The embedding twin of ``docdedup.incremental_neardup``
-    with identical scale shape and cap/canonical conventions
-    (``index_bucket_cap`` lowest vec_ids per (band_idx, bucket),
-    oracle-mirrored).
+    capped band-join against the pruned index
+    (``bands.incremental_candidates``) + exact cosine on candidate ids
+    only.  The embedding twin of ``docdedup.incremental_neardup``.
 
     Returns (vec_id, dup_of, cosine): ``vec_id`` is a batch vector,
     ``dup_of`` a corpus vector or an earlier (lower-id) batch vector;
     a re-ingested vec_id never matches itself, and its just-arrived
     embedding wins the verify."""
-    from chomper_spark.functions.docdedup import cap_per_bucket
-
     if batch_bands is None:
-        batch_bands = _melt_bands(new_emb, bands, rows, dim)
-    capped_index = cap_per_bucket(
-        index, ["band_idx", "bucket"], "vec_id", index_bucket_cap
+        batch_bands = embedding_bands(new_emb, bands, rows, dim)
+    cand = incremental_candidates(
+        index, batch_bands, BAND_COLS, "vec_id", index_bucket_cap,
+        ("vec_a", "vec_b"), cache_registry,
     )
-    cand_corpus = (
-        batch_bands.alias("n")
-        .join(capped_index.alias("i"), ["band_idx", "bucket"])
-        .filter(F.col("n.vec_id") != F.col("i.vec_id"))
-        .select(F.col("n.vec_id").alias("vec_a"), F.col("i.vec_id").alias("vec_b"))
-    )
-    cand_batch = (
-        batch_bands.alias("a")
-        .join(batch_bands.alias("b"), ["band_idx", "bucket"])
-        .filter(F.col("a.vec_id") > F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-    )
-    # candidate-bounded (caps above) → tiny at any corpus size; cached
-    # so the verify's joins never re-run the band joins + index read
-    cand = cand_corpus.unionByName(cand_batch).distinct().persist()
-    if cache_registry is not None:
-        cache_registry.append(cand)
-    vecs = new_emb.select("vec_id", "embedding").unionByName(
-        corpus_emb.select("vec_id", "embedding").join(
-            new_emb.select("vec_id"), "vec_id", "left_anti"
-        )
-    )
-    a_emb = vecs.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("a_emb"))
-    b_emb = vecs.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("n_emb"))
-    cos = _cosine_udf(dim)
+    vecs = batch_wins(new_emb, corpus_emb, "vec_id", "embedding")
     return (
-        cand.join(a_emb, "vec_a")
-        .join(b_emb, "vec_b")
+        _cosine_pairs(cand, vecs, "vec_a", "vec_b", dim)
         .select(
             F.col("vec_a").alias("vec_id"),
             F.col("vec_b").alias("dup_of"),
-            stable6(cos("a_emb", "n_emb")).alias("cosine"),
+            stable6(F.col("sim")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -724,36 +659,13 @@ def incremental_emb_neardup_sql(
     """DuckDB twin: index = band rows of even vec_ids (the ingested
     corpus, capped per bucket), new batch = odd vec_ids — the same
     split convention as ``docdedup.incremental_neardup_sql``."""
-    band_cols = ", ".join(
-        f"{_band_bucket_sql(_DK, 'embedding', b, rows, dim)}::INT AS band{b}"
-        for b in range(bands)
+    cand = incremental_candidates_sql(
+        "melted", BAND_COLS, "vec_id", index_bucket_cap, ("vec_a", "vec_b")
     )
-    melt = " UNION ALL ".join(
-        f"SELECT vec_id, {b} AS band_idx, band{b} AS bucket FROM sig"
-        for b in range(bands)
-    )
-    cos = _cosine_sql("a_emb", "n_emb", _DK, dim).replace(
-        "a_emb", "ea.embedding"
-    ).replace("n_emb", "eb.embedding")
+    cos = _cosine_sql("ea.embedding", "eb.embedding", _DK, dim)
     return f"""
-WITH sig AS (SELECT vec_id, {band_cols} FROM embeddings),
-melted AS ({melt}),
-idx AS (
-  SELECT vec_id, band_idx, bucket FROM (
-    SELECT *, row_number() OVER (PARTITION BY band_idx, bucket ORDER BY vec_id) AS _rn
-    FROM melted WHERE vec_id % 2 = 0)
-  WHERE _rn <= {index_bucket_cap}
-),
-nb AS (SELECT vec_id, band_idx, bucket FROM melted WHERE vec_id % 2 = 1),
-cand AS (
-  SELECT DISTINCT n.vec_id AS vec_a, i.vec_id AS vec_b
-  FROM nb n JOIN idx i
-    ON n.band_idx = i.band_idx AND n.bucket = i.bucket AND n.vec_id <> i.vec_id
-  UNION
-  SELECT DISTINCT a.vec_id, b.vec_id
-  FROM nb a JOIN nb b
-    ON a.band_idx = b.band_idx AND a.bucket = b.bucket AND a.vec_id > b.vec_id
-)
+WITH {_melt_sql(_DK, bands, rows, dim)},
+{cand}
 SELECT c.vec_a AS vec_id, c.vec_b AS dup_of, {stable6_sql(cos)} AS cosine
 FROM cand c
 JOIN embeddings ea ON ea.vec_id = c.vec_a

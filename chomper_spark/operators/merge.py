@@ -617,9 +617,8 @@ class SnapshotMergeSink:
     def _commit(
         self,
         new_full: dict,
-        parent: dict | None = None,
+        parent: dict | None,
         delta_doc: dict | None = None,
-        force_full: bool = False,
         touched_keys: set | None = None,
     ) -> None:
         """Commit ``new_full``: the next manifest's ledger, schema,
@@ -630,14 +629,13 @@ class SnapshotMergeSink:
         With a ``delta_doc`` and a parent, only the delta — O(touched
         buckets) — is written, and it carries ``schema_history`` only
         when the history changed; every _CHECKPOINT_EVERY commits, and
-        for every full-rewrite operation (``force_full``: truncate,
+        for every full-rewrite operation (no ``delta_doc``: truncate,
         compact), a checkpoint is written instead.  Either way the
         in-memory folded state is installed into the fold cache, so the
         next ``apply_batch`` re-reads nothing."""
         chain_len = 0 if parent is None else parent["chain_len"] + 1
         as_delta = (
-            not force_full
-            and delta_doc is not None
+            delta_doc is not None
             and parent is not None
             and chain_len <= _CHECKPOINT_EVERY
         )
@@ -1502,7 +1500,7 @@ class SnapshotMergeSink:
                 "schema_history": history,
             },
             parent=manifest,
-            force_full=True,  # maintenance rewrite → natural checkpoint
+            # maintenance rewrite (no delta_doc) → natural checkpoint;
             # checkpoint sharding: only the folded buckets' shards are
             # rewritten — a targeted compaction on a wide table stays
             # O(touched shards) in manifest bytes too
@@ -1729,6 +1727,5 @@ class SnapshotMergeSink:
                 # no live files → single-version history
                 "schema_history": [{"from_snapshot": 0, "schema": schema}],
             },
-            parent=manifest,
-            force_full=True,  # the reset must not be expressed as a delta
+            parent=manifest,  # no delta_doc: the reset is a checkpoint
         )

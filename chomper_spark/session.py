@@ -8,7 +8,17 @@ oracles).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
+
+
+def _driver_memory() -> str:
+    """Half of physical memory, at most 16g: a driver heap near the
+    host's whole memory gets the JVM killed once the Python workers
+    and the page cache want their share."""
+    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mib, 16 * 1024)}m"
 
 
 def get_spark(
@@ -38,7 +48,7 @@ def get_spark(
         # batches instead of pickled rows; pandas_udfs are unaffected
         .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", _driver_memory())
         # committer v2: task outputs commit directly (no serial driver-side
         # rename pass).  Safe here: atomicity comes from the engine's own
         # manifest flip (operators/merge.py), never from the FS committer.

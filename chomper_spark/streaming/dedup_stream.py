@@ -33,6 +33,7 @@ from pyspark.sql import SparkSession, functions as F
 from pyspark.sql import types as T
 
 from chomper_spark.functions import docdedup as dd
+from chomper_spark.functions.bands import bucket_stats
 from chomper_spark.operators.lineage import LineageTable, record_dedup_run
 from chomper_spark.operators.merge import SnapshotMergeSink, _ledger_contains
 
@@ -167,7 +168,7 @@ class StreamingNearDup:
             if self.lineage is not None:
                 record_dedup_run(
                     self.lineage,
-                    dd.index_bucket_stats(index_rows, cap=self.index_bucket_cap),
+                    bucket_stats(index_rows, dd.BAND_COLS, self.index_bucket_cap),
                     batch_id,
                     op="incremental_neardup",
                 )

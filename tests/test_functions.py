@@ -479,6 +479,73 @@ def test_minhash_signature_projection_equals_groupby_min(spark):
     assert old.alias("o").join(new.alias("n"), "doc_id").filter(cond).count() == 0
 
 
+def test_embedding_melt_equals_duckdb_melted_cte(spark):
+    # the Arrow-vectorized band melt and the oracle's literal-embedded
+    # ``melted`` CTE must agree on EVERY (vec_id, band_idx, bucket) —
+    # pair-level oracle checks only see buckets that produce verified
+    # pairs.  Varied inputs: mixed scales, sign-only vectors, exact
+    # zeros (every dot is 0.0, so every ``>= 0`` bit is set), subnormal
+    # and large magnitudes, and duplicated vectors.
+    import duckdb
+    import numpy as np
+
+    rng = np.random.default_rng(13)
+    n = 2400
+    m = rng.normal(0, 1, (n, sim.DIM)) * rng.choice([1e-3, 1.0, 1e3], (n, 1))
+    m[::97] = 0.0
+    m[1::89] = np.sign(m[1::89])
+    m[2::83] = rng.normal(0, 1, sim.DIM) * 1e-40
+    m[3::79] = m[4::79][: len(m[3::79])]
+    m = m.astype(np.float32)
+    rows = [(i, [float(x) for x in m[i]]) for i in range(n)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = sorted(
+        (r["vec_id"], r["band_idx"], r["bucket"])
+        for r in sim.embedding_bands(emb).collect()
+    )
+    con = duckdb.connect()
+    con.register("_emb", emb.toPandas())
+    con.sql("CREATE VIEW embeddings AS SELECT vec_id, embedding::FLOAT[] AS embedding FROM _emb")
+    cte = sim._banded_sql(sim._DK, sim.NEARDUP_BANDS, sim.LSH_ROWS, sim.DIM, sim.BUCKET_CAP)
+    exp = sorted(
+        tuple(int(x) for x in r)
+        for r in con.sql(f"WITH {cte} SELECT vec_id, band_idx, bucket FROM melted").fetchall()
+    )
+    assert len(got) == n * sim.NEARDUP_BANDS
+    assert got == exp
+    assert len({b for _, _, b in got}) > 200  # the buckets really vary
+
+
+def test_simhash_equals_duckdb_simhash_sql(spark):
+    # the SimHash signature pinned value by value against its DuckDB
+    # twin: varied lengths (1..80 tokens), heavy repeats (term-frequency
+    # weighting and exact-majority ties), empty tokens from doubled
+    # spaces, and non-ASCII tokens.
+    import random
+
+    import duckdb
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(400)] + ["é", "naïve", "日本", "ß", "x"]
+    rows = []
+    for i in range(2200):
+        toks = [rng.choice(vocab) for _ in range(rng.randint(1, 80))]
+        if i % 7 == 0:
+            toks = toks[:2] * rng.randint(1, 6)
+        text = " ".join(toks)
+        if i % 11 == 0:
+            text = text.replace(" ", "  ", 1)
+        rows.append((i, text))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted((r["doc_id"], r["simhash"]) for r in dd.simhash(docs).collect())
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    exp = sorted((int(a), int(b)) for a, b in con.sql(dd.simhash_sql()).fetchall())
+    assert len(got) == len(rows)
+    assert got == exp
+    assert len({s for _, s in got}) > 2000
+
+
 def test_multimodal_plumbing_fake_decode(spark):
     out = mm.multimodal_features(_docs(spark), fake_decode=True)
     rows = {r["doc_id"]: r for r in out.collect()}
@@ -741,7 +808,7 @@ def test_incremental_emb_neardup_against_engine_index(spark, tmp_path):
         ],
         "vec_id long, embedding array<float>",
     )
-    bands = sim._melt_bands(batch, sim.NEARDUP_BANDS, sim.LSH_ROWS, sim.DIM)
+    bands = sim.embedding_bands(batch)
     index = sink.read_prune_for(bands.select("band_idx", "bucket")).select(
         "band_idx", "bucket", "vec_id"
     )

@@ -980,7 +980,7 @@ def test_wide_table_checkpoint_shards_bound_commit_bytes(spark, tmp_table):
         "key_cols": sink.key_cols, "bucket_cols": sink.bucket_cols,
         "n_buckets": n_buckets,
     }
-    sink._commit(base_full, force_full=True)
+    sink._commit(base_full, None)
     full_ckpt_bytes = _manifest_bytes(tmp_table)
     assert full_ckpt_bytes > 100_000  # the full map really is wide
 

@@ -282,7 +282,7 @@ def test_manifest_fold_matches_model_under_random_commits(
             "n_buckets": 5000,
         }
         if kind == "ckpt":
-            sink._commit(new_full, parent=man, force_full=True,
+            sink._commit(new_full, parent=man,
                          touched_keys=set(delta_doc["bucket_updates"]))
         else:
             sink._commit(new_full, parent=man, delta_doc=delta_doc)
